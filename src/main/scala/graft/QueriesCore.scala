@@ -153,10 +153,10 @@ object QueriesCore {
       StarSchemaOps.forecastRevenue(s, dir)),
 
     // q10/w3/a11 (+ e4/e5 in QueriesPipeline) run in the AQE-off
-    // narrow-shuffle child (smallSession): sub-second report plans
+    // narrow-shuffle child (stChild): sub-second report plans
     // whose cost was the per-exchange job floor, not compute.
     "q10_returned_revenue" -> ((s, dir) =>
-      StarSchemaOps.returnedRevenue(smallSession(s), dir)),
+      StarSchemaOps.returnedRevenue(stChild(s, 8, aqe = false), dir)),
 
     "a8_rollup" -> ((s, dir) =>
       ReferenceOps.rollupCounts(Tables.documents(s, dir),
@@ -291,7 +291,7 @@ object QueriesCore {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables.orders(smallSession(s), dir)
+      Tables.orders(stChild(s, 8, aqe = false), dir)
         .select(col("o_orderpriority"), col("o_orderkey"),
           col("o_totalprice"),
           dense_rank().over(w).as("drank"),
@@ -332,7 +332,7 @@ object QueriesCore {
     // conversion; per-step anchors are earliest qualifying
     // occurrences, join inputs shrink monotonically.
     "a11_funnel" -> ((s, dir) =>
-      AnalyticsOps.funnel(Tables.events(smallSession(s), dir),
+      AnalyticsOps.funnel(Tables.events(stChild(s, 8, aqe = false), dir),
         userCol = "user_id", tsCol = "ts", typeCol = "event_type",
         steps = Seq("signup", "click", "purchase"))),
 

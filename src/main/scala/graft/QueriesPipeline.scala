@@ -273,11 +273,11 @@ object QueriesPipeline {
     // the direct global sketch; the merged path's global step is
     // bounded by k·|groups|, the distributed-sketch shape.
     "e5_kmv_union" -> ((s, dir) =>
-      AnalyticsOps.kmvUnion(Tables.events(smallSession(s), dir),
+      AnalyticsOps.kmvUnion(Tables.events(stChild(s, 8, aqe = false), dir),
         key = "event_type", idCol = "user_id")),
 
     "e4_kmv_distinct" -> ((s, dir) =>
-      AnalyticsOps.kmvDistinct(Tables.events(smallSession(s), dir),
+      AnalyticsOps.kmvDistinct(Tables.events(stChild(s, 8, aqe = false), dir),
         key = "event_type", idCol = "user_id")),
 
     // c15: TARGET-SHARE mixture — explicit token-budget spec driven

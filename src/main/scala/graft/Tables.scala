@@ -12,21 +12,14 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Session-scoped loader cache: path-based `spark.read.parquet`
-    * builds a fresh file index + schema read per call, which a
-    * catalog-managed table would do once. Caching the DataFrame per
-    * (session, path) gives every query the same analyzed relation —
-    * purely metadata reuse, the data itself is never cached.
-    *
-    * Entries are evicted by a listener when the session's context
-    * stops. (A weak-keyed map does NOT work here: each cached
-    * DataFrame strongly references its SparkSession, so the value
-    * keeps the key reachable and nothing is ever collected — the
-    * value-refers-to-key pitfall the WeakHashMap javadoc warns about.)
+  /** Loader cache: path-based `spark.read.parquet` builds a fresh
+    * file index + schema read per call, which a catalog-managed table
+    * would do once. Caching the DataFrame per (session, path) gives
+    * every query the same analyzed relation — metadata reuse; only
+    * small dimensions (below) also keep their data in memory. An
+    * in-place rewrite of the file reloads it ([[FixtureCache]]).
     */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val loaded = new FixtureCache[String, DataFrame]
 
   /** Dimension tables below this on-disk size are kept in executor
     * memory (`cache()`): every star query pays its dim broadcasts out
@@ -57,8 +50,7 @@ object Tables {
     * their single-file reads.
     */
   private val ReshardMinBytes = 512L << 10
-  private val resharded =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val resharded = new FixtureCache[String, String]
 
   /** Fixed 8-way: measured A/B at local[32] (BASELINE.md round 6) —
     * core-count-many shards LOST to 8 on every scan-heavy query
@@ -67,44 +59,31 @@ object Tables {
     * binds, and FanOut already widens the few scan stages that carry
     * real compute. On a cluster the ingest analogue is a TARGET FILE
     * SIZE (128–512 MB), not a file-per-core; 8 plays that role for
-    * the local corpus. `SPARK_GRAFT_RESHARD` overrides for experiments.
+    * the local corpus.
     */
-  private def reshardShards(spark: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_RESHARD").map(_.toInt).getOrElse(8)
+  private val ReshardShards = 8
 
   private def reshardIfUnderSplit(spark: SparkSession, p: String): String = {
     val src = new java.io.File(p)
     if (!src.isFile || src.length < ReshardMinBytes) return p
-    val shards = reshardShards(spark)
-    resharded.computeIfAbsent(
-      s"$p:${src.length}:${src.lastModified}:s$shards", _ => {
-        val digest = java.lang.Long.toHexString(
-          scala.util.hashing.MurmurHash3.stringHash(p).toLong &
-            0xffffffffL)
-        val dst = new java.io.File(
-          new java.io.File(sys.props("java.io.tmpdir"), "graft-reshard"),
-          s"${src.getName.stripSuffix(".parquet")}-$digest-" +
-            s"${src.length}-s$shards")
-        if (!new java.io.File(dst, "_SUCCESS").isFile) {
-          spark.read.parquet(p)
-            .repartition(shards)
-            .write.mode(SaveMode.Overwrite).parquet(dst.toString)
-        }
-        dst.toString
-      })
+    resharded(spark, p, p) {
+      val digest = java.lang.Long.toHexString(
+        scala.util.hashing.MurmurHash3.stringHash(p).toLong & 0xffffffffL)
+      val dst = new java.io.File(
+        new java.io.File(sys.props("java.io.tmpdir"), "graft-reshard"),
+        s"${src.getName.stripSuffix(".parquet")}-$digest-" +
+          s"${src.length}-${src.lastModified}")
+      if (!new java.io.File(dst, "_SUCCESS").isFile) {
+        spark.read.parquet(p)
+          .repartition(ReshardShards)
+          .write.mode(SaveMode.Overwrite).parquet(dst.toString)
+      }
+      dst.toString
+    }
   }
 
-  private def load(spark: SparkSession, p: String): DataFrame = {
-    val perSession = cache.computeIfAbsent(spark, s => {
-      s.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-              : Unit = cache.remove(s)
-        })
-      new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    })
-    perSession.computeIfAbsent(p, _ => {
+  private def load(spark: SparkSession, p: String): DataFrame =
+    loaded(spark, p, p) {
       val df = spark.read.parquet(reshardIfUnderSplit(spark, p))
       val name = p.split('/').last.stripSuffix(".parquet")
       val small = DimTables.contains(name) && {
@@ -112,10 +91,9 @@ object Tables {
         f.exists && f.length < DimCacheMaxBytes
       }
       if (small) df.cache() else df
-    })
-  }
+    }
 
-  private def path(sfDir: String, table: String): String =
+  private[graft] def path(sfDir: String, table: String): String =
     s"$sfDir/$table.parquet"
 
   def region(spark: SparkSession, sfDir: String): DataFrame =

@@ -477,7 +477,8 @@ object GraphOps {
     val e = g.e
     val nodes = g.nodes
     var hubs = nodes.select(col("url"), lit(InitMicro).as("h"))
-    var auths: DataFrame = null
+    // iters = 0 scores no authority: every node keeps a = 0
+    var auths = nodes.select(col("url"), lit(0L).as("a"))
     // ONE barrier per half-round (round-10 verdict item 8): persist
     // the half-round's scores and read the max on the driver — the
     // same job that computes the 1-row max materializes the cache,

@@ -116,10 +116,10 @@ object VectorIndexOps {
       val m = Versioned.current(spark, table).head()
       (m.getAs[Int]("n_sub"), m.getAs[Int]("sub_dim"))
     }
+    val v = Versioned.currentVersion(spark, table).getOrElse(
+      throw new IllegalStateException(
+        s"uninitialized versioned table: $table"))
     try {
-      val v = Versioned.currentVersion(spark, table).getOrElse(
-        throw new IllegalStateException(
-          s"uninitialized versioned table: $table"))
       val entries = Versioned.snapshotFiles(spark, table, v)
       if (entries.exists(_.startsWith("log:"))) viaSpark()
       else {
@@ -137,11 +137,7 @@ object VectorIndexOps {
           finally reader.close()
         }.nextOption().getOrElse(viaSpark())
       }
-    } catch {
-      case _: IllegalStateException => throw new IllegalStateException(
-        s"uninitialized versioned table: $table")
-      case _: Exception => viaSpark()
-    }
+    } catch { case _: Exception => viaSpark() }
   }
 
   /** TRAIN + PERSIST: strided coarse centroids and PQ sub-codebooks

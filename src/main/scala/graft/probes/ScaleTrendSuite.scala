@@ -36,34 +36,40 @@ object ScaleTrendSuite {
     val missing = names.filterNot(qs.contains)
     require(missing.isEmpty, s"unknown queries: $missing")
 
+    def error(n: String, d: String, rep: String, e: Throwable): Unit =
+      println(s"""{"query":"$n","dir":"$d","rep":"$rep","error":"${
+        e.getClass.getSimpleName}"}""")
+
     // warm both arms (fixture builds + codegen)
     names.foreach { n =>
       Seq(dir1, dirN).foreach { d =>
         try runPlan(qs(n)(spark, d))
-        catch { case e: Throwable =>
-          println(s"""{"query":"$n","dir":"$d","error":"${
-            e.getClass.getSimpleName}"}""")
-        }
+        catch { case e: Throwable => error(n, d, "warm", e) }
       }
     }
 
     val acc = scala.collection.mutable.Map[(String, String),
       List[Double]]().withDefaultValue(Nil)
-    (1 to reps).foreach { _ =>
+    (1 to reps).foreach { rep =>
       names.foreach { n =>
         Seq(dir1, dirN).foreach { d =>
           try {
             val t0 = System.nanoTime()
             runPlan(qs(n)(spark, d))
             acc((n, d)) ::= (System.nanoTime() - t0) / 1e9
-          } catch { case _: Throwable => () }
+          } catch { case e: Throwable => error(n, d, rep.toString, e) }
         }
       }
     }
     names.foreach { n =>
       val t1 = acc((n, dir1))
       val tN = acc((n, dirN))
-      if (t1.nonEmpty && tN.nonEmpty)
+      val empty = Seq(dir1 -> t1, dirN -> tN).collect {
+        case (d, Nil) => s""""$d""""
+      }
+      if (empty.nonEmpty)
+        println(s"""{"query":"$n","empty_arms":[${empty.mkString(",")}]}""")
+      else
         println(f"""{"query":"$n","t1_sec":${t1.min}%.4f,"tN_sec":${
           tN.min}%.4f,"t1_all":[${
           t1.reverse.map(t => f"$t%.4f").mkString(",")}],"tN_all":[${

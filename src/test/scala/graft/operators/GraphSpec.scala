@@ -92,6 +92,15 @@ class GraphSpec extends SparkSpec {
     assert(r("h1") == (0L, 1000000L) && r("h2") == (0L, 1000000L))
   }
 
+  test("hits: zero iterations — every node keeps its initial hub " +
+      "score and no authority") {
+    val edges = Seq(("h1", "x"), ("h2", "x")).toDF("src", "dst")
+    val r = GraphOps.hits(edges, iters = 0, k = 10)
+      .collect().map(x => x.getString(0) ->
+        (x.getLong(1), x.getLong(2))).toMap
+    assert(r == Seq("h1", "h2", "x").map(_ -> (0L, 1000000L)).toMap)
+  }
+
   test("hits: stronger hub confers stronger authority and vice versa") {
     // H links both authorities; W links only A — so A outranks B on
     // authority, and H outranks W on hubness (it also reaps B)

@@ -123,4 +123,11 @@ class VectorIndexSpec extends SparkSpec {
     assert(rep2 == ((victimIds.size.toLong, 0L,
       victimIds.size.toLong)))
   }
+
+  test("serving from an uninitialized index root names that cause") {
+    val root = tmpDir("vecidx_none") + "/index"
+    val e = intercept[IllegalStateException](VectorIndexOps
+      .servedIvfPqBatch(spark, root, queriesDf(sfSmoke), 5, 3))
+    assert(e.getMessage == s"uninitialized versioned table: $root/meta")
+  }
 }

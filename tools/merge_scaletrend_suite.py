@@ -8,10 +8,12 @@ artifact (round-17 verdict item 5):
 
 - duck_*.json: tools/duckdb_baseline.py output on the two directories;
 - spark_trend.log: graft.probes.ScaleTrendSuite output (one JSON line
-  per query with t1_sec/tN_sec).
+  per query with t1_sec/tN_sec, or with empty_arms when a directory
+  had no successful rep; error lines are skipped).
 
 Emits per-query {spark_x1, spark_xN, duck_x1, duck_xN, ratio_x1,
-ratio_xN, spark_scale, duck_scale} plus totals. ratio_xN < ratio_x1
+ratio_xN, spark_scale, duck_scale} plus totals, and the queries left
+out for an empty arm under "incomplete". ratio_xN < ratio_x1
 (the fixed-floor share shrinking) is the claim under test.
 """
 import json
@@ -22,11 +24,15 @@ def main(duck1_p, duckn_p, spark_p, factor):
     duck1 = json.load(open(duck1_p))["queries"]
     duckn = json.load(open(duckn_p))["queries"]
     spark = {}
+    incomplete = []
     for line in open(spark_p):
         line = line.strip()
         if line.startswith('{"query"'):
             d = json.loads(line)
-            spark[d["query"]] = d
+            if "t1_sec" in d:
+                spark[d["query"]] = d
+            elif "empty_arms" in d:
+                incomplete.append(d["query"])
     rows = {}
     for q in sorted(spark):
         if q not in duck1 or q not in duckn:
@@ -53,7 +59,8 @@ def main(duck1_p, duckn_p, spark_p, factor):
     tot[f"ratio_x{factor}"] = round(
         tot[f"spark_x{factor}"] / tot[f"duck_x{factor}"], 3)
     print(json.dumps({"factor": factor, "n_queries": len(rows),
-                      "totals": tot, "queries": rows}, indent=1))
+                      "totals": tot, "queries": rows,
+                      "incomplete": sorted(incomplete)}, indent=1))
 
 
 if __name__ == "__main__":
