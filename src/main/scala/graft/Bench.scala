@@ -232,7 +232,8 @@ object Bench {
       mrel: Option[Double],
       gate: Double,
       mrelGate: Double,
-      fixedGate: Double = Double.NaN) {
+      fixedGate: Double = Double.NaN,
+      calibFloor: Double = Double.NaN) {
     def calibMin: Double =
       (Seq(entryCalib, exitCalib) ++ repProbes).min
     def repMax: Double =
@@ -297,6 +298,22 @@ object Bench {
     if (sessionProbes.isEmpty) gate
     else math.max(gate, margin * sessionProbes.min)
 
+  /** The chosen close's gate fields for the result line. `loaded`
+    * stays as the OR for artifact continuity; the split components let
+    * a quiet-truth close self-certify on its face (round-15 verdict
+    * item 1): `times_loaded: false` means the per-query evidence proved
+    * the times quiet regardless of what the CPU probe thought of the
+    * window. `calib_floor` is the session probe floor that
+    * `calib_gate_eff` scales ([[effectiveGate]]).
+    */
+  private[graft] def gateJson(c: Close, gate: Double, floorMargin: Double,
+      waitedSec: Int, closeAttempts: Int): String = {
+    val mrelJson = c.mrel
+      .map(m => f""","median_rel":$m%.4f,"median_rel_gate":${c.mrelGate}""")
+      .getOrElse("")
+    f""","calib_gate":$gate,"calib_gate_eff":${c.gate}%.4f,"calib_floor":${c.calibFloor}%.4f,"calib_floor_margin":$floorMargin,"calib_wait_sec":$waitedSec,"calib_entry_sec":${c.entryCalib}%.4f,"calib_exit_sec":${c.exitCalib}%.4f,"calib_rep_max":${c.repMax}%.4f$mrelJson,"probe_loaded":${c.probeLoaded},"probe_loaded_fixed":${c.probeLoadedFixed},"times_loaded":${c.timesLoaded},"loaded":${c.loaded},"close_attempts":$closeAttempts"""
+  }
+
   private def measureOnce(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, reps: Int, gate: Double, mrelGate: Double,
       priorProbes: Seq[Double], floorMargin: Double)
@@ -321,10 +338,10 @@ object Bench {
     // time for a query that failed in another rep must not feed the
     // primary selection key (round-16 review)
     val ok = times.filterNot { case (n, _) => failed.contains(n) }
-    val eff = effectiveGate(gate, floorMargin,
-      priorProbes ++ probes ++ Seq(entry, exit))
+    val sessionProbes = priorProbes ++ probes ++ Seq(entry, exit)
     Close(times.toMap, failed.toSeq, entry, probes.toSeq, exit,
-      medianRel(ok), eff, mrelGate, fixedGate = gate)
+      medianRel(ok), effectiveGate(gate, floorMargin, sessionProbes),
+      mrelGate, fixedGate = gate, calibFloor = sessionProbes.min)
   }
 
   def main(args: Array[String]): Unit = {
@@ -423,8 +440,6 @@ object Bench {
     // "best window this process saw" semantics.
     val calib = (attempts ++ closes.flatMap(c =>
       c.repProbes ++ Seq(c.entryCalib, c.exitCalib))).min
-    val exitCalib = chosen.exitCalib
-    val loaded = chosen.loaded
     val qs = names.map { k =>
       if (failed(k) || !times.contains(k)) "\"" + k + "\":null"
       else "\"" + k + f"""\":${times(k)}%.4f"""
@@ -470,16 +485,8 @@ object Bench {
     // ratio stays the headline; the normalized one bounds what a
     // quiet host would measure.
     val hf = hostFactor(calib)
-    val mrelJson = chosen.mrel
-      .map(m => f""","median_rel":$m%.4f,"median_rel_gate":$mrelGate""")
-      .getOrElse("")
-    // `loaded` stays as the OR for artifact continuity; the split
-    // components let a quiet-truth close self-certify on its face
-    // (round-15 verdict item 1): `times_loaded: false` means the
-    // per-query evidence proved the times quiet regardless of what
-    // the CPU probe thought of the window.
-    val gateJson =
-      f""","calib_gate":$gate,"calib_gate_eff":${chosen.gate}%.4f,"calib_floor_margin":$floorMargin,"calib_wait_sec":$waited,"calib_entry_sec":${chosen.entryCalib}%.4f,"calib_exit_sec":$exitCalib%.4f,"calib_rep_max":${chosen.repMax}%.4f$mrelJson,"probe_loaded":${chosen.probeLoaded},"probe_loaded_fixed":${chosen.probeLoadedFixed},"times_loaded":${chosen.timesLoaded},"loaded":$loaded,"close_attempts":${closes.size}"""
+    val gateJson = Bench.gateJson(chosen, gate, floorMargin, waited,
+      closes.size)
     // Full attempt trace + per-close summaries go in the LONG line
     // only; the short line keeps the headline so its always-survives-
     // a-tail size guarantee holds.

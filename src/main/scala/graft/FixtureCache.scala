@@ -1,19 +1,19 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
 
 /** The one caching rule for values derived from input files (loaded
   * tables, served indexes, prepared graphs, fixture templates):
   *
   *  - Key: the session, the caller's key, and a fingerprint of the
   *    inputs — the sorted (relative path, size, mtime) of every file
-  *    under each input path, read driver-side with `java.nio`.
+  *    under each input path, listed driver-side through the session's
+  *    Hadoop `FileSystem` (so `file:`, `hdfs:` and `s3a:` paths
+  *    fingerprint like plain ones).
   *  - Hit: an unchanged fingerprint returns the cached value itself.
   *  - Miss: a changed fingerprint rebuilds. Spark's cached data over
   *    the changed inputs is refreshed first (`refreshByPath`): the
@@ -37,7 +37,7 @@ final class FixtureCache[K, V] {
 
   def apply(s: SparkSession, key: K, inputs: String*)(build: => V): V = {
     FixtureCache.watch(s.sparkContext)
-    val fp = inputs.flatMap(FixtureCache.fingerprint)
+    val fp = inputs.flatMap(FixtureCache.fingerprint(s, _))
     entries.compute((s, key), (_, old) =>
       if (old != null && old.fingerprint == fp) old
       else {
@@ -53,7 +53,7 @@ final class FixtureCache[K, V] {
 }
 
 object FixtureCache {
-  private type FileStamp = (String, Long, FileTime)
+  private type FileStamp = (String, Long, Long)
   private final case class Entry[V](fingerprint: Seq[FileStamp], value: V)
 
   private val instances = new CopyOnWriteArrayList[FixtureCache[_, _]]()
@@ -69,21 +69,14 @@ object FixtureCache {
       }
     })
 
-  /** Every regular file under `path` (the path itself when it is a
-    * file), sorted; empty when nothing is there yet.
+  /** The sorted stamps of every file under `path` ([[Catalog.files]]),
+    * relative to it; empty when nothing is there yet.
     */
-  private def fingerprint(path: String): Seq[FileStamp] = {
-    val root = Paths.get(path)
-    if (!Files.exists(root)) Nil
-    else {
-      val files = Files.walk(root)
-      try files.iterator.asScala.flatMap { f: Path =>
-        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
-        if (a.isRegularFile)
-          Some((root.relativize(f).toString, a.size, a.lastModifiedTime))
-        else None
-      }.toVector.sortBy(_._1)
-      finally files.close()
-    }
+  private def fingerprint(s: SparkSession, path: String): Seq[FileStamp] = {
+    val root = new Path(path)
+    val base = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toString
+    Catalog.files(s, path).map(f => (f.getPath.toString.stripPrefix(base),
+      f.getLen, f.getModificationTime)).sortBy(_._1)
   }
 }

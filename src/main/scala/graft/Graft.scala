@@ -4,6 +4,7 @@ import graft.ingest.{Adapter, ComplianceCheck, DataRecord, Pipeline}
 import graft.operators.{ExportOps, FtsOps, ReferenceOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** The user-facing client: the reference CLI's five verbs
   * (`setup`/`collect`/`search`/`analytics`/`status`/`export`,
@@ -11,12 +12,18 @@ import org.apache.spark.sql.functions._
   * the reference switches by pointing this at a table directory; each
   * verb composes the operator layer (ReferenceOps/ExportOps/FtsOps/
   * Pipeline) and returns DataFrames (render with [[Render.table]]).
+  *
+  * Reads follow [[Pipeline]]'s rule: one resolved relation per table
+  * version. A verb takes [[records]] once; calling it again at an
+  * unchanged version is free (no listing job, no re-analysis), and any
+  * write — from this instance or another over the same directory —
+  * invalidates it, so the next read sees the write.
   */
 final class Graft(spark: SparkSession, tableDir: String) {
 
   private val pipeline = new Pipeline(spark, tableDir)
 
-  def records: DataFrame = Catalog.load(spark, pipeline.recordsPath)
+  def records: DataFrame = pipeline.dataRecords
 
   /** `setup` — persist compliance checks for the given adapters
     * (ethical_crawler.py:1116–1154). Returns the checks run.
@@ -167,28 +174,24 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * reference-stubbed analytics (tags/temporal/license)
     * (ethical_crawler.py:1274–1349).
     */
-  def analytics(): Map[String, DataFrame] = Map(
-    "source_stats" -> ReferenceOps.sourceStats(records,
-      key = "source_name", distinctCol = "data_type",
-      avgCol = "size_bytes", spanCol = "ingested_at"),
-    "type_counts" -> ReferenceOps.typeCounts(records, "data_type"),
-    "popular_tags" -> ReferenceOps.popularTags(records, col("tags"), 20),
-    "temporal_activity" ->
-      ReferenceOps.temporalActivity(records, "ingested_at"),
-    "license_distribution" ->
-      ReferenceOps.licenseDistribution(records, "license_info"))
+  def analytics(): Map[String, DataFrame] = {
+    val r = records
+    Graft.AnalyticsViews.map { case (name, view) => name -> view(r) }
+  }
 
-  /** [[analytics]] served from a parquet materialization under
-    * `$tableDir/mv/` — rebuilt only when the records table has changed
-    * since the last build ([[Mv.readFresh]]); an unchanged catalog
-    * costs one file-listing, not a re-scan. The reference recomputes
-    * every analytics block per CLI call (ethical_crawler.py:1274).
+  /** One [[analytics]] view served from a parquet materialization
+    * under `$tableDir/mv/` — rebuilt only when the records table has
+    * changed since the last build ([[Mv.readFresh]]); an unchanged
+    * catalog costs one file-listing, not a re-scan. The reference
+    * recomputes every analytics block per CLI call
+    * (ethical_crawler.py:1274).
     */
   def analyticsMaterialized(name: String): DataFrame = {
-    require(analytics().contains(name), s"unknown analytics view: $name")
+    val view = Graft.AnalyticsViews.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown analytics view: $name"))
     Mv.readFresh(spark,
       Mv.View(s"$tableDir/mv/$name", Seq(pipeline.recordsPath)),
-      _ => analytics()(name))
+      _ => view(records))
   }
 
   /** `status` — two-key stats rolled up per source joined with the
@@ -201,7 +204,7 @@ final class Graft(spark: SparkSession, tableDir: String) {
         countDistinct(col("data_type")).as("n_types"),
         max(col("ingested_at")).as("last_ingested"))
     val latestCheck = ReferenceOps.latestPerKey(
-      Catalog.load(spark, pipeline.checksPath),
+      pipeline.complianceChecks,
       key = "source_name", orderCol = "last_check",
       tiebreaker = "last_check")
       .select(col("source_name"), col("robots_txt_compliant"),
@@ -215,8 +218,9 @@ final class Graft(spark: SparkSession, tableDir: String) {
     */
   def export(whereClause: Option[String], format: String, path: String)
       : DataFrame = {
-    ExportOps.export(records, whereClause, format, path)
-    ExportOps.attribution(records, "source_name", whereClause)
+    val r = records
+    ExportOps.export(r, whereClause, format, path)
+    ExportOps.attribution(r, "source_name", whereClause)
   }
 
   // ---- north-star surface over the catalog ----
@@ -336,4 +340,21 @@ final class Graft(spark: SparkSession, tableDir: String) {
       .orderBy(col("score").desc, col("record_id").asc)
       .limit(k)
   }
+}
+
+object Graft {
+  /** The `analytics` views by name, each a function of the records
+    * table; [[Graft.analyticsMaterialized]] builds only the one named.
+    */
+  private val AnalyticsViews: ListMap[String, DataFrame => DataFrame] =
+    ListMap(
+      ("source_stats", r => ReferenceOps.sourceStats(r,
+        key = "source_name", distinctCol = "data_type",
+        avgCol = "size_bytes", spanCol = "ingested_at")),
+      ("type_counts", r => ReferenceOps.typeCounts(r, "data_type")),
+      ("popular_tags", r => ReferenceOps.popularTags(r, col("tags"), 20)),
+      ("temporal_activity",
+        r => ReferenceOps.temporalActivity(r, "ingested_at")),
+      ("license_distribution",
+        r => ReferenceOps.licenseDistribution(r, "license_info")))
 }

@@ -34,42 +34,19 @@ object Mv {
     * are metadata, not data — excluded so writing the watermark never
     * advances the watermark.
     */
-  def maxMtime(spark: SparkSession, p: String): Long = {
-    val fs = fsOf(spark, p)
-    val root = new Path(p)
-    if (!fs.exists(root)) 0L
-    else {
-      val it = fs.listFiles(root, true)
-      var m = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_"))
-          m = math.max(m, f.getModificationTime)
-      }
-      m
-    }
-  }
+  def maxMtime(spark: SparkSession, p: String): Long =
+    dataFiles(spark, p).map(_.getModificationTime).foldLeft(0L)(math.max)
 
   /** Data files under `p` newer than `sinceMtime` — the append-only
     * delta since the last refresh.
     */
   def filesNewerThan(spark: SparkSession, p: String, sinceMtime: Long)
-      : Seq[String] = {
-    val fs = fsOf(spark, p)
-    val root = new Path(p)
-    if (!fs.exists(root)) Seq.empty
-    else {
-      val it = fs.listFiles(root, true)
-      val out = Seq.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_") &&
-            f.getModificationTime > sinceMtime)
-          out += f.getPath.toString
-      }
-      out.result()
-    }
-  }
+      : Seq[String] =
+    dataFiles(spark, p).filter(_.getModificationTime > sinceMtime)
+      .map(_.getPath.toString)
+
+  private def dataFiles(spark: SparkSession, p: String) =
+    Catalog.files(spark, p).filterNot(_.getPath.getName.startsWith("_"))
 
   private def readWatermark(spark: SparkSession, viewPath: String): Long = {
     val fs = fsOf(spark, viewPath)
@@ -116,12 +93,13 @@ object Mv {
   }
 
   /** Serve the view, rebuilding only if stale — the read path every
-    * caller uses.
+    * caller uses. A fresh view is served as the relation resolved at
+    * its current version ([[Catalog.resolved]]).
     */
   def readFresh(spark: SparkSession, view: View,
       build: SparkSession => DataFrame): DataFrame = {
     if (isStale(spark, view)) refresh(spark, view, build)
-    Catalog.load(spark, view.path)
+    Catalog.resolved(spark, view.path)
   }
 
   /** Incremental refresh for an APPEND-ONLY single-source rollup

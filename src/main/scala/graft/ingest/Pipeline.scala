@@ -2,8 +2,9 @@ package graft.ingest
 
 import graft.Catalog
 import graft.operators.ReferenceOps
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
+import org.apache.spark.sql.types.StructType
 
 /** The `collect` verb end-to-end (ethical_crawler.py:938–966 + CLI
   * :1157–1203): compliance-gate each registered adapter (R2,
@@ -17,12 +18,25 @@ import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
   * anti-join result; the existing table is never rewritten), and the
   * table is partitioned by `source_name` so the anti-join and every
   * downstream equality filter prune partitions.
+  *
+  * Read rule: each table resolves to one relation per table version
+  * ([[Catalog.resolved]]). Re-reading an unchanged table is free — the
+  * same resolved DataFrame, no Spark job — and any write (append,
+  * upsert, replace) invalidates it, so the next read sees the write.
   */
 final class Pipeline(spark: SparkSession, tableDir: String) {
   import spark.implicits._
 
   def recordsPath: String = s"$tableDir/data_records"
   def checksPath: String = s"$tableDir/compliance_checks"
+
+  /** `data_records` at its current version. */
+  def dataRecords: DataFrame =
+    Catalog.resolved(spark, recordsPath, Some(Pipeline.RecordsSchema))
+
+  /** `compliance_checks` at its current version. */
+  def complianceChecks: DataFrame =
+    Catalog.resolved(spark, checksPath, Some(Pipeline.ChecksSchema))
 
   /** R2 — compliance gate: sources whose latest check carries issues
     * are skipped (ethical_crawler.py:942–948).
@@ -59,7 +73,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
         monotonically_increasing_id())
     val existing: DataFrame =
       if (Catalog.tableExists(spark, recordsPath))
-        Catalog.load(spark, recordsPath)
+        dataRecords
           .select(incoming.columns.filterNot(_ == "__batch_idx")
             .toIndexedSeq.head,
             incoming.columns.filterNot(_ == "__batch_idx")
@@ -94,7 +108,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
         Seq("source_name"))
       return
     }
-    val existing = Catalog.load(spark, recordsPath)
+    val existing = dataRecords
       .select(incoming.columns.toIndexedSeq.head,
         incoming.columns.toIndexedSeq.tail: _*)
     val kept = existing.join(incoming.select("source_name", "record_id"),
@@ -107,11 +121,19 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     Catalog.replace(spark, tmp, recordsPath)
   }
 
-  def records: Dataset[DataRecord] =
-    Catalog.load(spark, recordsPath)
-      .selectExpr("source_name", "record_id", "title", "description",
-        "data_type", "url", "metadata", "content_summary", "tags",
-        "last_updated", "ingested_at", "file_format", "size_bytes",
-        "license_info", "embedding")
-      .as[DataRecord]
+  def records: Dataset[DataRecord] = dataRecords.as[DataRecord]
+}
+
+object Pipeline {
+  /** `data_records` as a read resolves it: the [[DataRecord]] fields
+    * with the `source_name` partition column last (the order inference
+    * gives), so a resolve needs no schema-inference job.
+    */
+  private val RecordsSchema: StructType = {
+    val fields = Encoders.product[DataRecord].schema.fields
+    StructType(fields.filterNot(_.name == "source_name") ++
+      fields.filter(_.name == "source_name"))
+  }
+
+  private val ChecksSchema: StructType = Encoders.product[ComplianceCheck].schema
 }

@@ -109,4 +109,18 @@ class BenchCloseSpec extends AnyFunSuite {
       0.03, None, gate = 0.055, mrelGate = 1.15)
     assert(legacy.probeLoadedFixed == legacy.probeLoaded)
   }
+
+  test("gate fields report calib_floor, the floor the effective gate scaled") {
+    val session = Seq(0.0345, 0.05, 0.0382)
+    val c = Bench.Close(Map("q" -> 1.0), Nil, 0.0382, Seq(0.05), 0.0345,
+      mrel = None, gate = Bench.effectiveGate(0.055, 2.0, session),
+      mrelGate = 1.15, fixedGate = 0.055, calibFloor = session.min)
+    val json = Bench.gateJson(c, 0.055, 2.0, waitedSec = 0,
+      closeAttempts = 1)
+    assert(json.startsWith(
+      ""","calib_gate":0.055,"calib_gate_eff":0.0690,"calib_floor":0.0345,"calib_floor_margin":2.0,"""))
+    // the gate is unchanged: still max(fixed, margin × floor)
+    assert(math.abs(c.gate - 2.0 * c.calibFloor) < 1e-12)
+    assert(!json.contains("median_rel") && json.endsWith(""","close_attempts":1"""))
+  }
 }

@@ -61,4 +61,22 @@ class FixtureCacheSpec extends SparkSpec {
     }
     assertServedFromCache(dir)
   }
+
+  test("an input named by a file: URI rebuilds after a rewrite") {
+    val table = new File(tmpDir("fixture_cache_uri"), "t")
+    val uri = table.toURI.toString
+    assert(uri.startsWith("file:"))
+    val cache = new FixtureCache[String, Long]
+    var builds = 0
+    def rows(): Long = cache(spark, "t", uri) {
+      builds += 1
+      spark.read.parquet(uri).count()
+    }
+    def write(n: Int): Unit =
+      spark.range(n).write.mode("overwrite").parquet(uri)
+    write(3)
+    assert(rows() == 3 && rows() == 3 && builds == 1)
+    write(5)
+    assert(rows() == 5 && builds == 2, "a file: input was served stale")
+  }
 }

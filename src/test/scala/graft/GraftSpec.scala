@@ -2,6 +2,9 @@ package graft
 
 import graft.ingest._
 import java.time.{Clock, Instant, ZoneOffset}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** End-to-end verb tests: the reference CLI surface over a fresh
   * catalog dir using offline fixture adapters (SURVEY §5.2(4) golden
@@ -126,6 +129,88 @@ class GraftSpec extends SparkSpec {
     assert(g.sample(0).count() == 0)
     val red = g.redactionAudit().head
     assert(red.getAs[Long]("n_rows") == 2L)
+  }
+
+  /** Spark jobs `body` launches on this thread, counted by a listener.
+    * A sentinel job in a second group marks the end: the listener bus
+    * delivers in order, so once the sentinel is seen every job `body`
+    * started has been counted.
+    */
+  def jobsLaunchedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graftspec-${System.nanoTime}"
+    val jobs = new AtomicInteger()
+    val end = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-end" => end.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-end", "sentinel")
+      spark.range(1).count()
+      assert(end.await(60, TimeUnit.SECONDS), "sentinel job not seen")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("catalog reads resolve once per table version") {
+    val dir = tmpDir("graftresolve")
+    val g = new Graft(spark, dir)
+    val ad = nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20))
+    g.setup(Seq(ad))
+    assert(g.collect(Seq(ad)) == 2)
+
+    // the known schemas resolve exactly what inference would
+    assert(g.records.schema == spark.read.parquet(dir + "/data_records").schema)
+    assert(new Pipeline(spark, dir).complianceChecks.schema ==
+      spark.read.parquet(dir + "/compliance_checks").schema)
+
+    // first call builds the view; afterwards, on an unchanged catalog,
+    // building every read verb's plan launches no job at all
+    val v = "type_counts"
+    assert(g.analyticsMaterialized(v).head.getLong(1) == 2L)
+    val jobs = jobsLaunchedBy {
+      g.records
+      g.analytics()
+      g.status()
+      g.analyticsMaterialized(v)
+    }
+    assert(jobs == 0, s"$jobs jobs launched on an unchanged catalog")
+    assert(g.records eq g.records)
+
+    intercept[IllegalArgumentException](g.analyticsMaterialized("nope"))
+  }
+
+  test("a write through another Graft is seen by the next read") {
+    val dir = tmpDir("graftshared")
+    val first = new Graft(spark, dir)
+    first.setup(Seq(nycFixture()))
+    assert(first.collect(Seq(nycFixture(
+      item("aa-1", "Traffic Volume", 10)))) == 1)
+    assert(first.search(Some("bike")).count() == 0)
+    assert(first.analytics()("type_counts").head.getLong(1) == 1L)
+    val before = first.records
+
+    val second = new Graft(spark, dir)
+    assert(second.collect(Seq(nycFixture(
+      item("bb-2", "Bike Counts", 20)))) == 1)
+
+    assert(!(first.records eq before))
+    assert(first.search(Some("bike")).collect()
+      .map(_.getAs[String]("record_id")).toSeq == Seq("bb-2"))
+    assert(first.analytics()("type_counts").head.getLong(1) == 2L)
+    assert(first.status().head.getAs[Long]("n_records") == 2L)
   }
 
   test("collectStream: continuous dedup-append collect, idempotent replays") {
