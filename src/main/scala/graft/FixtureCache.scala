@@ -53,7 +53,7 @@ final class FixtureCache[K, V] {
 }
 
 object FixtureCache {
-  private type FileStamp = (String, Long, Long)
+  private[graft] type FileStamp = (String, Long, Long)
   private final case class Entry[V](fingerprint: Seq[FileStamp], value: V)
 
   private val instances = new CopyOnWriteArrayList[FixtureCache[_, _]]()
@@ -72,7 +72,8 @@ object FixtureCache {
   /** The sorted stamps of every file under `path` ([[Catalog.files]]),
     * relative to it; empty when nothing is there yet.
     */
-  private def fingerprint(s: SparkSession, path: String): Seq[FileStamp] = {
+  private[graft] def fingerprint(s: SparkSession, path: String)
+      : Seq[FileStamp] = {
     val root = new Path(path)
     val base = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       .makeQualified(root).toString

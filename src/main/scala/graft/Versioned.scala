@@ -282,24 +282,16 @@ object Versioned {
 
   /** Recursive listing of the data files under one version directory
     * (relative to the table root) — partitioned layouts nest them
-    * under `<col>=<value>/` subdirectories.
+    * under `<col>=<value>/` subdirectories. A version that wrote no
+    * local files (a shallow clone's v0 is all inherited references)
+    * has no directory at all, and lists as empty.
     */
-  private def listDataFiles(spark: SparkSession, table: String, v: Int)
-      : Seq[String] = {
-    val f = fs(spark, table)
-    val root = new Path(versionDir(table, v))
-    // a version that wrote no local files (a shallow clone's v0 is
-    // all inherited references) has no directory at all
-    if (!f.exists(root)) return Nil
-    val it = f.listFiles(root, true)
-    val buf = scala.collection.mutable.ArrayBuffer[String]()
+  private[graft] def listDataFiles(spark: SparkSession, table: String,
+      v: Int): Seq[String] = {
     val prefix = new Path(table).toUri.getPath.stripSuffix("/") + "/"
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.startsWith("part-"))
-        buf += st.getPath.toUri.getPath.stripPrefix(prefix)
-    }
-    buf.toList.sorted
+    Catalog.files(spark, versionDir(table, v))
+      .filter(_.getPath.getName.startsWith("part-"))
+      .map(_.getPath.toUri.getPath.stripPrefix(prefix)).sorted
   }
 
   private def write(df: DataFrame, dir: String,

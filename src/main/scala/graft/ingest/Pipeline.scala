@@ -34,6 +34,11 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
   def dataRecords: DataFrame =
     Catalog.resolved(spark, recordsPath, Some(Pipeline.RecordsSchema))
 
+  /** The given `data_records` data files, read as the table. */
+  def recordsFiles(files: Seq[String]): DataFrame =
+    spark.read.schema(Pipeline.RecordsSchema)
+      .option("basePath", recordsPath).parquet(files: _*)
+
   /** `compliance_checks` at its current version. */
   def complianceChecks: DataFrame =
     Catalog.resolved(spark, checksPath, Some(Pipeline.ChecksSchema))

@@ -29,11 +29,17 @@ object FtsOps {
     */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame =
+    postings(tokens(docs, idCol, textCol), idCol)
+
+  /** One (id, token) row per token occurrence. */
+  private def tokens(docs: DataFrame, idCol: String, textCol: String)
+      : DataFrame =
     docs.select(col(idCol),
         explode(split(lower(col(textCol)), " ")).as("token"))
       .filter(col("token") =!= "")
-      .groupBy(col("token"), col(idCol))
-      .agg(count(lit(1)).as("tf"))
+
+  private def postings(tokens: DataFrame, idCol: String): DataFrame =
+    tokens.groupBy(col("token"), col(idCol)).agg(count(lit(1)).as("tf"))
 
   /** AND-semantics ranked search over the inverted index: documents
     * containing ALL `terms`, ranked by total term frequency.
@@ -424,16 +430,29 @@ object FtsOps {
 
   /** Persist the inverted index AT REST, bucketed (and sorted) by
     * token: the corpus scan is paid once here; afterwards a term
-    * lookup hash-routes to ⌈|terms|⌉ of `buckets` files instead of
-    * scanning the corpus ("SelectedBucketsCount: n out of `buckets`"
-    * in the scan), and the per-doc aggregate needs no preparatory
-    * shuffle of the postings. Bucketed tables live in the session
-    * catalog, so reads go through [[searchIndexed]]/`spark.table`.
+    * lookup hash-routes to the terms' buckets instead of scanning the
+    * corpus ("SelectedBucketsCount: n out of `buckets`" in the scan).
+    * Bucketed tables live in the session catalog, so reads go through
+    * [[searchIndexed]]/`spark.table`.
+    *
+    * Layout rule: one file per non-empty bucket per write. The token
+    * rows are hash-partitioned on `token` into `buckets` partitions
+    * before the (token, id) aggregate — Spark's bucket id is the same
+    * `pmod(murmur3(token), buckets)`, so each writer task holds exactly
+    * one bucket, and that partitioning already satisfies the
+    * aggregate's distribution (no second exchange). Callers that serve
+    * lookups pass the session's shuffle width, so a lookup is one wave
+    * of tasks. `SaveMode.Append` adds postings under the same bucket
+    * spec (at most `buckets` files) without merging them into the
+    * existing ones, so the appended docs must be ids the index does
+    * not hold yet.
     */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
-      tableName: String, path: String, buckets: Int = 32): Unit =
-    buildIndex(docs, idCol, textCol)
-      .write.mode(SaveMode.Overwrite)
+      tableName: String, path: String, buckets: Int = 32,
+      mode: SaveMode = SaveMode.Overwrite): Unit =
+    postings(tokens(docs, idCol, textCol)
+        .repartition(buckets, col("token")), idCol)
+      .write.mode(mode)
       .format("parquet")
       .option("path", path)
       .bucketBy(buckets, "token")

@@ -101,7 +101,7 @@ class GraftSpec extends SparkSpec {
     assert(g.records.count() == 2)
 
     // persisted FTS index returns the same hits as the on-the-fly path
-    g.indexFts(buckets = 8)
+    g.indexFts()
     val ftsIdx = g.searchFts(Seq("bike"), 5).collect()
     assert(ftsIdx.length == 1 && ftsIdx.head.getString(0) == "bb-2")
 
@@ -211,6 +211,80 @@ class GraftSpec extends SparkSpec {
       .map(_.getAs[String]("record_id")).toSeq == Seq("bb-2"))
     assert(first.analytics()("type_counts").head.getLong(1) == 2L)
     assert(first.status().head.getAs[Long]("n_records") == 2L)
+  }
+
+  test("indexFts appends the postings of new records files; a rewrite " +
+      "or a stale lineage rebuilds") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    val dir = tmpDir("graftfts")
+    val g = new Graft(spark, dir)
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lineage = new Path(s"$dir/fts_index/_graft_fts_lineage")
+    def indexFiles: Set[String] =
+      new java.io.File(s"$dir/fts_index").listFiles.map(_.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    def collect(items: String*): Long = g.collect(Seq(nycFixture(items: _*)))
+    // both FTS verbs equal the recompute over `records`
+    def assertSearchesMatch(): Unit = {
+      val docs = g.records.select(col("record_id"),
+        concat_ws(" ", col("title"), col("description")).as("text"))
+      Seq(Seq("bike"), Seq("about"), Seq("traffic", "about")).foreach { t =>
+        assert(g.searchFts(t, 50).collect().toSeq ==
+          operators.FtsOps.searchDocs(docs, "record_id", "text", t, 50)
+            .collect().toSeq, t)
+        assert(g.searchFtsRanked(t, 50).collect().toSeq ==
+          operators.FtsOps.searchRankedDocs(docs, "record_id", "text", t, 50)
+            .collect().toSeq, t)
+      }
+    }
+    // the append path keeps the old files and adds at most `width`
+    def indexFtsAppends(): Set[String] = {
+      val before = indexFiles
+      g.indexFts()
+      val after = indexFiles
+      assert(before.subsetOf(after), "an append must keep the old files")
+      assert(after.size > before.size && after.size - before.size <= width)
+      after
+    }
+    // the full path replaces every file
+    def indexFtsRebuilds(): Unit = {
+      val before = indexFiles
+      g.indexFts()
+      assert((indexFiles intersect before).isEmpty,
+        "a full build must replace the old files")
+    }
+
+    g.setup(Seq(nycFixture()))
+    assert(collect(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)) == 2)
+    g.indexFts()
+    assertSearchesMatch()
+
+    assert(collect(item("cc-3", "Bike Lanes", 5),
+      item("bb-2", "Bike Counts", 20),
+      item("dd-4", "Traffic Bike Signals", 7)) == 2)
+    val appended = indexFtsAppends()
+    assertSearchesMatch()
+    g.indexFts() // nothing new: the index is left as it is
+    assert(indexFiles == appended)
+
+    // a rewrite of the records table replaces every covered file
+    assert(g.backfillEmbeddings() == 4L)
+    indexFtsRebuilds()
+    assertSearchesMatch()
+
+    // crash window: an append whose lineage write was lost leaves the
+    // previous lineage, which no longer describes the index files
+    val in = fs.open(lineage)
+    val saved = try in.readAllBytes() finally in.close()
+    assert(collect(item("ee-5", "Bike Share Trips", 3)) == 1)
+    indexFtsAppends()
+    val out = fs.create(lineage, true)
+    try out.write(saved) finally out.close()
+    indexFtsRebuilds()
+    assertSearchesMatch()
   }
 
   test("collectStream: continuous dedup-append collect, idempotent replays") {

@@ -28,6 +28,28 @@ class VersionedSpec extends SparkSpec {
       (3L, "src_0", 100L), (4L, "src_1", 999L)))
   }
 
+  test("listDataFiles equals a recursive listFiles walk, per version") {
+    val t = tmpDir("versioned") + "/t"
+    val part = Seq("source")
+    Versioned.init(docs(Seq(1L, 2L, 3L), _ => 10L), t, partitionCols = part)
+    Versioned.mergeUpsert(docs(Seq(2L, 4L), _ => 20L), t, Seq("doc_id"),
+      partitionCols = part)
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = new org.apache.hadoop.fs.Path(t).toUri.getPath + "/"
+    val versions = Versioned.versions(spark, t)
+    assert(versions.size >= 2)
+    versions.foreach { v =>
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(s"$t/v=$v"), true)
+      val walked = Iterator.continually(it).takeWhile(_.hasNext)
+        .map(_.next()).filter(_.getPath.getName.startsWith("part-"))
+        .map(_.getPath.toUri.getPath.stripPrefix(prefix)).toList.sorted
+      assert(walked.nonEmpty && walked.forall(_.contains("/source=")))
+      assert(Versioned.listDataFiles(spark, t, v) == walked)
+    }
+    assert(Versioned.listDataFiles(spark, t, versions.max + 1).isEmpty)
+  }
+
   test("time travel: v0 is immutable across merges; history lists all") {
     val t = tmpDir("versioned") + "/t"
     Versioned.init(docs(Seq(1L, 2L), _ => 10L), t)

@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.{Render, SparkSpec, Tables}
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 
 class FtsRenderSpec extends SparkSpec {
@@ -145,6 +147,56 @@ class FtsRenderSpec extends SparkSpec {
         Seq("window"), 50).as[(Long, Long)].collect().toSeq
       assert(fromIndex == direct)
     } finally spark.sql("DROP TABLE IF EXISTS fts_idx_test")
+  }
+
+  test("persisted index layout: one file per bucket; build + append " +
+      "equals one build of the union") {
+    val docs = Tables.documents(spark, sfSmoke)
+    val dir = tmpDir("ftslayout")
+    val tables = Seq("fts_layout_inc", "fts_layout_full")
+    def dataFiles(path: String): Set[String] =
+      new java.io.File(path).listFiles.map(_.getName)
+        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    // one file per non-empty bucket, each a distinct bucket id written
+    // by its own task (`part-<task>-…`)
+    def assertOneFilePerBucket(table: String, path: String): Unit = {
+      val files = dataFiles(path).toSeq
+      val ids = files.map(f =>
+        BucketingUtils.getBucketId(f).getOrElse(fail(s"no bucket id: $f")))
+      val nonEmpty = spark.table(table)
+        .select(pmod(hash(col("token")), lit(4))).distinct()
+        .as[Int].collect().toSet
+      assert(ids.distinct.size == ids.size, s"two files in one bucket: $ids")
+      assert(ids.toSet == nonEmpty)
+      val tasks = files.map(_.split('-')(1))
+      assert(tasks.distinct.size == tasks.size, s"one task, many buckets: $files")
+    }
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      FtsOps.writeIndex(docs.filter(col("doc_id") % 2 === 0), "doc_id",
+        "text", tables(0), s"$dir/inc", buckets = 4)
+      assertOneFilePerBucket(tables(0), s"$dir/inc")
+      val built = dataFiles(s"$dir/inc")
+      FtsOps.writeIndex(docs.filter(col("doc_id") % 2 =!= 0), "doc_id",
+        "text", tables(0), s"$dir/inc", buckets = 4,
+        mode = SaveMode.Append)
+      val appended = dataFiles(s"$dir/inc")
+      assert(built.subsetOf(appended))
+      assert(appended.size > built.size && appended.size - built.size <= 4)
+
+      FtsOps.writeIndex(docs, "doc_id", "text", tables(1), s"$dir/full",
+        buckets = 4)
+      assertOneFilePerBucket(tables(1), s"$dir/full")
+      val n = docs.agg(count(lit(1)).as("n_docs"))
+      Seq(Seq("window"), Seq("dup", "window")).foreach { terms =>
+        val Seq(inc, full) = tables.map(t => FtsOps.searchIndexed(spark, t,
+          "doc_id", terms, 50).collect().toSeq)
+        assert(inc.nonEmpty && inc == full, terms)
+        val Seq(incR, fullR) = tables.map(t => FtsOps.searchRankedIndexed(
+          spark, t, n, "doc_id", terms, 50).collect().toSeq)
+        assert(incR.nonEmpty && incR == fullR, terms)
+      }
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("batch bm25: one shared plan equals per-query search, per query") {
