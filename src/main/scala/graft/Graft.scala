@@ -42,13 +42,17 @@ final class Graft(spark: SparkSession, tableDir: String) {
     */
   def setup(adapters: Seq[Adapter]): Seq[ComplianceCheck] = {
     val (_, checks) = pipeline.compliantAdapters(adapters)
-    import spark.implicits._
-    Catalog.append(checks.toDS().toDF(), pipeline.checksPath)
+    pipeline.appendChecks(checks)
     checks
   }
 
   /** `collect` — gate, discover, dedup-append
     * (ethical_crawler.py:1157–1203). Returns new-record count.
+    *
+    * Three Spark jobs into an existing catalog: the checks append, one
+    * key probe of the batch's keys, and the write of the new rows as
+    * one file per `source_name` it touches. No checks or nothing new
+    * skips the matching write.
     */
   def collect(adapters: Seq[Adapter]): Long =
     pipeline.collectAll(adapters)._1
@@ -207,10 +211,12 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * (ethical_crawler.py:1157–1203) running as a stream: tail a
     * landing directory of DataRecord parquet drops and dedup-append
     * each micro-batch into the records table
-    * ([[streaming.StreamingOps.dedupAppendSink]]). First write per
-    * (source_name, record_id) wins — within a batch by `ingested_at`
-    * — and a replayed batch appends nothing, so at-least-once file
-    * delivery becomes exactly-once-per-key in the table.
+    * ([[streaming.StreamingOps.dedupAppendSink]]) in the same
+    * `source_name` layout [[collect]] writes, so either verb sees the
+    * other's rows. First write per (source_name, record_id) wins —
+    * within a batch by `ingested_at` — and a replayed batch appends
+    * nothing, so at-least-once file delivery becomes
+    * exactly-once-per-key in the table.
     */
   def collectStream(landingDir: String, checkpointDir: String): Unit = {
     val schema =
@@ -219,7 +225,8 @@ final class Graft(spark: SparkSession, tableDir: String) {
       .option("maxFilesPerTrigger", "1").parquet(landingDir)
     streaming.StreamingOps.dedupAppendSink(stream, spark,
       pipeline.recordsPath, keys = Seq("source_name", "record_id"),
-      batchOrder = "ingested_at", checkpointDir)
+      batchOrder = "ingested_at", checkpointDir,
+      partitionCols = Seq("source_name"))
   }
 
   private def versionedPath: String = tableDir + "/records_versioned"

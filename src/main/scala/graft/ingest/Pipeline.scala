@@ -1,23 +1,27 @@
 package graft.ingest
 
 import graft.Catalog
-import graft.operators.ReferenceOps
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{lit, monotonically_increasing_id}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The `collect` verb end-to-end (ethical_crawler.py:938–966 + CLI
   * :1157–1203): compliance-gate each registered adapter (R2,
   * :942–948), discover records over HTTP (driver-side — polite
   * crawling is inherently serialized per source), then dedup-append
-  * into the partitioned records table (K5 anti-join semantics).
+  * into the partitioned records table (K5 first-write-wins).
   *
   * Scale shape: the HTTP fetch is driver-side BY DESIGN (rate limits
-  * are per-source and global); everything after `createDataset` is
-  * distributed — only the NEW rows are ever written (append of the
-  * anti-join result; the existing table is never rewritten), and the
-  * table is partitioned by `source_name` so the anti-join and every
-  * downstream equality filter prune partitions.
+  * are per-source and global), so a collect batch is one discovery
+  * response already on the driver (≤ 5000 items, ~2 MB). The table
+  * side stays distributed: one key probe scans only the batch's
+  * `source_name` partitions and the two key columns, and returns at
+  * most sources × ids keys (|batch| for one source). The set logic — first per key in the batch,
+  * minus the probed keys — is batch-bounded and runs on the driver,
+  * with no shuffle. Only the NEW rows are written (the existing table
+  * is never rewritten), by one writer task: a collect adds one file
+  * per `source_name` partition it touches, so later reads, probes and
+  * index appends open one file per collect, not one per core.
   *
   * Read rule: each table resolves to one relation per table version
   * ([[Catalog.resolved]]). Re-reading an unchanged table is free — the
@@ -39,9 +43,13 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     spark.read.schema(Pipeline.RecordsSchema)
       .option("basePath", recordsPath).parquet(files: _*)
 
-  /** `compliance_checks` at its current version. */
+  /** `compliance_checks` at its current version; empty before the
+    * first check is written.
+    */
   def complianceChecks: DataFrame =
-    Catalog.resolved(spark, checksPath, Some(Pipeline.ChecksSchema))
+    if (Catalog.tableExists(spark, checksPath))
+      Catalog.resolved(spark, checksPath, Some(Pipeline.ChecksSchema))
+    else Seq.empty[ComplianceCheck].toDF()
 
   /** R2 — compliance gate: sources whose latest check carries issues
     * are skipped (ethical_crawler.py:942–948).
@@ -53,51 +61,53 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
       checks.map(_._2))
   }
 
+  /** K4 — append checks to the `compliance_checks` audit table; no
+    * checks, no write.
+    */
+  def appendChecks(checks: Seq[ComplianceCheck]): Unit =
+    if (checks.nonEmpty) Catalog.append(checks.toDS().toDF(), checksPath)
+
   /** Full collect: gate → persist checks (K4 append-only audit table)
     * → discover → dedup-append. Returns (new records, checks run).
     */
   def collectAll(adapters: Seq[Adapter]): (Long, Seq[ComplianceCheck]) = {
     val (ok, checks) = compliantAdapters(adapters)
-    Catalog.append(checks.toDS().toDF(), checksPath)
+    appendChecks(checks)
     val discovered = ok.flatMap(_.discover())
     (appendRecords(discovered), checks)
   }
 
   /** K5 — dedup append of a batch into `data_records`: existing rows
     * win; within the batch the first per `(source_name, record_id)`
-    * wins. Returns the number of genuinely new rows written.
+    * wins, in arrival order (ethical_crawler.py:914's row loop).
+    * Returns the number of genuinely new rows written.
     */
   def appendRecords(records: Seq[DataRecord]): Long = {
-    if (records.isEmpty) return 0L
-    // Arrival index pins within-batch first-write-wins to the
-    // reference's iteration order (ethical_crawler.py:914's row loop);
-    // ordering the dedup window by the key itself would tie on
-    // duplicates and pick nondeterministically.
-    val incoming = spark.createDataset(records).toDF()
-      .withColumn("__batch_idx",
-        monotonically_increasing_id())
-    val existing: DataFrame =
-      if (Catalog.tableExists(spark, recordsPath))
-        dataRecords
-          .select(incoming.columns.filterNot(_ == "__batch_idx")
-            .toIndexedSeq.head,
-            incoming.columns.filterNot(_ == "__batch_idx")
-              .toIndexedSeq.tail: _*)
-          .withColumn("__batch_idx", lit(-1L))
-      else incoming.limit(0)
-    val newRows = ReferenceOps.newRowsOnly(
-      existing,
-      incoming,
-      keys = Seq("source_name", "record_id"),
-      batchOrder = "__batch_idx")
-      .drop("__batch_idx")
-      .cache()
-    val n = newRows.count()
-    if (n > 0)
-      Catalog.appendPartitioned(newRows, recordsPath, Seq("source_name"))
-    newRows.unpersist()
-    n
+    val batch = records.distinctBy(r => (r.source_name, r.record_id))
+    val fresh =
+      if (batch.isEmpty || !Catalog.tableExists(spark, recordsPath)) batch
+      else {
+        val seen = storedKeys(batch)
+        batch.filterNot(r => seen((r.source_name, r.record_id)))
+      }
+    if (fresh.nonEmpty)
+      Catalog.appendPartitioned(spark.createDataset(fresh).toDF().coalesce(1),
+        recordsPath, Seq("source_name"))
+    fresh.size.toLong
   }
+
+  /** Stored keys that may be in `batch`: one scan pruned to the
+    * batch's `source_name` partitions and the two key columns. Its
+    * IN×IN filter admits pairs outside the batch (sources × ids, so
+    * |batch| pairs for a one-source batch), hence the caller matches
+    * exact pairs.
+    */
+  private def storedKeys(batch: Seq[DataRecord]): Set[(String, String)] =
+    dataRecords
+      .where(col("source_name").isin(batch.map(_.source_name).distinct: _*) &&
+        col("record_id").isin(batch.map(_.record_id).distinct: _*))
+      .select("source_name", "record_id").as[(String, String)]
+      .collect().toSet
 
   /** L6 — per-dataset refresh, last-write-wins upsert: refreshed rows
     * REPLACE existing rows with the same key. Implemented as

@@ -307,21 +307,27 @@ object StreamingOps {
     * the state store — the anti-join probe is a shuffle of batch-size
     * vs table-key-size per trigger (at 100 TB: partition the table on
     * the key and prune, or keep a key index; the semantics stay).
+    * Rows land in the table's `partitionCols` layout
+    * ([[graft.Catalog.appendPartitioned]]): a partitioned reader skips
+    * files outside the partition directories, so a flat append into a
+    * partitioned table would hide rows.
     */
   def dedupAppendSink(stream: DataFrame, spark: SparkSession,
       path: String, keys: Seq[String], batchOrder: String,
-      checkpointDir: String): Unit = {
+      checkpointDir: String, partitionCols: Seq[String] = Nil): Unit = {
     val q = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
+        // the batch's schema pins the partition columns' types, which
+        // inference from directory names could change
         val existing =
           if (graft.Catalog.tableExists(spark, path))
-            graft.Catalog.load(spark, path)
+            spark.read.schema(batch.schema).parquet(path)
           else batch.limit(0)
-        graft.Catalog.append(
+        graft.Catalog.appendPartitioned(
           graft.operators.ReferenceOps.newRowsOnly(
             existing, batch, keys, batchOrder),
-          path)
+          path, partitionCols)
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -192,6 +192,55 @@ class GraftSpec extends SparkSpec {
     intercept[IllegalArgumentException](g.analyticsMaterialized("nope"))
   }
 
+  /** The parquet data files under `path`. */
+  def dataFiles(path: String): Seq[String] =
+    Catalog.files(spark, path).map(_.getPath.toString)
+      .filter(_.endsWith(".parquet"))
+
+  test("collect: 3 jobs into an existing catalog, one file per source " +
+      "partition, nothing written for an empty or repeated batch") {
+    val dir = tmpDir("graftjobs")
+    val recordsDir = dir + "/data_records"
+    val g = new Graft(spark, dir)
+    val first = nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20))
+
+    // no adapter, nothing to check or write: no job, no checks file
+    assert(jobsLaunchedBy(assert(g.collect(Seq()) == 0)) == 0)
+    assert(dataFiles(dir).isEmpty)
+
+    // fresh directory: checks append + write
+    assert(jobsLaunchedBy(assert(g.collect(Seq(first)) == 2)) == 2)
+    assert(dataFiles(recordsDir).size == 1)
+
+    // existing catalog: checks append + key probe + write
+    val second = nycFixture(item("bb-2", "Bike Counts", 20),
+      item("cc-3", "Bike Lanes", 5), item("dd-4", "Signals", 7))
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 2)) == 3)
+    assert(dataFiles(recordsDir).size == 2)
+
+    // a batch already seen: checks append + key probe, no data file
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 0)) == 2)
+    assert(dataFiles(recordsDir).size == 2)
+    assert(g.records.count() == 4)
+
+    // a batch across two sources: one new file under each partition
+    def rec(src: String, id: String): DataRecord =
+      DataRecord(src, id, s"title $id", None, "dataset",
+        s"https://example.org/$id", "{}", None, Nil, None,
+        java.sql.Timestamp.from(clock.instant()), None, None, None)
+    def filesPerSource: Map[String, Int] = dataFiles(recordsDir)
+      .groupBy(f => f.split("/").find(_.startsWith("source_name=")).get)
+      .map { case (k, v) => k -> v.size }
+    val before = filesPerSource
+    assert(new Pipeline(spark, dir).appendRecords(Seq(
+      rec("NYC Open Data", "ee-5"), rec("Other Source", "x-1"),
+      rec("NYC Open Data", "ff-6"))) == 3)
+    val added = filesPerSource.map { case (k, n) =>
+      k -> (n - before.getOrElse(k, 0)) }
+    assert(added.size == 2 && added.values.forall(_ == 1), added)
+  }
+
   test("a write through another Graft is seen by the next read") {
     val dir = tmpDir("graftshared")
     val first = new Graft(spark, dir)
@@ -321,6 +370,40 @@ class GraftSpec extends SparkSpec {
     val ranked = g.searchFtsRanked(Seq("about", "second"), 5).collect()
     assert(ranked.nonEmpty && ranked.head.getString(0) == "b",
       s"rare-term record must rank first, got ${ranked.toSeq}")
+  }
+
+  test("collect and collectStream share one table layout, in either order") {
+    import spark.implicits._
+    def rec(id: String): DataRecord =
+      DataRecord("Streamed Source", id, s"Streamed $id", None, "dataset",
+        s"https://example.org/$id", "{}", None, Nil, None,
+        new java.sql.Timestamp(1000L), None, None, None)
+    def stream(g: Graft, dir: String, ids: String*): Unit = {
+      ids.map(rec).toDS.toDF.coalesce(1).write.parquet(dir + "/landing/b0")
+      g.collectStream(dir + "/landing/*", dir + "/cp")
+    }
+    def keys(g: Graft): Set[(String, String)] =
+      g.records.select("source_name", "record_id").as[(String, String)]
+        .collect().toSet
+
+    val d1 = tmpDir("layoutcollectfirst")
+    val g1 = new Graft(spark, d1 + "/catalog")
+    assert(g1.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    stream(g1, d1, "s-1", "s-2")
+    assert(keys(g1) == Set("NYC Open Data" -> "aa-1",
+      "NYC Open Data" -> "bb-2", "Streamed Source" -> "s-1",
+      "Streamed Source" -> "s-2"))
+    assert(g1.records.count() == 4)
+
+    val d2 = tmpDir("layoutstreamfirst")
+    val g2 = new Graft(spark, d2 + "/catalog")
+    stream(g2, d2, "s-1", "s-2")
+    assert(g2.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10)))) == 1)
+    assert(keys(g2) == Set("NYC Open Data" -> "aa-1",
+      "Streamed Source" -> "s-1", "Streamed Source" -> "s-2"))
+    assert(g2.records.count() == 3)
+    assert(g2.status().count() == 2)
   }
 
   test("refreshVersioned: upsert commits versions, time travel audits") {

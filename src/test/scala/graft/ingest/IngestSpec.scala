@@ -309,6 +309,40 @@ class IngestSpec extends SparkSpec {
     assert(p.records.count() == 10)
   }
 
+  test("pipeline append: the key probe matches (source, id) pairs, not " +
+      "its IN×IN superset") {
+    val p = new Pipeline(spark, tmpDir("probe"))
+    assert(p.appendRecords(Seq(record("s2", "a", "stored"))) == 1)
+    // the probe's filter admits (s2, a); neither batch key is that pair
+    assert(p.appendRecords(Seq(
+      record("s1", "a", "new-source"), record("s2", "b", "new-id"))) == 2)
+    assert(p.records.collect().map(r => (r.source_name, r.record_id, r.title))
+      .toSet == Set(("s2", "a", "stored"), ("s1", "a", "new-source"),
+        ("s2", "b", "new-id")))
+  }
+
+  test("collect rerun after a truncated payload and a 429 ends as one " +
+      "clean collect") {
+    val base = "https://data.cityofnewyork.us"
+    val items = (1 to 6).map(i => s"""{"id": "id-$i", "name": "Title $i"}""")
+    def served(status: Int, body: String) = nyc(new FixtureFetcher(Map(
+      s"$base/robots.txt" -> (404, ""),
+      s"$base/api/views/metadata/v1?limit=5000&offset=0" -> (status, body))))
+    def payload(xs: Seq[String]) = xs.mkString("[", ",", "]")
+    def keys(p: Pipeline) = p.records.collect()
+      .map(r => (r.source_name, r.record_id, r.title)).toSet
+
+    val clean = new Pipeline(spark, tmpDir("clean"))
+    assert(clean.collectAll(Seq(served(200, payload(items))))._1 == 6)
+
+    val rerun = new Pipeline(spark, tmpDir("rerun"))
+    assert(rerun.collectAll(Seq(served(200, payload(items.take(3)))))._1 == 3)
+    assert(rerun.collectAll(Seq(served(429, "")))._1 == 0)
+    assert(rerun.collectAll(Seq(served(200, payload(items))))._1 == 3)
+    assert(keys(rerun) == keys(clean))
+    assert(rerun.records.count() == 6)
+  }
+
   test("pipeline upsert: last write wins (L6, :416–451)") {
     val p = new Pipeline(spark, tmpDir("upsert"))
     p.appendRecords(Seq(record("s", "a", "old"), record("s", "b", "keep")))
