@@ -1,8 +1,20 @@
 package graft
 
+import java.io.IOException
+import java.util.UUID
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
+import scala.reflect.runtime.universe.TypeTag
 
 /** Table layer (K6/K7/S2 — ethical_crawler.py:817–889, :100–137):
   * existence probe, overwrite/append, partitioned layout. Tables are
@@ -67,6 +79,62 @@ object Catalog {
   /** K4/K6 append (`INSERT INTO ... SELECT`, ethical_crawler.py:123). */
   def append(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Append).parquet(path)
+
+  /** K4/K5 append of rows already on the driver, with no Spark job:
+    * the same files a `toDS()` + [[appendPartitioned]] write of `rows`
+    * through one task would leave, written by Spark's own parquet
+    * writer on the driver. Rows go through the `ExpressionEncoder[T]`
+    * serializer and the session's [[ParquetFileFormat]] writer
+    * (schema conversion, row metadata, timestamp type and codec from
+    * the session conf), one file per partition-value group under its
+    * `col=value` directory. Each file is written under a `_`-prefixed
+    * name, which readers and file listings skip, and renamed to a
+    * `part-` name once every group is written, so a crash leaves no
+    * partial file in the table. Last, `refreshByPath` re-resolves
+    * cached plans over `path`, as Spark's insert command does. For a
+    * batch bounded by driver memory; a DataFrame keeps Spark's writer.
+    */
+  def appendRows[T <: Product : TypeTag](spark: SparkSession, rows: Seq[T],
+      path: String, partitionCols: Seq[String] = Nil): Unit =
+    if (rows.nonEmpty) SQLConf.withExistingConf(spark.sessionState.conf) {
+      val encoder = ExpressionEncoder[T]()
+      val toRow = encoder.createSerializer()
+      val (parts, data) = encoder.schema.fields.zipWithIndex
+        .partition(f => partitionCols.contains(f._1.name))
+      val dataSchema = StructType(data.map(_._1))
+      val project = UnsafeProjection.create(data.toSeq.map { case (f, i) =>
+        BoundReference(i, f.dataType, f.nullable) })
+      // each partition column's `col=value` directory, as Spark names it
+      val partDirs = parts.toSeq.map { case (f, i) =>
+        val value = Cast(BoundReference(i, f.dataType, f.nullable), StringType,
+          Some(spark.sessionState.conf.sessionLocalTimeZone))
+        (row: InternalRow) => ExternalCatalogUtils.getPartitionPathString(
+          f.name, Option(value.eval(row)).map(_.toString).orNull)
+      }
+      val groups = rows.map(r => toRow(r).copy())
+        .groupBy(row => partDirs.map(_(row)).mkString("/")).toSeq.sortBy(_._1)
+
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = new ParquetFileFormat()
+        .prepareWrite(spark, job, Map.empty, dataSchema)
+      val conf = job.getConfiguration
+      val context = new TaskAttemptContextImpl(conf, new TaskAttemptID())
+      val name = s"part-00000-${UUID.randomUUID()}-c000" +
+        factory.getFileExtension(context)
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      val written = groups.map { case (dir, group) =>
+        val parent = if (dir.isEmpty) root else new Path(root, dir)
+        val tmp = new Path(parent, s"_tmp-$name")
+        val writer = factory.newInstance(tmp.toString, dataSchema, context)
+        try group.foreach(r => writer.write(project(r))) finally writer.close()
+        tmp -> new Path(parent, name)
+      }
+      written.foreach { case (tmp, dst) =>
+        if (!fs.rename(tmp, dst)) throw new IOException(s"rename $tmp → $dst failed")
+      }
+      spark.catalog.refreshByPath(path)
+    }
 
   /** K7 — partitioned table layout. `partitionBy("source_name")`
     * replaces `idx_source_name` (ethical_crawler.py:884): an equality

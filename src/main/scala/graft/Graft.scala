@@ -20,7 +20,13 @@ import scala.collection.immutable.ListMap
   * version. A verb takes [[records]] once; calling it again at an
   * unchanged version is free (no listing job, no re-analysis), and any
   * write — from this instance or another over the same directory —
-  * invalidates it, so the next read sees the write.
+  * invalidates it, so the next read sees the write. Before the first
+  * collect, the read verbs answer over an empty records table.
+  *
+  * Writes of rows already on the driver (`setup`'s checks, `collect`'s
+  * new records) are written there with Spark's parquet writer and run
+  * no Spark job; writes of DataFrames (`collectStream`, upserts,
+  * backfills, compaction) keep Spark's distributed writer.
   *
   * A serve write is `collect` then [[indexFts]]. The index update
   * costs in proportion to the rows the collect added: it tokenizes
@@ -49,10 +55,11 @@ final class Graft(spark: SparkSession, tableDir: String) {
   /** `collect` — gate, discover, dedup-append
     * (ethical_crawler.py:1157–1203). Returns new-record count.
     *
-    * Three Spark jobs into an existing catalog: the checks append, one
-    * key probe of the batch's keys, and the write of the new rows as
-    * one file per `source_name` it touches. No checks or nothing new
-    * skips the matching write.
+    * One Spark job into an existing catalog: the key probe of the
+    * batch's keys. The checks append and the write of the new rows, one
+    * file per `source_name` it touches, run on the driver
+    * ([[Catalog.appendRows]]), so a collect into a fresh directory runs
+    * none. No checks or nothing new skips the matching write.
     */
   def collect(adapters: Seq[Adapter]): Long =
     pipeline.collectAll(adapters)._1

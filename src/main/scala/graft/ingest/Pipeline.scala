@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.Catalog
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -19,9 +19,13 @@ import org.apache.spark.sql.types.StructType
   * most sources × ids keys (|batch| for one source). The set logic — first per key in the batch,
   * minus the probed keys — is batch-bounded and runs on the driver,
   * with no shuffle. Only the NEW rows are written (the existing table
-  * is never rewritten), by one writer task: a collect adds one file
+  * is never rewritten), and they are already on the driver, so the
+  * driver writes them with Spark's parquet writer ([[Catalog.appendRows]])
+  * instead of shipping them to a writer task: a collect adds one file
   * per `source_name` partition it touches, so later reads, probes and
-  * index appends open one file per collect, not one per core.
+  * index appends open one file per collect, not one per core. The
+  * compliance checks are written the same way, so the key probe is a
+  * collect's only Spark job.
   *
   * Read rule: each table resolves to one relation per table version
   * ([[Catalog.resolved]]). Re-reading an unchanged table is free — the
@@ -34,9 +38,13 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
   def recordsPath: String = s"$tableDir/data_records"
   def checksPath: String = s"$tableDir/compliance_checks"
 
-  /** `data_records` at its current version. */
+  /** `data_records` at its current version; empty before the first
+    * record is written.
+    */
   def dataRecords: DataFrame =
-    Catalog.resolved(spark, recordsPath, Some(Pipeline.RecordsSchema))
+    if (Catalog.tableExists(spark, recordsPath))
+      Catalog.resolved(spark, recordsPath, Some(Pipeline.RecordsSchema))
+    else spark.createDataFrame(java.util.List.of[Row](), Pipeline.RecordsSchema)
 
   /** The given `data_records` data files, read as the table. */
   def recordsFiles(files: Seq[String]): DataFrame =
@@ -65,7 +73,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     * checks, no write.
     */
   def appendChecks(checks: Seq[ComplianceCheck]): Unit =
-    if (checks.nonEmpty) Catalog.append(checks.toDS().toDF(), checksPath)
+    Catalog.appendRows(spark, checks, checksPath)
 
   /** Full collect: gate → persist checks (K4 append-only audit table)
     * → discover → dedup-append. Returns (new records, checks run).
@@ -90,9 +98,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
         val seen = storedKeys(batch)
         batch.filterNot(r => seen((r.source_name, r.record_id)))
       }
-    if (fresh.nonEmpty)
-      Catalog.appendPartitioned(spark.createDataset(fresh).toDF().coalesce(1),
-        recordsPath, Seq("source_name"))
+    Catalog.appendRows(spark, fresh, recordsPath, Seq("source_name"))
     fresh.size.toLong
   }
 
@@ -142,12 +148,14 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
 object Pipeline {
   /** `data_records` as a read resolves it: the [[DataRecord]] fields
     * with the `source_name` partition column last (the order inference
-    * gives), so a resolve needs no schema-inference job.
+    * gives), so a resolve needs no schema-inference job. The DDL round
+    * trip makes array elements nullable (`embedding`'s floats), as a
+    * file read does, so the empty table has the written one's schema.
     */
   private val RecordsSchema: StructType = {
     val fields = Encoders.product[DataRecord].schema.fields
-    StructType(fields.filterNot(_.name == "source_name") ++
-      fields.filter(_.name == "source_name"))
+    StructType.fromDDL(StructType(fields.filterNot(_.name == "source_name") ++
+      fields.filter(_.name == "source_name")).toDDL)
   }
 
   private val ChecksSchema: StructType = Encoders.product[ComplianceCheck].schema

@@ -1,0 +1,127 @@
+package graft
+
+import graft.ingest.{ComplianceCheck, DataRecord}
+import java.sql.Timestamp
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
+
+/** [[Catalog.appendRows]], the driver-side append, against Spark's own
+  * writer ([[Catalog.appendPartitioned]]) over the same rows.
+  */
+class CatalogSpec extends SparkSpec {
+  import spark.implicits._
+
+  val records: Seq[DataRecord] = Seq(
+    DataRecord("NYC Open Data", "aa-1", "Traffic Volume", Some("about traffic"),
+      "dataset", "https://example.org/aa-1", """{"views": 10}""", None,
+      Seq("traffic", "counts"), Some(Timestamp.valueOf("2024-06-10 06:13:20")),
+      Timestamp.valueOf("2026-01-01 00:00:00.123456"), Some("csv"), Some(42L),
+      Some("public"), Some(Seq(0.5f, -1.25f))),
+    DataRecord("NYC Open Data", "bb-2", "Bike Counts", None, "dataset",
+      "https://example.org/bb-2", "{}", Some("summary"), Nil, None,
+      Timestamp.valueOf("2026-01-01 00:00:01"), None, None, None),
+    DataRecord("Other/Source=1", "x-1", "Escaped", None, "api",
+      "https://example.org/x-1", "{}", None, Seq("a"), None,
+      Timestamp.valueOf("2026-01-02 00:00:00"), None, Some(7L), None))
+
+  val checks: Seq[ComplianceCheck] = Seq(
+    ComplianceCheck("NYC Open Data", robots_txt_compliant = true,
+      rate_limit_compliant = true, terms_compliant = false,
+      api_key_valid = true, Timestamp.valueOf("2026-01-01 00:00:00"),
+      Seq("no terms"), Nil))
+
+  /** Each parquet file's footer under `dir`, keyed on its directory
+    * relative to `dir`: (schema, key-value metadata, column codecs).
+    */
+  def footers(dir: String): Map[String, (String, Map[String, String], Seq[String])] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir).toUri.getPath
+    Catalog.files(spark, dir).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
+      .map { p =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        try {
+          val footer = reader.getFooter
+          val meta = footer.getFileMetaData
+          p.getParent.toUri.getPath.stripPrefix(root) ->
+            ((meta.getSchema.toString, meta.getKeyValueMetaData.asScala.toMap,
+              footer.getBlocks.asScala.toSeq.flatMap(
+                _.getColumns.asScala.map(_.getCodec.toString))))
+        } finally reader.close()
+      }.toMap
+  }
+
+  def withConf(kv: (String, String)*)(body: => Unit): Unit = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The driver write and Spark's writer leave equal tables; returns
+    * the driver write's footers.
+    */
+  def assertSameTable[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      rows: Seq[T], partitionCols: Seq[String])(
+      toDf: Seq[T] => org.apache.spark.sql.DataFrame): Seq[(String, Seq[String])] = {
+    val viaSpark = tmpDir("catalogspark") + "/t"
+    val viaDriver = tmpDir("catalogdriver") + "/t"
+    Catalog.appendPartitioned(toDf(rows).coalesce(1), viaSpark, partitionCols)
+    Catalog.appendRows(spark, rows, viaDriver, partitionCols)
+    val (expected, actual) = (footers(viaSpark), footers(viaDriver))
+    assert(expected.nonEmpty && actual.keySet == expected.keySet)
+    // Spark's writer is the reference
+    expected.foreach { case (dir, (schema, kv, codecs)) =>
+      val (s, k, c) = actual(dir)
+      assert(s == schema, dir)
+      assert(k == kv, dir)
+      assert(k.contains("org.apache.spark.sql.parquet.row.metadata"), dir)
+      assert(c == codecs, dir)
+    }
+    val (a, b) = (spark.read.parquet(viaSpark), spark.read.parquet(viaDriver))
+    assert(b.schema == a.schema)
+    assert(b.collect().toSeq.map(_.toString).sorted ==
+      a.collect().toSeq.map(_.toString).sorted)
+    actual.values.toSeq.map { case (schema, _, codecs) => schema -> codecs }
+  }
+
+  /** Both tables equal Spark's; returns the driver write's footers. */
+  def assertBothTables(): Seq[(String, Seq[String])] = {
+    val written = assertSameTable(records, Seq("source_name"))(_.toDS().toDF()) ++
+      assertSameTable(checks, Nil)(_.toDS().toDF())
+    assert(written.size == 3) // two source partitions and the checks file
+    written
+  }
+
+  test("appendRows writes the files Spark's writer writes, default conf") {
+    val written = assertBothTables()
+    assert(written.forall(_._1.contains("int96 ")))
+    assert(written.forall(_._2.forall(_ == "SNAPPY")))
+  }
+
+  test("appendRows writes the files Spark's writer writes, micros + zstd") {
+    withConf("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+        "spark.sql.parquet.compression.codec" -> "zstd") {
+      val written = assertBothTables()
+      assert(written.forall(_._1.contains("TIMESTAMP(MICROS,true)")))
+      assert(written.forall(_._2.forall(_ == "ZSTD")))
+    }
+  }
+
+  test("appendRows: no rows, no file; each call adds one file per group") {
+    val dir = tmpDir("catalogappend") + "/t"
+    Catalog.appendRows(spark, Seq.empty[DataRecord], dir, Seq("source_name"))
+    assert(!Catalog.tableExists(spark, dir))
+    Catalog.appendRows(spark, records, dir, Seq("source_name"))
+    Catalog.appendRows(spark, records.take(1), dir, Seq("source_name"))
+    val names = Catalog.files(spark, dir).map(_.getPath.getName)
+      .filter(_.endsWith(".parquet"))
+    assert(names.size == 3 && names.forall(_.startsWith("part-00000-")), names)
+    assert(spark.read.parquet(dir).count() == 4)
+  }
+}

@@ -197,8 +197,9 @@ class GraftSpec extends SparkSpec {
     Catalog.files(spark, path).map(_.getPath.toString)
       .filter(_.endsWith(".parquet"))
 
-  test("collect: 3 jobs into an existing catalog, one file per source " +
-      "partition, nothing written for an empty or repeated batch") {
+  test("collect: 1 job (the key probe) into an existing catalog, none " +
+      "into a fresh one; one file per source partition, nothing written " +
+      "for an empty or repeated batch") {
     val dir = tmpDir("graftjobs")
     val recordsDir = dir + "/data_records"
     val g = new Graft(spark, dir)
@@ -209,19 +210,20 @@ class GraftSpec extends SparkSpec {
     assert(jobsLaunchedBy(assert(g.collect(Seq()) == 0)) == 0)
     assert(dataFiles(dir).isEmpty)
 
-    // fresh directory: checks append + write
-    assert(jobsLaunchedBy(assert(g.collect(Seq(first)) == 2)) == 2)
+    // fresh directory: the checks append and the write run on the driver
+    assert(jobsLaunchedBy(assert(g.collect(Seq(first)) == 2)) == 0)
     assert(dataFiles(recordsDir).size == 1)
 
-    // existing catalog: checks append + key probe + write
+    // existing catalog: the key probe is the one job
     val second = nycFixture(item("bb-2", "Bike Counts", 20),
       item("cc-3", "Bike Lanes", 5), item("dd-4", "Signals", 7))
-    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 2)) == 3)
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 2)) == 1)
     assert(dataFiles(recordsDir).size == 2)
 
-    // a batch already seen: checks append + key probe, no data file
-    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 0)) == 2)
+    // a batch already seen: the key probe, no data file
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 0)) == 1)
     assert(dataFiles(recordsDir).size == 2)
+    assert(jobsLaunchedBy(assert(g.setup(Seq(first)).size == 1)) == 0)
     assert(g.records.count() == 4)
 
     // a batch across two sources: one new file under each partition
@@ -239,6 +241,99 @@ class GraftSpec extends SparkSpec {
     val added = filesPerSource.map { case (k, n) =>
       k -> (n - before.getOrElse(k, 0)) }
     assert(added.size == 2 && added.values.forall(_ == 1), added)
+  }
+
+  test("read verbs on a set-up catalog with no records answer empty") {
+    val dir = tmpDir("graftempty")
+    val g = new Graft(spark, dir)
+    assert(g.setup(Seq(nycFixture())).size == 1)
+
+    assert(g.records.count() == 0)
+    val emptySchema = g.records.schema
+    assert(g.search(Some("traffic")).count() == 0)
+    assert(g.search(None).count() == 0)
+    assert(g.searchFts(Seq("bike")).count() == 0)
+    assert(g.searchFtsRanked(Seq("bike")).count() == 0)
+    assert(g.status().count() == 0)
+    g.analytics().foreach { case (name, v) => assert(v.count() == 0, name) }
+    assert(g.analyticsMaterialized("type_counts").count() == 0)
+    assert(g.similar("aa-1").count() == 0)
+    val out = dir + "/export"
+    assert(g.export(None, "parquet", out).count() == 0)
+    assert(spark.read.parquet(out).count() == 0)
+
+    // the first collect then serves every verb
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10)))) == 1)
+    assert(g.records.schema == emptySchema)
+    assert(g.search(Some("traffic")).count() == 1)
+    assert(g.status().head.getAs[Long]("n_records") == 1L)
+  }
+
+  test("a leftover temp file of an interrupted driver write is invisible, " +
+      "and the next collect runs as on a clean catalog") {
+    import org.apache.hadoop.fs.Path
+    val batches = Seq(
+      Seq(item("aa-1", "Traffic Volume", 10), item("bb-2", "Bike Counts", 20)),
+      Seq(item("bb-2", "Bike Counts", 20), item("cc-3", "Bike Lanes", 5)))
+    def collect(g: Graft, batch: Seq[String]): Long = g.collect(Seq(nycFixture(batch: _*)))
+    def rows(g: Graft): Seq[String] = g.records.collect().map(_.toString).toSeq.sorted
+    val clean = new Graft(spark, tmpDir("graftclean"))
+    val counts = batches.map(collect(clean, _))
+    assert(counts == Seq(2L, 1L))
+
+    // a complete data file holding the second batch's new row, as the
+    // driver write leaves it when interrupted before its rename
+    val donor = tmpDir("graftdonor")
+    new Pipeline(spark, donor).appendRecords(
+      clean.records.where("record_id = 'cc-3'").as[DataRecord](
+        org.apache.spark.sql.Encoders.product[DataRecord]).collect().toSeq)
+    val donorFile = dataFiles(donor).head
+    val fs = new Path(donor).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val future = System.currentTimeMillis() + 3600000L
+    def plant(recordsDir: String): Path = {
+      val dst = new Path(s"$recordsDir/source_name=NYC Open Data",
+        "_tmp-" + new Path(donorFile).getName)
+      fs.mkdirs(dst.getParent)
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, new Path(donorFile), fs,
+        dst, false, spark.sparkContext.hadoopConfiguration))
+      fs.setTimes(dst, future, -1)
+      dst
+    }
+
+    // once beside committed files, once in a table with none yet
+    Seq(true, false).foreach { committedFirst =>
+      val dir = tmpDir("graftcrash")
+      val recordsDir = dir + "/data_records"
+      val g = new Graft(spark, dir)
+      g.setup(Seq(nycFixture()))
+      if (committedFirst) assert(collect(g, batches.head) == counts.head)
+      val planted = plant(recordsDir)
+      assert(g.records.count() == (if (committedFirst) counts.head else 0L))
+      g.indexFts()
+      val lineage = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/fts_index/_graft_fts_lineage")))
+      assert(!lineage.contains("_tmp-"), lineage)
+      assert(Mv.maxMtime(spark, recordsDir) < future)
+      assert(!Mv.filesNewerThan(spark, recordsDir, 0L).exists(_.contains("_tmp-")))
+
+      // the key probe does not see the planted row either
+      val rest = if (committedFirst) batches.tail else batches
+      assert(rest.map(collect(g, _)) == counts.takeRight(rest.size))
+      assert(rows(g) == rows(clean))
+      assert(fs.exists(planted))
+    }
+  }
+
+  test("a collect refreshes a cached records frame, as Spark's writer does") {
+    val g = new Graft(spark, tmpDir("graftcached"))
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    val c = g.records.cache()
+    try {
+      assert(c.count() == 2)
+      assert(g.collect(Seq(nycFixture(item("cc-3", "Bike Lanes", 5)))) == 1)
+      assert(c.count() == 3)
+    } finally c.unpersist()
   }
 
   test("a write through another Graft is seen by the next read") {
