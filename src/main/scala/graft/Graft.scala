@@ -2,7 +2,6 @@ package graft
 
 import graft.ingest.{Adapter, ComplianceCheck, DataRecord, Pipeline}
 import graft.operators.{ExportOps, FtsOps, ReferenceOps}
-import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
@@ -93,10 +92,10 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * shuffle width, one file per bucket per write
     * ([[FtsOps.writeIndex]]).
     *
-    * Incremental rule: the index records its lineage next to it
-    * (`_graft_fts_lineage`) — the stamps of the records files it
-    * covers and its own file stamps after the write. A call appends
-    * the postings of only the records files not covered yet when
+    * Incremental rule: the index records its [[Lineage]] next to it —
+    * the stamps of the records files it covers and its own file stamps
+    * after the write. A call appends the postings of only the records
+    * files not covered yet when
     *  - the index table is registered in this session at the current
     *    width,
     *  - every covered records file is still present and unchanged,
@@ -112,15 +111,14 @@ final class Graft(spark: SparkSession, tableDir: String) {
   def indexFts(): Unit = {
     val buckets = spark.sessionState.conf.numShufflePartitions
     val base = qualified(pipeline.recordsPath)
-    val listed = dataStamps(pipeline.recordsPath)
+    val listed = Lineage.stamps(spark, pipeline.recordsPath)
     def write(docs: DataFrame, mode: SaveMode): Unit =
       FtsOps.writeIndex(ftsDocs(docs), "record_id", "text", ftsTable,
         ftsPath, buckets, mode)
-    val uncovered = readFtsLineage().collect {
-      case (covered, index) if ftsIndexAt(buckets) &&
-          covered.toSet.subsetOf(listed.toSet) &&
-          index == dataStamps(ftsPath) =>
-        listed.filterNot(covered.toSet)
+    val uncovered = Lineage.read(spark, ftsPath).collect {
+      case l if ftsIndexAt(buckets) &&
+          l.valid(listed, Lineage.stamps(spark, ftsPath)) =>
+        l.uncovered(listed)
     }
     val covered = uncovered match {
       case Some(files) if files.isEmpty => None // up to date
@@ -128,16 +126,16 @@ final class Graft(spark: SparkSession, tableDir: String) {
         write(pipeline.recordsFiles(files.map(base + _._1)), SaveMode.Append)
         Some(listed)
       case None =>
-        fs.delete(new Path(ftsPath, Graft.FtsLineageFile), false)
         val r = records
         write(r, SaveMode.Overwrite)
         // the resolved relation may postdate the listing; record it
-        // only when it read exactly the listed files
+        // only when it read exactly the listed files (an unrecorded
+        // build leaves a record whose index files no longer match)
         val read = r.inputFiles.map(f =>
           new Path(java.net.URI.create(f)).toString.stripPrefix(base))
         Some(listed).filter(_.map(_._1).toSet == read.toSet)
     }
-    covered.foreach(writeFtsLineage(_, dataStamps(ftsPath)))
+    covered.foreach(Lineage.write(spark, ftsPath, _))
   }
 
   private def fs = new Path(tableDir)
@@ -146,48 +144,10 @@ final class Graft(spark: SparkSession, tableDir: String) {
   private def qualified(path: String): String =
     fs.makeQualified(new Path(path)).toString
 
-  /** The [[FixtureCache]] stamps of the data files under `path`:
-    * metadata (`_SUCCESS`, the lineage file, `_temporary/`) and hidden
-    * (`.crc`) files are not data.
-    */
-  private def dataStamps(path: String): Seq[FixtureCache.FileStamp] =
-    FixtureCache.fingerprint(spark, path).filterNot(_._1.split('/')
-      .exists(p => p.startsWith("_") || p.startsWith(".")))
-
   private def ftsIndexAt(buckets: Int): Boolean =
     spark.catalog.tableExists(ftsTable) &&
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(ftsTable))
         .bucketSpec.exists(_.numBuckets == buckets)
-
-  /** (covered records files, index files) as last recorded; none when
-    * there is no lineage or a torn write left a line unreadable.
-    */
-  private def readFtsLineage()
-      : Option[(Seq[FixtureCache.FileStamp], Seq[FixtureCache.FileStamp])] = {
-    val p = new Path(ftsPath, Graft.FtsLineageFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
-      scala.util.Try(text.linesIterator.toList.map { line =>
-        val Array(kind, size, mtime, rel) = line.split("\t", 4)
-        kind -> ((rel, size.toLong, mtime.toLong))
-      }).toOption.map { stamps =>
-        def of(kind: String) = stamps.filter(_._1 == kind).map(_._2)
-        (of("records"), of("index"))
-      }
-    }
-  }
-
-  private def writeFtsLineage(covered: Seq[FixtureCache.FileStamp],
-      index: Seq[FixtureCache.FileStamp]): Unit = {
-    def lines(kind: String, stamps: Seq[FixtureCache.FileStamp]) =
-      stamps.map { case (rel, size, mtime) => s"$kind\t$size\t$mtime\t$rel" }
-    val out = fs.create(new Path(ftsPath, Graft.FtsLineageFile), true)
-    try out.write((lines("records", covered) ++ lines("index", index))
-      .mkString("", "\n", "\n").getBytes(UTF_8))
-    finally out.close()
-  }
 
   /** Full-text variant of search over the inverted index (L2 v2):
     * reads the persisted index when [[indexFts]] has built one, else
@@ -463,8 +423,6 @@ final class Graft(spark: SparkSession, tableDir: String) {
 }
 
 object Graft {
-  private val FtsLineageFile = "_graft_fts_lineage"
-
   /** The `analytics` views by name, each a function of the records
     * table; [[Graft.analyticsMaterialized]] builds only the one named.
     */

@@ -1,22 +1,21 @@
 package graft
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized views over path-based tables: a named result cached as
   * parquet next to its sources, refreshed only when a source has
-  * changed since the last build (mtime watermark), with an INCREMENTAL
-  * path for append-only rollups. The reference recomputes its
-  * analytics on every CLI call (ethical_crawler.py:1274–1349); at
-  * 100 TB a standing dashboard query must not re-scan an unchanged
-  * corpus — this is the standard freshness contract (compute on
-  * change, serve from the materialization otherwise).
+  * changed since the last build, with an INCREMENTAL path for
+  * append-only rollups. The reference recomputes its analytics on every
+  * CLI call (ethical_crawler.py:1274–1349); at 100 TB a standing
+  * dashboard query must not re-scan an unchanged corpus — this is the
+  * standard freshness contract (compute on change, serve from the
+  * materialization otherwise).
   *
-  * Freshness is tracked with a watermark FILE (`_graft_mv_watermark`,
-  * the max source-file mtime observed at build time) rather than the
-  * view directory's own mtime: rewrites, compactions and
-  * filesystem-dependent directory-mtime semantics would all make the
-  * latter lie. A transactional table format's snapshot ids subsume
+  * Freshness is a [[Lineage]] record in the view's directory, not a
+  * max mtime nor the directory's own mtime: a view is current while
+  * its record is valid for its sources' data files as listed now and
+  * leaves none uncovered, so an added, deleted or rewritten source file
+  * makes it stale. A transactional table format's snapshot ids subsume
   * this at scale; the contract (compare source version to built-from
   * version) is the same.
   */
@@ -24,72 +23,37 @@ object Mv {
 
   final case class View(path: String, sources: Seq[String])
 
-  private def fsOf(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private val WatermarkFile = "_graft_mv_watermark"
-
-  /** Max data-file modification time under `p` (recursive; 0 if the
-    * path is missing). Underscore-prefixed files (markers, _SUCCESS)
-    * are metadata, not data — excluded so writing the watermark never
-    * advances the watermark.
+  /** The data files of the view's sources, each by its full path, and
+    * the view's record when it is valid for them.
     */
-  def maxMtime(spark: SparkSession, p: String): Long =
-    dataFiles(spark, p).map(_.getModificationTime).foldLeft(0L)(math.max)
-
-  /** Data files under `p` newer than `sinceMtime` — the append-only
-    * delta since the last refresh.
-    */
-  def filesNewerThan(spark: SparkSession, p: String, sinceMtime: Long)
-      : Seq[String] =
-    dataFiles(spark, p).filter(_.getModificationTime > sinceMtime)
-      .map(_.getPath.toString)
-
-  private def dataFiles(spark: SparkSession, p: String) =
-    Catalog.files(spark, p).filterNot(_.getPath.getName.startsWith("_"))
-
-  private def readWatermark(spark: SparkSession, viewPath: String): Long = {
-    val fs = fsOf(spark, viewPath)
-    val wm = new Path(viewPath, WatermarkFile)
-    if (!fs.exists(wm)) 0L
-    else {
-      val in = fs.open(wm)
-      try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-      finally in.close()
-    }
+  private def lineage(spark: SparkSession, view: View)
+      : (Seq[FixtureCache.FileStamp], Option[Lineage]) = {
+    val in = view.sources.flatMap(s => Lineage.stamps(spark, s).map {
+      case (rel, size, mtime) => (s + rel, size, mtime)
+    })
+    (in, Lineage.read(spark, view.path)
+      .filter(_.valid(in, Lineage.stamps(spark, view.path))))
   }
 
-  private def writeWatermark(spark: SparkSession, viewPath: String,
-      mtime: Long): Unit = {
-    val fs = fsOf(spark, viewPath)
-    val out = fs.create(new Path(viewPath, WatermarkFile), true)
-    try out.write(mtime.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+  /** A view is stale when it has never been built, or its source files
+    * or its own files are not the ones its last build recorded.
+    */
+  def isStale(spark: SparkSession, view: View): Boolean = {
+    val (in, record) = lineage(spark, view)
+    !record.exists(_.uncovered(in).isEmpty)
   }
 
-  /** A view is stale when any source data file is newer than the
-    * watermark recorded at its last build (or it has never been built).
-    */
-  def isStale(spark: SparkSession, view: View): Boolean =
-    !Catalog.tableExists(spark, view.path) || {
-      val wm = readWatermark(spark, view.path)
-      view.sources.exists(s => maxMtime(spark, s) > wm)
-    }
-
-  /** Full rebuild: snapshot the source watermark FIRST (a write that
-    * races the build invalidates the view on the next check instead of
-    * being missed), materialize via write-temp-then-swap, record the
-    * watermark.
+  /** Full rebuild: list the sources FIRST (a write that races the build
+    * is left uncovered and makes the view stale on the next check),
+    * materialize via write-temp-then-swap, record the listing.
     */
   def refresh(spark: SparkSession, view: View,
       build: SparkSession => DataFrame): Unit = {
-    val wm = view.sources.map(maxMtime(spark, _)).foldLeft(0L)(math.max)
+    val covered = lineage(spark, view)._1
     val tmp = view.path + "__mv_tmp"
     Catalog.overwrite(build(spark), tmp)
     Catalog.replace(spark, tmp, view.path)
-    writeWatermark(spark, view.path, wm)
+    Lineage.write(spark, view.path, covered)
   }
 
   /** Serve the view, rebuilding only if stale — the read path every
@@ -104,36 +68,29 @@ object Mv {
 
   /** Incremental refresh for an APPEND-ONLY single-source rollup
     * (count + long-sum per key, the [[operators.AnalyticsOps
-    * .incrementalRollup]] shape): aggregate ONLY the source files
-    * appended since the last watermark and full-outer-merge the delta
-    * into the materialized rollup. Cost per refresh is O(delta) +
-    * O(|view|) — independent of total source size, which is the whole
-    * point at 100 TB (the full rebuild re-scans everything). Sources
-    * that rewrite rows in place need [[refresh]]; this is the
-    * fast path for K4/K5 append-style tables.
+    * .incrementalRollup]] shape): aggregate ONLY the source files its
+    * record leaves uncovered and full-outer-merge the delta into the
+    * materialized rollup. Cost per refresh is O(delta) + O(|view|) —
+    * independent of total source size, which is the whole point at
+    * 100 TB (the full rebuild re-scans everything). A view with no
+    * valid record (never built, or a covered file deleted or
+    * rewritten) is rolled up from every source file; sources that
+    * rewrite rows in place need [[refresh]].
     */
   def refreshIncrementalRollup(spark: SparkSession, view: View,
       key: String, valueCol: String): Unit = {
     require(view.sources.size == 1,
       "incremental rollup views have exactly one source")
     val source = view.sources.head
-    val wm0 = if (Catalog.tableExists(spark, view.path))
-      readWatermark(spark, view.path) else 0L
-    val delta = filesNewerThan(spark, source, wm0)
+    val (in, prior) = lineage(spark, view)
+    val delta = prior.fold(in)(_.uncovered(in))
     if (delta.isEmpty) return
-    // Watermark = max mtime OF THE FILES PROCESSED (not of the source
-    // now): a file appended between the listing and this line is left
-    // above the watermark for the next refresh instead of silently
-    // skipped or double-counted.
-    val fs = fsOf(spark, source)
-    val wm = delta.map(f =>
-      fs.getFileStatus(new Path(f)).getModificationTime).max
     val deltaRollup = operators.AnalyticsOps.rollup(
       spark.read.schema(Catalog.load(spark, source).schema)
-        .parquet(delta: _*),
+        .parquet(delta.map(_._1): _*),
       key, valueCol)
     val merged =
-      if (wm0 == 0L) deltaRollup.orderBy(org.apache.spark.sql
+      if (prior.isEmpty) deltaRollup.orderBy(org.apache.spark.sql
         .functions.col(key).asc)
       else operators.AnalyticsOps.mergeRollups(
         Catalog.load(spark, view.path), deltaRollup, key)
@@ -143,7 +100,7 @@ object Mv {
     // this: the tmp write runs the read to completion first).
     Catalog.overwrite(merged, tmp)
     Catalog.replace(spark, tmp, view.path)
-    writeWatermark(spark, view.path, wm)
+    Lineage.write(spark, view.path, in)
   }
 
   /** CDC-DRIVEN rollup maintenance — incremental view maintenance
@@ -155,8 +112,8 @@ object Mv {
     * before-image; updates subtract the fromV pre-image and add the
     * after-image — which also moves mass correctly when the GROUP
     * column itself changed. This is the piece [[refreshIncrementalRollup]]
-    * cannot do (append-only watermarks see a CoW rewrite as a
-    * full re-append).
+    * cannot do (it sees a CoW rewrite as an invalid record and rolls
+    * the whole source up again).
     *
     * Pre-images for updated keys are looked up in the fromV snapshot
     * restricted by left-semi to the feed's update keys — key-bounded

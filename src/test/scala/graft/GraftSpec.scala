@@ -28,6 +28,24 @@ class GraftSpec extends SparkSpec {
        |"category": "Transport", "tags": ["traffic"],
        |"viewCount": $views, "rowsUpdatedAt": "1718000000"}""".stripMargin
 
+  // both FTS verbs equal the recompute over `records`
+  def assertFtsMatches(g: Graft): Unit = {
+    import org.apache.spark.sql.functions.{col, concat_ws}
+    val docs = g.records.select(col("record_id"),
+      concat_ws(" ", col("title"), col("description")).as("text"))
+    Seq(Seq("bike"), Seq("about"), Seq("traffic", "about")).foreach { t =>
+      assert(g.searchFts(t, 50).collect().toSeq ==
+        operators.FtsOps.searchDocs(docs, "record_id", "text", t, 50)
+          .collect().toSeq, t)
+      assert(g.searchFtsRanked(t, 50).collect().toSeq ==
+        operators.FtsOps.searchRankedDocs(docs, "record_id", "text", t, 50)
+          .collect().toSeq, t)
+    }
+  }
+
+  def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
   test("collect → search → analytics → status → export, end to end") {
     val g = new Graft(spark, tmpDir("graft"))
     val ad = nycFixture(
@@ -290,15 +308,15 @@ class GraftSpec extends SparkSpec {
     val donorFile = dataFiles(donor).head
     val fs = new Path(donor).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val future = System.currentTimeMillis() + 3600000L
-    def plant(recordsDir: String): Path = {
-      val dst = new Path(s"$recordsDir/source_name=NYC Open Data",
-        "_tmp-" + new Path(donorFile).getName)
+    def plant(dst: Path): Path = {
       fs.mkdirs(dst.getParent)
       assert(org.apache.hadoop.fs.FileUtil.copy(fs, new Path(donorFile), fs,
         dst, false, spark.sparkContext.hadoopConfiguration))
       fs.setTimes(dst, future, -1)
       dst
     }
+    val part = new Path(donorFile).getName
+    val v = "source_stats"
 
     // once beside committed files, once in a table with none yet
     Seq(true, false).foreach { committedFirst =>
@@ -307,20 +325,104 @@ class GraftSpec extends SparkSpec {
       val g = new Graft(spark, dir)
       g.setup(Seq(nycFixture()))
       if (committedFirst) assert(collect(g, batches.head) == counts.head)
-      val planted = plant(recordsDir)
+      val planted = plant(new Path(s"$recordsDir/source_name=NYC Open Data",
+        "_tmp-" + part))
+      // and a file of an in-flight distributed write, not committed yet
+      val inFlight = plant(new Path(s"$recordsDir/_temporary/0/" +
+        "task_0_m_000000/source_name=NYC Open Data", part))
       assert(g.records.count() == (if (committedFirst) counts.head else 0L))
       g.indexFts()
-      val lineage = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$dir/fts_index/_graft_fts_lineage")))
-      assert(!lineage.contains("_tmp-"), lineage)
-      assert(Mv.maxMtime(spark, recordsDir) < future)
-      assert(!Mv.filesNewerThan(spark, recordsDir, 0L).exists(_.contains("_tmp-")))
+      g.analyticsMaterialized(v)
+      Seq("fts_index", s"mv/$v").foreach { artifact =>
+        val lineage = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(s"$dir/$artifact/_graft_lineage")))
+        assert(!lineage.contains("_tmp-") && !lineage.contains("_temporary"),
+          lineage)
+      }
 
       // the key probe does not see the planted row either
       val rest = if (committedFirst) batches.tail else batches
       assert(rest.map(collect(g, _)) == counts.takeRight(rest.size))
       assert(rows(g) == rows(clean))
       assert(fs.exists(planted))
+
+      // the in-flight write commits after a view build, keeping its mtime
+      assert(sortedRows(g.analyticsMaterialized(v)) ==
+        sortedRows(g.analytics()(v)))
+      val committed = new Path(s"$recordsDir/source_name=NYC Open Data", part)
+      assert(fs.rename(inFlight, committed))
+      assert(fs.getFileStatus(committed).getModificationTime == future)
+      assert(g.records.count() == counts.sum + 1)
+      assert(sortedRows(g.analyticsMaterialized(v)) ==
+        sortedRows(g.analytics()(v)))
+    }
+  }
+
+  test("a source's partition deleted under a built view, as a takedown " +
+      "does, rebuilds the view") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("grafttakedown")
+    val g = new Graft(spark, dir)
+    val sec = new SecEdgarAdapter(new FixtureFetcher(
+      Map("https://www.sec.gov/robots.txt" -> (404, "")),
+      heads = Map(
+        "https://data.sec.gov/api/xbrl/companyfacts.zip" -> 200,
+        "https://data.sec.gov/submissions/CIK0000320193.json" -> 200,
+        "https://data.sec.gov/api/xbrl/frames/" -> 200)), clock) {
+      override protected lazy val limiter = new RateLimiter(1e6)
+    }
+    val nyc = nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20))
+    g.setup(Seq(nyc, sec))
+    assert(g.collect(Seq(nyc, sec)) == 5)
+    val v = "source_stats"
+    assert(sortedRows(g.analyticsMaterialized(v)) ==
+      sortedRows(g.analytics()(v)))
+    assert(g.analyticsMaterialized(v).count() == 2)
+
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(s"$dir/data_records/source_name=SEC EDGAR"), true))
+    val served = g.analyticsMaterialized(v)
+    assert(sortedRows(served) == sortedRows(g.analytics()(v)))
+    assert(served.collect().map(_.getAs[String]("source_name")).toSeq ==
+      Seq("NYC Open Data"))
+  }
+
+  test("a torn lineage record reads as none: the view and the FTS index " +
+      "are rebuilt and serve the recompute") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("grafttorn")
+    val g = new Graft(spark, dir)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    g.setup(Seq(nycFixture()))
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    val v = "source_stats"
+    g.analyticsMaterialized(v)
+    g.indexFts()
+    // an empty record, and one cut inside the path of its last stamp line
+    val tears = Seq[Array[Byte] => Array[Byte]](
+      _ => Array.emptyByteArray,
+      b => b.take(b.lastIndexOf('\n'.toByte, b.length - 2) - 5))
+    def tearThenRebuilds(artifact: String)(rebuild: => Unit): Unit =
+      tears.foreach { tear =>
+        val record = new Path(s"$dir/$artifact/_graft_lineage")
+        val in = fs.open(record)
+        val bytes = try in.readAllBytes() finally in.close()
+        val out = fs.create(record, true)
+        try out.write(tear(bytes)) finally out.close()
+        val before = Lineage.stamps(spark, s"$dir/$artifact").toSet
+        rebuild
+        assert((Lineage.stamps(spark, s"$dir/$artifact").toSet intersect
+          before).isEmpty, s"$artifact must be rebuilt")
+      }
+    tearThenRebuilds(s"mv/$v") {
+      assert(sortedRows(g.analyticsMaterialized(v)) ==
+        sortedRows(g.analytics()(v)))
+    }
+    tearThenRebuilds("fts_index") {
+      g.indexFts()
+      assertFtsMatches(g)
     }
   }
 
@@ -360,29 +462,16 @@ class GraftSpec extends SparkSpec {
   test("indexFts appends the postings of new records files; a rewrite " +
       "or a stale lineage rebuilds") {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.functions.{col, concat_ws}
     val dir = tmpDir("graftfts")
     val g = new Graft(spark, dir)
     val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lineage = new Path(s"$dir/fts_index/_graft_fts_lineage")
+    val lineage = new Path(s"$dir/fts_index/_graft_lineage")
     def indexFiles: Set[String] =
       new java.io.File(s"$dir/fts_index").listFiles.map(_.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
     def collect(items: String*): Long = g.collect(Seq(nycFixture(items: _*)))
-    // both FTS verbs equal the recompute over `records`
-    def assertSearchesMatch(): Unit = {
-      val docs = g.records.select(col("record_id"),
-        concat_ws(" ", col("title"), col("description")).as("text"))
-      Seq(Seq("bike"), Seq("about"), Seq("traffic", "about")).foreach { t =>
-        assert(g.searchFts(t, 50).collect().toSeq ==
-          operators.FtsOps.searchDocs(docs, "record_id", "text", t, 50)
-            .collect().toSeq, t)
-        assert(g.searchFtsRanked(t, 50).collect().toSeq ==
-          operators.FtsOps.searchRankedDocs(docs, "record_id", "text", t, 50)
-            .collect().toSeq, t)
-      }
-    }
+    def assertSearchesMatch(): Unit = assertFtsMatches(g)
     // the append path keeps the old files and adds at most `width`
     def indexFtsAppends(): Set[String] = {
       val before = indexFiles

@@ -10,6 +10,20 @@ class MvSpec extends SparkSpec {
       .toDF("doc_id", "source", "n_chars")
   }
 
+  // append `df` to `src` and give the new data files exactly the newest
+  // mtime already there, as a write in the same clock tick leaves them
+  private def appendSameTick(df: org.apache.spark.sql.DataFrame,
+      src: String): Unit = {
+    val before = Lineage.stamps(spark, src)
+    df.write.mode("append").parquet(src)
+    val fs = new org.apache.hadoop.fs.Path(src)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val added = Lineage.stamps(spark, src).map(_._1).toSet -- before.map(_._1)
+    assert(added.nonEmpty)
+    added.foreach(rel => fs.setTimes(new org.apache.hadoop.fs.Path(src + rel),
+      before.map(_._3).max, -1))
+  }
+
   test("readFresh builds once, serves cached, rebuilds on source change") {
     val dir = tmpDir("mv")
     val src = dir + "/src"
@@ -27,9 +41,8 @@ class MvSpec extends SparkSpec {
     Mv.readFresh(spark, view, build).collect()
     assert(builds == 1)
     assert(!Mv.isStale(spark, view))
-    // append with a strictly newer mtime → stale → one rebuild
-    Thread.sleep(1100)
-    docs(10, off = 100).write.mode("append").parquet(src)
+    // append in the same mtime tick → stale → one rebuild
+    appendSameTick(docs(10, off = 100), src)
     assert(Mv.isStale(spark, view))
     val r2 = Mv.readFresh(spark, view, build).collect()
     assert(builds == 2 && r2.map(_.getLong(1)).sum == 40)
@@ -44,14 +57,14 @@ class MvSpec extends SparkSpec {
     val first = Catalog.load(spark, view.path).collect()
     assert(first.map(_.getLong(1)).sum == 40)
 
-    // no new files → refresh is a no-op (watermark identical)
+    // no new files → refresh is a no-op (nothing uncovered)
     val filesBefore = Catalog.load(spark, view.path).inputFiles.toSet
     Mv.refreshIncrementalRollup(spark, view, "source", "n_chars")
     assert(Catalog.load(spark, view.path).inputFiles.toSet == filesBefore)
 
-    // append a delta; merge must equal a full recompute
-    Thread.sleep(1100)
-    docs(25, off = 1000).write.mode("append").parquet(src)
+    // append a delta in the same mtime tick; merge must equal a full
+    // recompute
+    appendSameTick(docs(25, off = 1000), src)
     Mv.refreshIncrementalRollup(spark, view, "source", "n_chars")
     val merged = Catalog.load(spark, view.path)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
@@ -64,20 +77,28 @@ class MvSpec extends SparkSpec {
     assert(merged.toSeq == full.toSeq)
   }
 
-  test("incremental delta listing sees only files past the watermark") {
+  test("incremental delta listing sees only the files a lineage record " +
+      "does not cover") {
     val dir = tmpDir("mvdelta")
     val src = dir + "/src"
     docs(10).write.parquet(src)
-    val wm = Mv.maxMtime(spark, src)
-    assert(Mv.filesNewerThan(spark, src, wm).isEmpty)
-    Thread.sleep(1100)
-    docs(5, off = 50).coalesce(1).write.mode("append").parquet(src)
-    val delta = Mv.filesNewerThan(spark, src, wm)
+    val covered = Lineage.stamps(spark, src)
+    assert(covered.nonEmpty && covered.forall(_._1.contains("/part-")),
+      s"markers and checksum files are not data: $covered")
+    val record = Lineage(covered, Nil)
+    assert(record.uncovered(covered).isEmpty)
+    appendSameTick(docs(5, off = 50).coalesce(1), src)
+    val listed = Lineage.stamps(spark, src)
+    val delta = record.uncovered(listed)
     assert(delta.size == 1, s"expected exactly the appended file: $delta")
+    assert(record.valid(listed, Nil))
     val n = spark.read
       .schema(Catalog.load(spark, src).schema)
-      .parquet(delta: _*).count()
+      .parquet(src + delta.head._1).count()
     assert(n == 5)
+    // other output files, or a covered file gone, invalidate the record
+    assert(!record.valid(listed, delta))
+    assert(!record.valid(listed.filterNot(_ == covered.head), Nil))
   }
 
   test("mergeRollups is the combiner of rollup: rollup(x∪y)=merge(r(x),r(y))") {

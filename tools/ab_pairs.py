@@ -15,6 +15,13 @@ not listed there) and whether the gap between the medians exceeds the
 parent's interquartile range. Quartiles are the inclusive-method
 quartiles of Python's `statistics.quantiles`.
 
+For each end-to-end metric, the last column judges no-regression against
+that metric's `bound` in the change tree's BENCHMARK.json: `worse` when
+the change's median is worse than the parent's by more than the bound
+(as a fraction of the parent's median), `ok` when not, and `unresolved`
+when the parent's own spread (IQR over median) exceeds the bound, unless
+every change run is better than every parent run.
+
 Exits 1 when any run failed, reported `correct: false` or counted failed
 ops; every run still goes ahead, so the table shows what was measured.
 """
@@ -35,15 +42,28 @@ def seed_range(text):
     return list(range(lo, hi + 1))
 
 
-def directions(tree):
-    """Metric name -> 'lower'/'higher' from the tree's BENCHMARK.json."""
+def benchmark_spec(tree):
+    """(metric name -> 'lower'/'higher', end-to-end metric name -> bound)
+    from the tree's BENCHMARK.json."""
     path = os.path.join(tree, "BENCHMARK.json")
     if not os.path.isfile(path):
-        return {}
+        return {}, {}
     with open(path) as f:
         spec = json.load(f)
-    return {m["name"]: m["better"]
-            for key in ("end_to_end", "per_layer") for m in spec.get(key, [])}
+    better = {m["name"]: m["better"]
+              for key in ("end_to_end", "per_layer") for m in spec.get(key, [])}
+    bounds = {m["name"]: m["bound"]
+              for m in spec.get("end_to_end", []) if "bound" in m}
+    return better, bounds
+
+
+def regression(ps, cs, pq, cq, sign, bound):
+    """No-regression verdict of one end-to-end metric; see the module doc."""
+    if min(sign * (p - c) for p in ps for c in cs) > 0:
+        return "ok"  # every change run is better than every parent run
+    if not pq[1] or (pq[2] - pq[0]) / abs(pq[1]) > bound:
+        return "unresolved"
+    return "worse" if sign * (pq[1] - cq[1]) / abs(pq[1]) < -bound else "ok"
 
 
 def run(tree, workload, seed, seconds, trace):
@@ -81,7 +101,7 @@ def main():
 
     trees = {"parent": os.path.abspath(a.parent_tree),
              "change": os.path.abspath(a.change_tree)}
-    better = directions(trees["change"])
+    better, bounds = benchmark_spec(trees["change"])
     runs = {"parent": [], "change": []}  # per pair, same order as seeds
     bad = False
     for i, seed in enumerate(a.seeds):
@@ -115,7 +135,8 @@ def main():
     print(f"{a.workload}: {len(pairs)} complete pairs, seeds "
           f"{a.seeds[0]}-{a.seeds[-1]}")
     print(f"{'metric':32} {'parent med [q1, q3]':>30} "
-          f"{'change med [q1, q3]':>30} {'ratio':>7} {'wins':>6} gap>IQR")
+          f"{'change med [q1, q3]':>30} {'ratio':>7} {'wins':>6} gap>IQR "
+          f"bound")
     for name in names:
         both = [(pm[name], cm[name]) for pm, cm in pairs
                 if name in pm and name in cm]
@@ -123,17 +144,20 @@ def main():
         pq, cq = quartiles(ps), quartiles(cs)
         ratio = cq[1] / pq[1] if pq[1] else float("nan")
         way = better.get(name)
+        verdict = ""
         if way is None:
             wins, gap = "?", "?"
         else:
             sign = 1 if way == "lower" else -1
             wins = f"{sum(sign * (x - y) > 0 for x, y in both)}/{len(both)}"
             gap = "yes" if sign * (pq[1] - cq[1]) > pq[2] - pq[0] else "no"
+            if name in bounds:
+                verdict = regression(ps, cs, pq, cq, sign, bounds[name])
 
         def fmt(q):
             return f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"
         print(f"{name:32} {fmt(pq):>30} {fmt(cq):>30} {ratio:7.3f} "
-              f"{wins:>6} {gap}")
+              f"{wins:>6} {gap:7} {verdict}")
     if bad:
         print("[ab] at least one run failed or was not correct",
               file=sys.stderr)
