@@ -210,10 +210,10 @@ object Bench {
   }
 
   /** Executes the full plan, sorts included, discarding rows. */
-  private def runPlan(df: DataFrame): Unit =
+  private[graft] def runPlan(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  private def calibProbe(spark: org.apache.spark.sql.SparkSession)
+  private[graft] def calibProbe(spark: org.apache.spark.sql.SparkSession)
       : Double = {
     val c0 = System.nanoTime()
     runPlan(spark.range(4000000L).selectExpr("sum(id) as s"))

@@ -14,7 +14,6 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
-import scala.reflect.runtime.universe.TypeTag
 
 /** Table layer (K6/K7/S2 — ethical_crawler.py:817–889, :100–137):
   * existence probe, overwrite/append, partitioned layout. Tables are
@@ -83,8 +82,9 @@ object Catalog {
   /** K4/K5 append of rows already on the driver, with no Spark job:
     * the same files a `toDS()` + [[appendPartitioned]] write of `rows`
     * through one task would leave, written by Spark's own parquet
-    * writer on the driver. Rows go through the `ExpressionEncoder[T]`
-    * serializer and the session's [[ParquetFileFormat]] writer
+    * writer on the driver. Rows go through `encoder`'s serializer
+    * (built once per row type by the caller: deriving an encoder
+    * reflects over `T`) and the session's [[ParquetFileFormat]] writer
     * (schema conversion, row metadata, timestamp type and codec from
     * the session conf), one file per partition-value group under its
     * `col=value` directory. Each file is written under a `_`-prefixed
@@ -94,10 +94,10 @@ object Catalog {
     * cached plans over `path`, as Spark's insert command does. For a
     * batch bounded by driver memory; a DataFrame keeps Spark's writer.
     */
-  def appendRows[T <: Product : TypeTag](spark: SparkSession, rows: Seq[T],
-      path: String, partitionCols: Seq[String] = Nil): Unit =
+  def appendRows[T](spark: SparkSession, rows: Seq[T],
+      encoder: ExpressionEncoder[T], path: String,
+      partitionCols: Seq[String] = Nil): Unit =
     if (rows.nonEmpty) SQLConf.withExistingConf(spark.sessionState.conf) {
-      val encoder = ExpressionEncoder[T]()
       val toRow = encoder.createSerializer()
       val (parts, data) = encoder.schema.fields.zipWithIndex
         .partition(f => partitionCols.contains(f._1.name))

@@ -42,8 +42,7 @@ object Sessions {
       // while a compute-heavy reduce keeps ~8-way parallelism. On a real
       // cluster with TB inputs the default would be appropriate; this is
       // the honest local-scale equivalent.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "2m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
       // AQE's runtime-stats broadcast decision (NOT the static planner
       // estimate): with 128 GiB of executor memory a 64 MB build side
       // is safely broadcastable, and the vocab-bounded model relations

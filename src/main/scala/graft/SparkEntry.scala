@@ -15,8 +15,8 @@ import graft.Sorting.ResultSortOps
   * tie-ambiguous — SURVEY §2.6 ⚠).
   */
 object SparkEntry {
-  // Shared constants re-exposed for specs/ScaleTrend (the registry
-  // itself lives in the Queries* family files + RegistryFixtures).
+  // Shared constants re-exposed for specs (the registry itself lives
+  // in the Queries* family files + RegistryFixtures).
   val ShingleMaxDf: Int = RegistryFixtures.ShingleMaxDf
   val BatchFtsQueries: Seq[(Int, Seq[String])] =
     RegistryFixtures.BatchFtsQueries

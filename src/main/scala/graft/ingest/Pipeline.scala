@@ -1,7 +1,8 @@
 package graft.ingest
 
 import graft.Catalog
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -73,7 +74,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     * checks, no write.
     */
   def appendChecks(checks: Seq[ComplianceCheck]): Unit =
-    Catalog.appendRows(spark, checks, checksPath)
+    Catalog.appendRows(spark, checks, Pipeline.ChecksEncoder, checksPath)
 
   /** Full collect: gate → persist checks (K4 append-only audit table)
     * → discover → dedup-append. Returns (new records, checks run).
@@ -98,7 +99,8 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
         val seen = storedKeys(batch)
         batch.filterNot(r => seen((r.source_name, r.record_id)))
       }
-    Catalog.appendRows(spark, fresh, recordsPath, Seq("source_name"))
+    Catalog.appendRows(spark, fresh, Pipeline.RecordsEncoder, recordsPath,
+      Seq("source_name"))
     fresh.size.toLong
   }
 
@@ -146,6 +148,10 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
 }
 
 object Pipeline {
+  /** The two tables' row encoders, derived (by reflection) once. */
+  private[graft] val RecordsEncoder = ExpressionEncoder[DataRecord]()
+  private[graft] val ChecksEncoder = ExpressionEncoder[ComplianceCheck]()
+
   /** `data_records` as a read resolves it: the [[DataRecord]] fields
     * with the `source_name` partition column last (the order inference
     * gives), so a resolve needs no schema-inference job. The DDL round
@@ -153,10 +159,10 @@ object Pipeline {
     * file read does, so the empty table has the written one's schema.
     */
   private val RecordsSchema: StructType = {
-    val fields = Encoders.product[DataRecord].schema.fields
+    val fields = RecordsEncoder.schema.fields
     StructType.fromDDL(StructType(fields.filterNot(_.name == "source_name") ++
       fields.filter(_.name == "source_name")).toDDL)
   }
 
-  private val ChecksSchema: StructType = Encoders.product[ComplianceCheck].schema
+  private val ChecksSchema: StructType = ChecksEncoder.schema
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ingest.{ComplianceCheck, DataRecord}
+import graft.ingest.{ComplianceCheck, DataRecord, Pipeline}
 import java.sql.Timestamp
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -66,13 +66,14 @@ class CatalogSpec extends SparkSpec {
   /** The driver write and Spark's writer leave equal tables; returns
     * the driver write's footers.
     */
-  def assertSameTable[T <: Product : scala.reflect.runtime.universe.TypeTag](
-      rows: Seq[T], partitionCols: Seq[String])(
+  def assertSameTable[T](rows: Seq[T],
+      encoder: org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[T],
+      partitionCols: Seq[String])(
       toDf: Seq[T] => org.apache.spark.sql.DataFrame): Seq[(String, Seq[String])] = {
     val viaSpark = tmpDir("catalogspark") + "/t"
     val viaDriver = tmpDir("catalogdriver") + "/t"
     Catalog.appendPartitioned(toDf(rows).coalesce(1), viaSpark, partitionCols)
-    Catalog.appendRows(spark, rows, viaDriver, partitionCols)
+    Catalog.appendRows(spark, rows, encoder, viaDriver, partitionCols)
     val (expected, actual) = (footers(viaSpark), footers(viaDriver))
     assert(expected.nonEmpty && actual.keySet == expected.keySet)
     // Spark's writer is the reference
@@ -92,8 +93,9 @@ class CatalogSpec extends SparkSpec {
 
   /** Both tables equal Spark's; returns the driver write's footers. */
   def assertBothTables(): Seq[(String, Seq[String])] = {
-    val written = assertSameTable(records, Seq("source_name"))(_.toDS().toDF()) ++
-      assertSameTable(checks, Nil)(_.toDS().toDF())
+    val written = assertSameTable(records, Pipeline.RecordsEncoder,
+        Seq("source_name"))(_.toDS().toDF()) ++
+      assertSameTable(checks, Pipeline.ChecksEncoder, Nil)(_.toDS().toDF())
     assert(written.size == 3) // two source partitions and the checks file
     written
   }
@@ -115,10 +117,11 @@ class CatalogSpec extends SparkSpec {
 
   test("appendRows: no rows, no file; each call adds one file per group") {
     val dir = tmpDir("catalogappend") + "/t"
-    Catalog.appendRows(spark, Seq.empty[DataRecord], dir, Seq("source_name"))
+    val enc = Pipeline.RecordsEncoder
+    Catalog.appendRows(spark, Seq.empty[DataRecord], enc, dir, Seq("source_name"))
     assert(!Catalog.tableExists(spark, dir))
-    Catalog.appendRows(spark, records, dir, Seq("source_name"))
-    Catalog.appendRows(spark, records.take(1), dir, Seq("source_name"))
+    Catalog.appendRows(spark, records, enc, dir, Seq("source_name"))
+    Catalog.appendRows(spark, records.take(1), enc, dir, Seq("source_name"))
     val names = Catalog.files(spark, dir).map(_.getPath.getName)
       .filter(_.endsWith(".parquet"))
     assert(names.size == 3 && names.forall(_.startsWith("part-00000-")), names)

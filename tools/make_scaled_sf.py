@@ -10,11 +10,15 @@ keys stay unique and foreign keys stay consistent within a replica
 (orders.o_custkey moves with customer.c_custkey, lineitem.l_orderkey
 with orders.o_orderkey, events.user_id moves so sessions/windows stay
 per-replica, embeddings vec_id likewise). `documents.text` gets a
-per-replica token suffix on every token (the ScaleTrend convention):
+per-replica token suffix on every token (replica 0 keeps its text):
 shingle/signature spaces stay disjoint across replicas, so dedup
 workloads scale as N independent copies of the 1× problem instead of
 N² cross-replica duplicate pairs. nation/region are dimension
-constants and are copied 1×.
+constants and are copied 1×. Embeddings are plain `vec_id`-offset
+copies, so every copy shares the ×1 vectors.
+
+`graft.probes.ScaleTrendSuite` times registry queries over an sf
+directory and its replica; docs/PROBES.md gives the commands.
 
 Output is one parquet FILE per table (`<t>.parquet`), the layout
 Tables.scala and tools/duckdb_baseline.py both read.

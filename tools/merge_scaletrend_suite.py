@@ -7,9 +7,11 @@ artifact (round-17 verdict item 5):
         > tools/scaletrend_suite_r18.json
 
 - duck_*.json: tools/duckdb_baseline.py output on the two directories;
-- spark_trend.log: graft.probes.ScaleTrendSuite output (one JSON line
-  per query with t1_sec/tN_sec, or with empty_arms when a directory
-  had no successful rep; error lines are skipped).
+- spark_trend.log: graft.probes.ScaleTrendSuite output over the same
+  two directories (one JSON line per query with its `arms` in
+  directory order, or with `empty_arms` when a directory had no
+  successful rep; calibration and error lines are skipped). The first
+  arm is the ×1 side and the last arm the ×N side.
 
 Emits per-query {spark_x1, spark_xN, duck_x1, duck_xN, ratio_x1,
 ratio_xN, spark_scale, duck_scale} plus totals, and the queries left
@@ -29,15 +31,15 @@ def main(duck1_p, duckn_p, spark_p, factor):
         line = line.strip()
         if line.startswith('{"query"'):
             d = json.loads(line)
-            if "t1_sec" in d:
-                spark[d["query"]] = d
+            if "arms" in d:
+                spark[d["query"]] = (d["arms"][0]["sec"], d["arms"][-1]["sec"])
             elif "empty_arms" in d:
                 incomplete.append(d["query"])
     rows = {}
     for q in sorted(spark):
         if q not in duck1 or q not in duckn:
             continue
-        s1, sn = spark[q]["t1_sec"], spark[q]["tN_sec"]
+        s1, sn = spark[q]
         d1, dn = duck1[q], duckn[q]
         rows[q] = {
             "spark_x1": s1, f"spark_x{factor}": sn,
