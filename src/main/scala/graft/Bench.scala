@@ -347,21 +347,19 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.envCores)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = 3
 
     // QUIET-WINDOW ENTRY GATE (round-11 verdict item 1): the raw
     // ratio has been breached on host noise alone, so the suite WAITS
     // for a quiet window instead of timing into a noisy one. The
     // fixed-work probe runs first (after 3 warm shots so codegen/JIT
-    // is not measured); while its min-of-2 exceeds the gate (default
-    // 0.055 ≈ 1.8× the 0.030 quiet floor), sleep 30 s and re-probe,
-    // up to a bounded budget. Every attempt is recorded in the JSON
-    // so a run that had to settle for a loaded window says so.
-    val gate = sys.env.getOrElse("SPARK_GRAFT_CALIB_GATE", "0.055").toDouble
-    val mrelGate =
-      sys.env.getOrElse("SPARK_GRAFT_MEDIANREL_GATE", "1.15").toDouble
-    val maxWaitSec =
-      sys.env.getOrElse("SPARK_GRAFT_CALIB_MAX_WAIT_SEC", "600").toInt
+    // is not measured); while its min-of-2 exceeds the gate (0.055 ≈
+    // 1.8× the 0.030 quiet floor), sleep 30 s and re-probe, up to
+    // 600 s. Every attempt is recorded in the JSON so a run that had
+    // to settle for a loaded window says so.
+    val gate = 0.055
+    val mrelGate = 1.15
+    val maxWaitSec = 600
     (1 to 3).foreach(_ => calibProbe(spark))
     val attempts = scala.collection.mutable.ArrayBuffer[Double]()
     var waited = 0
@@ -395,15 +393,11 @@ object Bench {
     // best close seen (min median-rel when the pin is present, else
     // min total). The recorded artifact is quiet by construction
     // whenever any attempt's window was quiet.
-    val maxCloses =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "3").toInt
-    val retrySleepSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRY_SLEEP_SEC", "45").toInt
+    val maxCloses = 3
+    val retrySleepSec = 45
     // host-relative probe-gate margin (see effectiveGate): the session
-    // probe floor × this bounds what a quiet close may read; 0 or
-    // negative disables the relative component (fixed gate only).
-    val floorMargin = sys.env
-      .getOrElse("SPARK_GRAFT_CALIB_FLOOR_MARGIN", "2.0").toDouble
+    // probe floor × this bounds what a quiet close may read.
+    val floorMargin = 2.0
     val closes = scala.collection.mutable.ArrayBuffer[Close]()
     var k = 0
     var quietFound = false

@@ -186,9 +186,7 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * exactly-once-per-key in the table.
     */
   def collectStream(landingDir: String, checkpointDir: String): Unit = {
-    val schema =
-      org.apache.spark.sql.Encoders.product[DataRecord].schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(Pipeline.RecordsEncoder.schema)
       .option("maxFilesPerTrigger", "1").parquet(landingDir)
     streaming.StreamingOps.dedupAppendSink(stream, spark,
       pipeline.recordsPath, keys = Seq("source_name", "record_id"),

@@ -172,13 +172,11 @@ object QueriesStreamVersioned {
           docs.filter(col("doc_id") % 5 === 0 &&
               col("doc_id") % 2 =!= 0)
             .withColumn("n_chars", col("n_chars") + lit(7L))), root)
-        writeRowMeta(s, root, Seq(root + "/in"))
       }
       val run = tempTableRoot("graft_stream_mor_run")
       val table = run + "/docs"
       copyDir(fix + "/tmpl", table)
-      val ss = stChild(s,
-        graft.streaming.StreamingOps.stateWidth(rowMeta(fix)))
+      val ss = streamChild(s, fix + "/in")
       val stream = ss.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(fix + "/in")
       graft.streaming.StreamingOps.morUpsertSink(stream, ss, table,
@@ -196,11 +194,9 @@ object QueriesStreamVersioned {
       val fix = cachedStreamInput(s, dir, "stream_hll") { root =>
         writeInputBatches((0 until 3).map(i =>
           ev.filter(col("event_id") % 3 === i)), root)
-        writeRowMeta(s, root, Seq(root + "/in"))
       }
       val run = tempTableRoot("graft_stream_hll_run")
-      val ss = stChild(s,
-        graft.streaming.StreamingOps.stateWidth(rowMeta(fix)))
+      val ss = streamChild(s, fix + "/in")
       val stream = ss.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(fix + "/in")
       val store = run + "/regs"
@@ -229,13 +225,11 @@ object QueriesStreamVersioned {
       val fix = cachedStreamInput(s, dir, "stream_cms") { root =>
         writeInputBatches((0 until 3).map(i =>
           ev.filter(col("event_id") % 3 === i)), root)
-        writeRowMeta(s, root, Seq(root + "/in"))
       }
       val run = tempTableRoot("graft_stream_cms_run")
       // warm derived-width child; the sink is stateless-in-the-engine
       // (registers live in the per-batch TABLE partitions).
-      val ss = stChild(s,
-        graft.streaming.StreamingOps.stateWidth(rowMeta(fix)))
+      val ss = streamChild(s, fix + "/in")
       val stream = ss.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(fix + "/in")
       graft.streaming.StreamingOps.cmsRegisterSink(stream, ss,
@@ -269,7 +263,6 @@ object QueriesStreamVersioned {
           b0,
           b1.unionByName(b0.filter(col("event_id") % 7 === 0)),
           b2.unionByName(b1.filter(col("event_id") % 7 === 1))), root)
-        writeRowMeta(s, root, Seq(root + "/in"))
       }
       val run = tempTableRoot("graft_stream_dedup_run")
       // State-partition sizing is a REAL streaming knob (the count
@@ -280,19 +273,9 @@ object QueriesStreamVersioned {
       // observed row volume (stateWidth) — on a cluster the same
       // derivation runs over |keys in the watermark window| /
       // target-state-per-task.
-      val ss = stChild(s,
-        graft.streaming.StreamingOps.stateWidth(rowMeta(fix)))
+      val ss = streamChild(s, fix + "/in")
       val stream = ss.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(fix + "/in")
-      // Round-14 note: a per-batch PARTIAL rollup alongside the row
-      // sink (dedupSink's partialAgg — fold 3 tiny files instead of
-      // re-scanning the sink) was implemented and measured NET
-      // SLOWER at fixture scale: +0.9 s of in-stream write jobs for
-      // −0.1 s of final read (StProfile, min-of-3 same-window). The
-      // mechanism stays (StreamingSpec gates partials ≡ row rollup
-      // — it IS the right consumer shape when the row sink is
-      // 100 TB), but the registry keeps the direct read; ledger in
-      // BASELINE.md round-14.
       graft.streaming.StreamingOps.dedupSink(stream, "ts",
         Seq("event_id"), "60 days", run + "/out", ckptRoot("graft_ckpt_dedup"))
       ss.read.parquet(run + "/out")
@@ -322,7 +305,6 @@ object QueriesStreamVersioned {
           views.filter(col("view_id") % 3 === i)), root + "/v")
         writeInputBatches((0 until 3).map(i =>
           purchases.filter(col("purchase_id") % 3 === i)), root + "/p")
-        writeRowMeta(s, root, Seq(root + "/v/in", root + "/p/in"))
       }
       val run = tempTableRoot("graft_stream_join_run")
       // a stream-stream join keeps FOUR state stores per partition
@@ -331,8 +313,7 @@ object QueriesStreamVersioned {
       // (stateWidth over views+purchases). The no-data finalization
       // batch only exists to advance watermark-driven OUTPUT — an
       // inner join emits eagerly, so the warm child disables it.
-      val ss = stChild(s,
-        graft.streaming.StreamingOps.stateWidth(rowMeta(fix)))
+      val ss = streamChild(s, fix + "/v/in", fix + "/p/in")
       val vStream = ss.readStream.schema(views.schema)
         .option("maxFilesPerTrigger", 1).parquet(fix + "/v/in")
       val pStream = ss.readStream.schema(purchases.schema)
@@ -364,11 +345,9 @@ object QueriesStreamVersioned {
       val fix = cachedStreamInput(s, dir, "stream_asof") { root =>
         writeInputBatches((0 until 3).map(i =>
           purchases.filter(col("purchase_id") % 3 === i)), root)
-        writeRowMeta(s, root, Seq(root + "/in"))
       }
       val run = tempTableRoot("graft_stream_asof_run")
-      val ss = stChild(s,
-        graft.streaming.StreamingOps.stateWidth(rowMeta(fix)))
+      val ss = streamChild(s, fix + "/in")
       val stream = ss.readStream.schema(purchases.schema)
         .option("maxFilesPerTrigger", 1).parquet(fix + "/in")
       val out = run + "/out"

@@ -248,19 +248,24 @@ private[graft] object RegistryFixtures {
       ss
     }
 
-  /** Parquet-footer row count per (dir, table) — a metadata-only
-    * aggregate, cached per table version; the input-row BOUND the
-    * report-tier width derivation reads (round-14 verdict item 2:
-    * derive width per family from input bounds, no literals tuned to
-    * one scale factor).
+  /** Parquet-footer row count per path — a metadata-only aggregate,
+    * cached per file version; the input-row BOUND every child-session
+    * width derivation reads (round-14 verdict item 2: derive width
+    * from input bounds, no literals tuned to one scale factor).
     */
-  private val tableRowCounts = new FixtureCache[(String, String), Long]
+  private val footerRowCounts = new FixtureCache[String, Long]
 
-  private[graft] def tableRows(s: SparkSession, dir: String,
-      name: String): Long = {
-    val p = Tables.path(dir, name)
-    tableRowCounts(s, (dir, name), p)(s.read.parquet(p).count())
-  }
+  private[graft] def footerRows(s: SparkSession, path: String): Long =
+    footerRowCounts(s, path, path)(s.read.parquet(path).count())
+
+  /** STREAMING child session: the width derives from the stream's
+    * landing files ([[graft.streaming.StreamingOps.stateWidth]] over
+    * their summed footer counts — the stream's observed row volume).
+    */
+  private[graft] def streamChild(s: SparkSession,
+      landingDirs: String*): SparkSession =
+    stChild(s, graft.streaming.StreamingOps.stateWidth(
+      landingDirs.map(footerRows(s, _)).sum))
 
   /** REPORT-TIER child session: for a query whose largest exchange is
     * bounded by its input tables' row counts (the ~150-query
@@ -292,28 +297,11 @@ private[graft] object RegistryFixtures {
     */
   private[graft] def reportChild(s: SparkSession, dir: String,
       tables: String*): SparkSession = {
-    val bound = tables.map(t => tableRows(s, dir, t)).max
+    val bound = tables.map(t => footerRows(s, Tables.path(dir, t))).max
     val w = graft.streaming.StreamingOps.stateWidth(bound)
     if (w >= s.sparkContext.defaultParallelism) s
     else stChild(s, w, aqe = false)
   }
-
-  /** Fixture metadata: the observed input-row volume, written once at
-    * fixture-build time (a parquet-footer count) and read back as the
-    * [[graft.streaming.StreamingOps.stateWidth]] input — the
-    * derivation the literal widths used to bake.
-    */
-  private[graft] def writeRowMeta(s: SparkSession, root: String,
-      inDirs: Seq[String]): Unit = {
-    val rows = inDirs.map(d => s.read.parquet(d).count()).sum
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(root, "state_rows"), rows.toString)
-    ()
-  }
-
-  private[graft] def rowMeta(root: String): Long =
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(root, "state_rows")).trim.toLong
 
   /** The SERVED full-text index (round-10 verdict item 3): the
     * ranked FTS family (l2/l6/l7/l13/l14/l15) reads persisted
@@ -454,23 +442,25 @@ private[graft] object RegistryFixtures {
         .localCheckpoint()
     }
 
-  /** Lay each batch down as one parquet file under `root/in` — the
-    * landing-directory shape a file-source stream tails.
+  /** Land each batch as one parquet file under `root/in` — the
+    * landing-directory shape a file-source stream tails. Names
+    * continue after the files already there (`batch_<n>.parquet`), so
+    * a later call lands the next batches of the same stream.
     */
   private[graft] def writeInputBatches(batches: Seq[DataFrame],
-      root: String): String = {
+      root: String): Unit = {
     val in = new java.io.File(root + "/in")
     in.mkdirs()
+    val first = in.list().count(_.endsWith(".parquet"))
     batches.zipWithIndex.foreach { case (b, i) =>
       val tmp = s"$root/b$i"
       b.coalesce(1).write.parquet(tmp)
       val part = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(in, s"batch_$i.parquet").toPath)
-      ()
+      java.nio.file.Files.move(part.toPath,
+        new java.io.File(in, s"batch_${first + i}.parquet").toPath)
+      deleteRec(new java.io.File(tmp))
     }
-    in.toString
   }
 
   /** Recursive HARD-LINK hydration of a fresh mutable table root from

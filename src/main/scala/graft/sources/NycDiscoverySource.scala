@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ingest.DataRecord
+import graft.ingest.Pipeline
 
 /** EXECUTOR-SIDE catalog ingestion — the DataSourceV2 answer to the
   * round-7 verdict's "parallel pagination" item (SURVEY S4): the
@@ -25,7 +25,8 @@ import graft.ingest.DataRecord
   * (b) GETs `endpoint?limit=pageSize&offset=page·pageSize`,
   * (c) maps items through the SAME pure `NycOpenDataAdapter.mapItem`
   * ladder the driver-side adapter uses (one mapper, two transports),
-  * and (d) emits rows through the DataRecord encoder.
+  * and (d) emits rows through the DataRecord encoder
+  * (`Pipeline.RecordsEncoder`, the one the batch write path uses).
   *
   * Politeness at scale: each partition paces its own requests with
   * the adapter's rate limit, so the GLOBAL request rate is
@@ -44,7 +45,7 @@ import graft.ingest.DataRecord
 class NycDiscoverySource extends TableProvider {
 
   override def inferSchema(options: CaseInsensitiveStringMap)
-      : StructType = NycDiscoverySource.Schema
+      : StructType = Pipeline.RecordsEncoder.schema
 
   // Round-9: a preset face of the generalized paginated-catalog scan
   // ([[PaginatedCatalogSource]]) — endpoint + mapper pinned to the
@@ -59,14 +60,3 @@ class NycDiscoverySource extends TableProvider {
       "mapperClass" -> classOf[NycCatalogPageMapper].getName,
       "pages" -> "1"))
 }
-
-object NycDiscoverySource {
-  /** DataRecord's schema, derived from the one encoder both
-    * transports share.
-    */
-  lazy val Schema: StructType = encoder.schema
-
-  private[sources] lazy val encoder =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[DataRecord]()
-}
-

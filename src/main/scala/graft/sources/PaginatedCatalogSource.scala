@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.ingest.{Adapters, DataRecord, HttpFetcher, JdkHttpFetcher, Js, NycOpenDataAdapter, RateLimiter}
+import graft.ingest.{Adapters, DataRecord, HttpFetcher, JdkHttpFetcher, Js, NycOpenDataAdapter, Pipeline, RateLimiter}
 
 /** How one WORK ITEM of a paginated catalog becomes records: build
   * the request URL, supply per-source headers, map the response body.
@@ -50,7 +50,7 @@ trait PageMapper extends Serializable {
   */
 class PaginatedCatalogSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap)
-      : StructType = NycDiscoverySource.Schema
+      : StructType = Pipeline.RecordsEncoder.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
@@ -78,7 +78,7 @@ private[sources] class CatalogTable(tableName: String,
     presets: Map[String, String] = Map.empty)
     extends Table with SupportsRead {
   override def name(): String = tableName
-  override def schema(): StructType = NycDiscoverySource.Schema
+  override def schema(): StructType = Pipeline.RecordsEncoder.schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
@@ -114,7 +114,7 @@ private[sources] class CatalogTable(tableName: String,
     }
 
     override def build(): Scan = this
-    override def readSchema(): StructType = NycDiscoverySource.Schema
+    override def readSchema(): StructType = Pipeline.RecordsEncoder.schema
     override def toBatch: Batch = this
     override def planInputPartitions(): Array[InputPartition] =
       items.map(i => CatalogItemPartition(i, pageSize): InputPartition)
@@ -146,7 +146,7 @@ private class CatalogItemReaderFactory(endpoint: String,
           .getDeclaredConstructor().newInstance()
           .asInstanceOf[PageMapper]
         val limiter = new RateLimiter(rate)
-        val serializer = NycDiscoverySource.encoder.createSerializer()
+        val serializer = Pipeline.RecordsEncoder.createSerializer()
         limiter.acquire()
         val url = mapper.pageUrl(endpoint, p.item, p.pageSize)
         fetcher.get(url, mapper.headers) match {

@@ -501,19 +501,16 @@ object StreamingOps {
     * |keys in the watermark window|, not |keys ever| — the knob a
     * 100 TB/day stream actually has.
     *
-    * `partialAgg` (round-13 verdict item 3): an optional per-batch
-    * PRE-AGGREGATE written alongside the rows to `aggPath/batch=id`
-    * — the incremental-rollup shape a production stream keeps so
-    * consumers never re-scan the row sink (st9's post-stream rollup
-    * read 0.44 s of re-listing + full-row aggregation; the partials
-    * fold the same answer from |keys|-sized relations). The batch
-    * frame is persisted for the two actions — WITHOUT it the second
-    * action re-executes the stateful dedup plan per batch, the exact
-    * double-execution the round-13 isEmpty fix removed.
+    * A restart resumes from `checkpointDir`: files a committed batch
+    * read are not read again, and the keys it kept stay in the dedup
+    * state, so later redeliveries of them are still dropped.
+    *
+    * Consumers read the row sink: a per-batch pre-aggregate beside it
+    * measured net slower at fixture scale (+0.7–0.9 s of in-stream
+    * writes for −0.1–0.2 s of final read, BASELINE.md round 14).
     */
   def dedupSink(stream: DataFrame, tsCol: String, keyCols: Seq[String],
-      watermarkDelay: String, outPath: String, checkpointDir: String,
-      partialAgg: Option[(DataFrame => DataFrame, String)] = None)
+      watermarkDelay: String, outPath: String, checkpointDir: String)
       : Unit = {
     val deduped = stream
       .withWatermark(tsCol, watermarkDelay)
@@ -526,23 +523,8 @@ object StreamingOps {
         // before the write ran it again — double the per-batch cost
         // for nothing (an empty batch=<id> write is harmless and
         // replay-safe).
-        partialAgg match {
-          case None =>
-            batch.write.mode("overwrite")
-              .parquet(s"$outPath/batch=$batchId")
-          case Some((agg, aggPath)) =>
-            batch.write.mode("overwrite")
-              .parquet(s"$outPath/batch=$batchId")
-            // derive the partial from the files JUST written (still
-            // page-hot) — never a second action on `batch`, which
-            // would re-execute the stateful dedup plan (and persist,
-            // the alternative, measured +0.7 s across the 3 batches:
-            // cache materialization + eviction on mostly-cold JVMs)
-            agg(batch.sparkSession.read
-                .parquet(s"$outPath/batch=$batchId"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$aggPath/batch=$batchId")
-        }
+        batch.write.mode("overwrite")
+          .parquet(s"$outPath/batch=$batchId")
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -24,7 +24,8 @@ class FixtureCacheSpec extends SparkSpec {
   private def answers(dir: String): Map[String, Any] =
     Seq("h6_pagerank", "l2_fts_search", "n9_dup_clusters")
       .map(q => q -> query(q, dir)).toMap ++ Map(
-        "tableRows" -> RegistryFixtures.tableRows(spark, dir, "documents"),
+        "footerRows" -> RegistryFixtures.footerRows(spark,
+          Tables.path(dir, "documents")),
         "documents" -> Tables.documents(spark, dir).count())
 
   private def assertServedFromCache(dir: String): Unit = {

@@ -113,7 +113,8 @@ class ReportTierSpec extends SparkSpec {
     assert(stateWidth(10000000L) >= stateWidth(600000L)) // monotone
     // and the real bound feeding the derivation: lineitem's footer
     // count at the smoke sf is the table's actual row count
-    assert(RegistryFixtures.tableRows(spark, sfSmoke, "lineitem") > 0)
+    assert(RegistryFixtures.footerRows(spark,
+      Tables.path(sfSmoke, "lineitem")) > 0)
   }
 
   test("narrow child carries exactly the derived confs") {

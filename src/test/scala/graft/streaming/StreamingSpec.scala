@@ -1,6 +1,8 @@
 package graft.streaming
 
-import graft.{SparkSpec, Tables}
+import graft.{Graft, RegistryFixtures, SparkEntry, SparkSpec, Tables}
+import graft.ingest.DataRecord
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkSpec {
@@ -228,23 +230,12 @@ class StreamingSpec extends SparkSpec {
     val mk = (ids: Seq[Long]) => ids.map(i =>
       (i, new java.sql.Timestamp(1700000000000L + i * 1000), s"e$i"))
       .toDF("event_id", "ts", "payload")
-    // batch files named for arrival order; batch 2 redelivers 1 and 7
-    val in = root + "/in"
-    new java.io.File(in).mkdirs()
-    def land(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = root + "/" + name
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(in, s"$name.parquet").toPath)
-      ()
-    }
-    land("b0", mk(Seq(1L, 2L, 7L)))
-    land("b1", mk(Seq(1L, 3L, 7L, 9L)))
+    // batch files named for arrival order; batch 1 redelivers 1 and 7
+    RegistryFixtures.writeInputBatches(
+      Seq(mk(Seq(1L, 2L, 7L)), mk(Seq(1L, 3L, 7L, 9L))), root)
     val schema = mk(Seq(0L)).schema
     val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
+      .option("maxFilesPerTrigger", "1").parquet(root + "/in")
     StreamingOps.dedupSink(stream, "ts", Seq("event_id"),
       "1 hour", root + "/out", root + "/ckpt")
     val got = spark.read.parquet(root + "/out")
@@ -253,51 +244,99 @@ class StreamingSpec extends SparkSpec {
       "each redelivered key must appear exactly once")
   }
 
-  test("dedupSink partialAgg: the per-batch partials fold to the " +
-      "same rollup as the row sink (the at-scale consumer path — " +
-      "kept off the st9 registry after measuring net-slower at " +
-      "fixture scale, see BASELINE.md round-14)") {
-    import spark.implicits._
-    val root = tmpDir("sdsinkp")
-    val mk = (ids: Seq[Long]) => ids.map(i =>
-      (i, new java.sql.Timestamp(1700000000000L + i * 1000),
-        s"t${i % 2}", i * 10L))
-      .toDF("event_id", "ts", "event_type", "cents")
-    val in = root + "/in"
-    new java.io.File(in).mkdirs()
-    def land(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val tmp = root + "/" + name
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(in, s"$name.parquet").toPath)
-      ()
+  /** Rows read by the one streaming query `run` starts, summed over its
+    * progress events. Those arrive on the listener bus, so this waits
+    * for the query's termination event, which follows them.
+    */
+  private def rowsRead(run: => Unit): Long = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val rows = new java.util.concurrent.atomic.AtomicLong
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        rows.addAndGet(e.progress.numInputRows); ()
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.countDown()
     }
-    land("b0", mk(Seq(1L, 2L, 7L)))
-    land("b1", mk(Seq(1L, 3L, 7L, 9L)))
-    val schema = mk(Seq(0L)).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    StreamingOps.dedupSink(stream, "ts", Seq("event_id"),
-      "1 hour", root + "/out", root + "/ckpt",
-      partialAgg = Some((
-        (b: org.apache.spark.sql.DataFrame) =>
-          b.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"), sum(col("cents")).as("c")),
-        root + "/agg")))
-    val fromPartials = spark.read.parquet(root + "/agg")
-      .groupBy(col("event_type"))
-      .agg(sum(col("n")).as("n"), sum(col("c")).as("c"))
-      .orderBy(col("event_type"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val fromRows = spark.read.parquet(root + "/out")
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("c"))
-      .orderBy(col("event_type"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    assert(fromPartials.toSeq == fromRows.toSeq,
-      "partials must fold to the row-sink rollup")
+    spark.streams.addListener(listener)
+    try {
+      run
+      assert(ended.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "no termination event")
+    } finally spark.streams.removeListener(listener)
+    rows.get
+  }
+
+  test("dedupSink restart: a stream resumed from its checkpoint " +
+      "equals an uninterrupted run and reads only the new files") {
+    import spark.implicits._
+    val mk = (ids: Seq[Long]) => ids.map(i =>
+      (i, new java.sql.Timestamp(1700000000000L + i * 1000), s"e$i"))
+      .toDF("event_id", "ts", "payload")
+    // batches 1 and 2 redeliver batch-0 keys (1; 2 and 7)
+    val batches = Seq(mk(Seq(1L, 2L, 7L)), mk(Seq(1L, 3L, 9L)),
+      mk(Seq(2L, 7L, 11L)))
+    def run(root: String): Long = rowsRead {
+      StreamingOps.dedupSink(spark.readStream.schema(batches.head.schema)
+          .option("maxFilesPerTrigger", "1").parquet(root + "/in"),
+        "ts", Seq("event_id"), "1 hour", root + "/out", root + "/ckpt")
+    }
+    def out(root: String): Seq[String] =
+      spark.read.parquet(root + "/out")
+        .select("event_id", "ts", "payload").collect()
+        .map(_.toString).sorted.toSeq
+
+    val whole = tmpDir("sdwhole")
+    RegistryFixtures.writeInputBatches(batches, whole)
+    assert(run(whole) == 9)
+
+    val resumed = tmpDir("sdresumed")
+    RegistryFixtures.writeInputBatches(batches.take(1), resumed)
+    assert(run(resumed) == 3)
+    RegistryFixtures.writeInputBatches(batches.drop(1), resumed)
+    assert(run(resumed) == 6, "the resumed query must read only the " +
+      "files landed since its last committed batch")
+    assert(out(resumed) == out(whole))
+    assert(out(whole).size == 6, "each redelivered key exactly once")
+  }
+
+  test("collectStream restart: a stream resumed from its checkpoint " +
+      "equals an uninterrupted run and reads only the new files") {
+    import spark.implicits._
+    def rec(id: String, title: String, atMillis: Long): DataRecord =
+      DataRecord("Streamed Source", id, title, None, "dataset",
+        s"https://example.org/$id", "{}", None, Nil, None,
+        new java.sql.Timestamp(atMillis), None, None, None)
+    // batches 1 and 2 redeliver batch-0 keys under later copies
+    val batches = Seq(
+      Seq(rec("a", "First", 1000L), rec("b", "Second", 1100L)),
+      Seq(rec("a", "Redelivered", 2000L), rec("c", "Third", 2100L)),
+      Seq(rec("b", "Redelivered", 3000L), rec("d", "Fourth", 3100L)))
+      .map(_.toDS.toDF)
+    def run(g: Graft, root: String): Long =
+      rowsRead(g.collectStream(root + "/in", root + "/ckpt"))
+    def records(g: Graft): Seq[String] =
+      g.records.collect().map(_.toString).sorted.toSeq
+
+    val whole = tmpDir("csWhole")
+    val gWhole = new Graft(spark, whole + "/catalog")
+    RegistryFixtures.writeInputBatches(batches, whole)
+    assert(run(gWhole, whole) == 6)
+
+    val resumed = tmpDir("csResumed")
+    val g = new Graft(spark, resumed + "/catalog")
+    RegistryFixtures.writeInputBatches(batches.take(1), resumed)
+    assert(run(g, resumed) == 2)
+    RegistryFixtures.writeInputBatches(batches.drop(1), resumed)
+    assert(run(g, resumed) == 4, "the resumed query must read only the " +
+      "files landed since its last committed batch")
+    assert(records(g) == records(gWhole))
+    assert(g.records.select("record_id", "title").as[(String, String)]
+      .collect().toMap == Map("a" -> "First", "b" -> "Second",
+        "c" -> "Third", "d" -> "Fourth"))
   }
 
   test("stream-static enrichment join matches the batch equivalent") {
@@ -737,5 +776,30 @@ class StreamingSpec extends SparkSpec {
     // (10,900) same-batch-or-not, (10,901) cross-batch from state;
     // 902 excluded (t=60 == 0+60 exclusive), 903 precedes view 11
     assert(got == Set((10L, 900L), (10L, 901L)))
+  }
+
+  test("st6–st11 child sessions are sized from their landing files, " +
+      "and a fixture build keeps only its landing files") {
+    val sf = "/root/testdata/sf0.01"
+    Seq(
+      "st6_stream_mor" -> ("stream_mor", Seq("in")),
+      "st7_stream_asof" -> ("stream_asof", Seq("in")),
+      "st8_stream_hll" -> ("stream_hll", Seq("in")),
+      "st9_stream_dedup" -> ("stream_dedup", Seq("in")),
+      "st10_stream_join" -> ("stream_join", Seq("v/in", "p/in")),
+      "st11_stream_cms" -> ("stream_cms", Seq("in"))
+    ).foreach { case (q, (tag, landing)) =>
+      val width = SparkEntry.queries(q)(spark, sf).sparkSession.conf
+        .get("spark.sql.shuffle.partitions")
+      val root = RegistryFixtures.cachedStreamInput(spark, sf, tag)(
+        _ => fail(s"$q: its fixture is not cached"))
+      val rows = landing.map(d => spark.read.parquet(s"$root/$d").count())
+      assert(width == StreamingOps.stateWidth(rows.sum).toString,
+        s"$q: width $width for ${rows.sum} landed rows")
+      val names = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+        .iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(!names.exists(n => n == "state_rows" || n.matches("b\\d+")),
+        s"$q: fixture holds more than its landing files: $names")
+    }
   }
 }
