@@ -93,11 +93,14 @@ object Catalog {
     * partial file in the table. Last, `refreshByPath` re-resolves
     * cached plans over `path`, as Spark's insert command does. For a
     * batch bounded by driver memory; a DataFrame keeps Spark's writer.
+    * Returns the committed files' stamps, as [[Lineage.stamps]] lists
+    * them; none for no rows.
     */
   def appendRows[T](spark: SparkSession, rows: Seq[T],
       encoder: ExpressionEncoder[T], path: String,
-      partitionCols: Seq[String] = Nil): Unit =
-    if (rows.nonEmpty) SQLConf.withExistingConf(spark.sessionState.conf) {
+      partitionCols: Seq[String] = Nil): Seq[FixtureCache.FileStamp] =
+    if (rows.isEmpty) Nil
+    else SQLConf.withExistingConf(spark.sessionState.conf) {
       val toRow = encoder.createSerializer()
       val (parts, data) = encoder.schema.fields.zipWithIndex
         .partition(f => partitionCols.contains(f._1.name))
@@ -134,6 +137,8 @@ object Catalog {
         if (!fs.rename(tmp, dst)) throw new IOException(s"rename $tmp → $dst failed")
       }
       spark.catalog.refreshByPath(path)
+      val base = FixtureCache.qualified(spark, path)
+      written.map { case (_, dst) => FixtureCache.stamp(base, fs.getFileStatus(dst)) }
     }
 
   /** K7 — partitioned table layout. `partitionBy("source_name")`

@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, CopyOnWriteArrayList}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
@@ -74,10 +74,20 @@ object FixtureCache {
     */
   private[graft] def fingerprint(s: SparkSession, path: String)
       : Seq[FileStamp] = {
-    val root = new Path(path)
-    val base = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .makeQualified(root).toString
-    Catalog.files(s, path).map(f => (f.getPath.toString.stripPrefix(base),
-      f.getLen, f.getModificationTime)).sortBy(_._1)
+    val base = qualified(s, path)
+    Catalog.files(s, path).map(stamp(base, _)).sortBy(_._1)
   }
+
+  /** `path` qualified by its file system: the prefix a listed file's
+    * path carries, which its stamp drops.
+    */
+  private[graft] def qualified(s: SparkSession, path: String): String = {
+    val root = new Path(path)
+    root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toString
+  }
+
+  /** The stamp of file `f` under the qualified path `base`. */
+  private[graft] def stamp(base: String, f: FileStatus): FileStamp =
+    (f.getPath.toString.stripPrefix(base), f.getLen, f.getModificationTime)
 }

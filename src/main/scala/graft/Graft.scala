@@ -2,7 +2,6 @@ package graft
 
 import graft.ingest.{Adapter, ComplianceCheck, DataRecord, Pipeline}
 import graft.operators.{ExportOps, FtsOps, ReferenceOps}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
@@ -25,7 +24,10 @@ import scala.collection.immutable.ListMap
   * Writes of rows already on the driver (`setup`'s checks, `collect`'s
   * new records) are written there with Spark's parquet writer and run
   * no Spark job; writes of DataFrames (`collectStream`, upserts,
-  * backfills, compaction) keep Spark's distributed writer.
+  * backfills, compaction) keep Spark's distributed writer. `collect`
+  * dedups against the records table's key index, which the session
+  * holds and keeps current from the table's file stamps ([[Pipeline]]),
+  * so a warm collect runs no Spark job at all.
   *
   * A serve write is `collect` then [[indexFts]]. The index update
   * costs in proportion to the rows the collect added: it tokenizes
@@ -54,11 +56,15 @@ final class Graft(spark: SparkSession, tableDir: String) {
   /** `collect` — gate, discover, dedup-append
     * (ethical_crawler.py:1157–1203). Returns new-record count.
     *
-    * One Spark job into an existing catalog: the key probe of the
-    * batch's keys. The checks append and the write of the new rows, one
-    * file per `source_name` it touches, run on the driver
-    * ([[Catalog.appendRows]]), so a collect into a fresh directory runs
-    * none. No checks or nothing new skips the matching write.
+    * No Spark job into a fresh directory or over a table whose files
+    * the session's key index covers: the dedup looks the batch's keys
+    * up in the index on the driver, and the checks append and the write
+    * of the new rows, one file per `source_name` it touches, run on the
+    * driver ([[Catalog.appendRows]]). One job, a scan of the key
+    * columns, after a file the index does not cover arrives (another
+    * writer's append) or a covered one changes (a rewrite), and on a
+    * cold process's first collect. No checks or nothing new skips the
+    * matching write.
     */
   def collect(adapters: Seq[Adapter]): Long =
     pipeline.collectAll(adapters)._1
@@ -110,7 +116,6 @@ final class Graft(spark: SparkSession, tableDir: String) {
     */
   def indexFts(): Unit = {
     val buckets = spark.sessionState.conf.numShufflePartitions
-    val base = qualified(pipeline.recordsPath)
     val listed = Lineage.stamps(spark, pipeline.recordsPath)
     def write(docs: DataFrame, mode: SaveMode): Unit =
       FtsOps.writeIndex(ftsDocs(docs), "record_id", "text", ftsTable,
@@ -123,7 +128,7 @@ final class Graft(spark: SparkSession, tableDir: String) {
     val covered = uncovered match {
       case Some(files) if files.isEmpty => None // up to date
       case Some(files) =>
-        write(pipeline.recordsFiles(files.map(base + _._1)), SaveMode.Append)
+        write(pipeline.recordsFiles(files), SaveMode.Append)
         Some(listed)
       case None =>
         val r = records
@@ -131,18 +136,11 @@ final class Graft(spark: SparkSession, tableDir: String) {
         // the resolved relation may postdate the listing; record it
         // only when it read exactly the listed files (an unrecorded
         // build leaves a record whose index files no longer match)
-        val read = r.inputFiles.map(f =>
-          new Path(java.net.URI.create(f)).toString.stripPrefix(base))
-        Some(listed).filter(_.map(_._1).toSet == read.toSet)
+        Some(listed).filter(_.map(_._1).toSet ==
+          Lineage.inputs(spark, pipeline.recordsPath, r))
     }
     covered.foreach(Lineage.write(spark, ftsPath, _))
   }
-
-  private def fs = new Path(tableDir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def qualified(path: String): String =
-    fs.makeQualified(new Path(path)).toString
 
   private def ftsIndexAt(buckets: Int): Boolean =
     spark.catalog.tableExists(ftsTable) &&

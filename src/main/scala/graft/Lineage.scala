@@ -3,7 +3,7 @@ package graft
 import graft.FixtureCache.FileStamp
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** What a served artifact (the FTS index, a materialized view) was
   * built from: the stamps of the input data files it covers and of its
@@ -39,6 +39,15 @@ object Lineage {
   def stamps(spark: SparkSession, path: String): Seq[FileStamp] =
     FixtureCache.fingerprint(spark, path).filterNot(_._1.split('/')
       .exists(p => p.startsWith("_") || p.startsWith(".")))
+
+  /** The data files `df` reads, named relative to `path` as [[stamps]]
+    * names them.
+    */
+  def inputs(spark: SparkSession, path: String, df: DataFrame): Set[String] = {
+    val base = FixtureCache.qualified(spark, path)
+    df.inputFiles.map(f =>
+      new Path(java.net.URI.create(f)).toString.stripPrefix(base)).toSet
+  }
 
   private def recordPath(spark: SparkSession, dir: String) = {
     val p = new Path(dir, "_graft_lineage")

@@ -1,10 +1,11 @@
 package graft.ingest
 
-import graft.Catalog
+import graft.{Catalog, FixtureCache, Lineage}
+import graft.FixtureCache.FileStamp
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+import scala.collection.Searching
 
 /** The `collect` verb end-to-end (ethical_crawler.py:938–966 + CLI
   * :1157–1203): compliance-gate each registered adapter (R2,
@@ -14,19 +15,29 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale shape: the HTTP fetch is driver-side BY DESIGN (rate limits
   * are per-source and global), so a collect batch is one discovery
-  * response already on the driver (≤ 5000 items, ~2 MB). The table
-  * side stays distributed: one key probe scans only the batch's
-  * `source_name` partitions and the two key columns, and returns at
-  * most sources × ids keys (|batch| for one source). The set logic — first per key in the batch,
-  * minus the probed keys — is batch-bounded and runs on the driver,
-  * with no shuffle. Only the NEW rows are written (the existing table
-  * is never rewritten), and they are already on the driver, so the
-  * driver writes them with Spark's parquet writer ([[Catalog.appendRows]])
-  * instead of shipping them to a writer task: a collect adds one file
-  * per `source_name` partition it touches, so later reads, probes and
-  * index appends open one file per collect, not one per core. The
-  * compliance checks are written the same way, so the key probe is a
-  * collect's only Spark job.
+  * response already on the driver (≤ 5000 items, ~2 MB). Dedup runs
+  * against the table's key index, held on the driver for the session
+  * as the reference holds its in-process `UNIQUE(source_name,
+  * record_id)` index (ethical_crawler.py:843): the stamps of the table
+  * files it covers and, per `source_name`, the sorted record ids in
+  * them: ~60 B of driver heap per stored key (Spark's `SizeEstimator`:
+  * 4.3 MB for 72k keys with 9-character ids), so ~60 MB per million
+  * keys. A collect lists the table's files first. When a covered file
+  * is gone or changed, the index is rebuilt from one scan of the whole
+  * table's two key columns; otherwise only the files it does not cover
+  * (another writer's) are scanned. The files a collect writes join the
+  * index as they are written, so a warm collect runs no Spark job,
+  * while a cold process pays one scan of the key columns of the whole
+  * table on its first collect. The set
+  * logic — first per key in the batch, minus the stored keys — is
+  * batch-bounded and runs on the driver, with no shuffle. Only the NEW
+  * rows are written (the existing table is never rewritten), and they
+  * are already on the driver, so the driver writes them with Spark's
+  * parquet writer ([[Catalog.appendRows]]) instead of shipping them to
+  * a writer task: a collect adds one file per `source_name` partition
+  * it touches, so later reads and index appends open one file per
+  * collect, not one per core. The compliance checks are written the
+  * same way.
   *
   * Read rule: each table resolves to one relation per table version
   * ([[Catalog.resolved]]). Re-reading an unchanged table is free — the
@@ -47,10 +58,14 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
       Catalog.resolved(spark, recordsPath, Some(Pipeline.RecordsSchema))
     else spark.createDataFrame(java.util.List.of[Row](), Pipeline.RecordsSchema)
 
-  /** The given `data_records` data files, read as the table. */
-  def recordsFiles(files: Seq[String]): DataFrame =
+  /** The given `data_records` data files, as [[Lineage.stamps]] lists
+    * them, read as the table.
+    */
+  def recordsFiles(files: Seq[FileStamp]): DataFrame = {
+    val base = FixtureCache.qualified(spark, recordsPath)
     spark.read.schema(Pipeline.RecordsSchema)
-      .option("basePath", recordsPath).parquet(files: _*)
+      .option("basePath", recordsPath).parquet(files.map(base + _._1): _*)
+  }
 
   /** `compliance_checks` at its current version; empty before the
     * first check is written.
@@ -89,33 +104,49 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
   /** K5 — dedup append of a batch into `data_records`: existing rows
     * win; within the batch the first per `(source_name, record_id)`
     * wins, in arrival order (ethical_crawler.py:914's row loop).
-    * Returns the number of genuinely new rows written.
+    * Returns the number of genuinely new rows written. The table's key
+    * index is locked from its refresh to its update with the written
+    * files, so two appends to one table in a session never both find a
+    * key new.
     */
   def appendRecords(records: Seq[DataRecord]): Long = {
     val batch = records.distinctBy(r => (r.source_name, r.record_id))
-    val fresh =
-      if (batch.isEmpty || !Catalog.tableExists(spark, recordsPath)) batch
-      else {
-        val seen = storedKeys(batch)
-        batch.filterNot(r => seen((r.source_name, r.record_id)))
-      }
-    Catalog.appendRows(spark, fresh, Pipeline.RecordsEncoder, recordsPath,
-      Seq("source_name"))
-    fresh.size.toLong
+    if (batch.isEmpty) return 0L
+    val index = Pipeline.keyIndexes(spark,
+      FixtureCache.qualified(spark, recordsPath))(new Pipeline.KeyIndex)
+    index.synchronized {
+      refresh(index)
+      val fresh = batch.filterNot(r => index.contains(r.source_name, r.record_id))
+      index.add(Catalog.appendRows(spark, fresh, Pipeline.RecordsEncoder,
+          recordsPath, Seq("source_name")),
+        fresh.map(r => (r.source_name, r.record_id)))
+      fresh.size.toLong
+    }
   }
 
-  /** Stored keys that may be in `batch`: one scan pruned to the
-    * batch's `source_name` partitions and the two key columns. Its
-    * IN×IN filter admits pairs outside the batch (sources × ids, so
-    * |batch| pairs for a one-source batch), hence the caller matches
-    * exact pairs.
+  /** Bring `index` up to the table's listed files by [[Lineage]]'s
+    * rule. When a covered file is gone or changed (a rewrite, a deleted
+    * partition) it is rebuilt from one scan of the whole table's key
+    * columns, covering the listed files that scan read; otherwise only
+    * the files it does not cover (another writer's, `collectStream`'s)
+    * are scanned.
     */
-  private def storedKeys(batch: Seq[DataRecord]): Set[(String, String)] =
-    dataRecords
-      .where(col("source_name").isin(batch.map(_.source_name).distinct: _*) &&
-        col("record_id").isin(batch.map(_.record_id).distinct: _*))
-      .select("source_name", "record_id").as[(String, String)]
-      .collect().toSet
+  private def refresh(index: Pipeline.KeyIndex): Unit = {
+    def keys(table: DataFrame) = table.select("source_name", "record_id")
+      .as[(String, String)].collect().toSeq
+    val listed = Lineage.stamps(spark, recordsPath)
+    if (!index.lineage.valid(listed, Nil)) {
+      index.clear()
+      if (listed.nonEmpty) {
+        val table = dataRecords
+        val read = Lineage.inputs(spark, recordsPath, table)
+        index.add(listed.filter(f => read(f._1)), keys(table))
+      }
+    } else {
+      val files = index.lineage.uncovered(listed)
+      if (files.nonEmpty) index.add(files, keys(recordsFiles(files)))
+    }
+  }
 
   /** L6 — per-dataset refresh, last-write-wins upsert: refreshed rows
     * REPLACE existing rows with the same key. Implemented as
@@ -165,4 +196,39 @@ object Pipeline {
   }
 
   private val ChecksSchema: StructType = ChecksEncoder.schema
+
+  /** The `(source_name, record_id)` keys stored in one records table:
+    * the stamps of the files it covers, as a [[Lineage]] with no
+    * outputs, and for each `source_name` the sorted record ids in those
+    * files (sorted arrays hold 72k keys in 4.3 MB, a hash set of the
+    * pairs in 12.3 MB). Not thread-safe: callers lock it.
+    */
+  private final class KeyIndex {
+    var lineage: Lineage = Lineage(Nil, Nil)
+    private var ids = Map.empty[String, Array[String]]
+
+    def contains(source: String, id: String): Boolean =
+      ids.get(source).exists(_.search(id).isInstanceOf[Searching.Found])
+
+    /** Cover `files` too, whose keys are `keys`. */
+    def add(files: Seq[FileStamp], keys: Seq[(String, String)]): Unit = {
+      lineage = Lineage(lineage.covered ++ files, Nil)
+      keys.groupMap(_._1)(_._2).foreach { case (source, more) =>
+        // the held ids are one sorted run, so the sort (TimSort) costs
+        // about a merge plus sorting the new ids
+        ids = ids.updated(source,
+          (ids.getOrElse(source, Array.empty[String]) ++ more).sorted)
+      }
+    }
+
+    def clear(): Unit = {
+      lineage = Lineage(Nil, Nil)
+      ids = Map.empty
+    }
+  }
+
+  /** Each records table's key index (by qualified path), held for the
+    * session: two [[Pipeline]]s over one directory share it.
+    */
+  private val keyIndexes = new FixtureCache[String, KeyIndex]
 }

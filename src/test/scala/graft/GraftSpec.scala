@@ -215,9 +215,15 @@ class GraftSpec extends SparkSpec {
     Catalog.files(spark, path).map(_.getPath.toString)
       .filter(_.endsWith(".parquet"))
 
-  test("collect: 1 job (the key probe) into an existing catalog, none " +
-      "into a fresh one; one file per source partition, nothing written " +
-      "for an empty or repeated batch") {
+  def rec(src: String, id: String): DataRecord =
+    DataRecord(src, id, s"title $id", None, "dataset",
+      s"https://example.org/$id", "{}", None, Nil, None,
+      java.sql.Timestamp.from(clock.instant()), None, None, None)
+
+  test("collect: no job into a fresh directory or over files the " +
+      "session's key index covers, 1 after another writer's file; one " +
+      "file per source partition, nothing written for an empty or " +
+      "repeated batch") {
     val dir = tmpDir("graftjobs")
     val recordsDir = dir + "/data_records"
     val g = new Graft(spark, dir)
@@ -232,33 +238,71 @@ class GraftSpec extends SparkSpec {
     assert(jobsLaunchedBy(assert(g.collect(Seq(first)) == 2)) == 0)
     assert(dataFiles(recordsDir).size == 1)
 
-    // existing catalog: the key probe is the one job
+    // the key index covers the files this session wrote: no key scan
     val second = nycFixture(item("bb-2", "Bike Counts", 20),
       item("cc-3", "Bike Lanes", 5), item("dd-4", "Signals", 7))
-    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 2)) == 1)
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 2)) == 0)
     assert(dataFiles(recordsDir).size == 2)
 
-    // a batch already seen: the key probe, no data file
-    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 0)) == 1)
+    // a batch already seen: no job, no data file
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 0)) == 0)
     assert(dataFiles(recordsDir).size == 2)
     assert(jobsLaunchedBy(assert(g.setup(Seq(first)).size == 1)) == 0)
     assert(g.records.count() == 4)
 
+    // another writer's files: the next collect scans the key columns
+    // once, and later ones none, however many files the table gains
+    new Pipeline(spark, dir).upsertRecords(Seq(rec("NYC Open Data", "aa-1")))
+    assert(jobsLaunchedBy(assert(g.collect(Seq(nycFixture(
+      item("ee-5", "Permits", 3)))) == 1)) == 1)
+    (1 to 20).foreach { i =>
+      assert(jobsLaunchedBy(assert(g.collect(Seq(nycFixture(
+        item(s"n-$i", s"Title $i", i)))) == 1)) == 0, i)
+    }
+    val files = dataFiles(recordsDir).size
+    assert(jobsLaunchedBy(assert(g.collect(Seq(second)) == 0)) == 0)
+    assert(dataFiles(recordsDir).size == files)
+    assert(g.records.count() == 25)
+
     // a batch across two sources: one new file under each partition
-    def rec(src: String, id: String): DataRecord =
-      DataRecord(src, id, s"title $id", None, "dataset",
-        s"https://example.org/$id", "{}", None, Nil, None,
-        java.sql.Timestamp.from(clock.instant()), None, None, None)
     def filesPerSource: Map[String, Int] = dataFiles(recordsDir)
       .groupBy(f => f.split("/").find(_.startsWith("source_name=")).get)
       .map { case (k, v) => k -> v.size }
     val before = filesPerSource
     assert(new Pipeline(spark, dir).appendRecords(Seq(
-      rec("NYC Open Data", "ee-5"), rec("Other Source", "x-1"),
-      rec("NYC Open Data", "ff-6"))) == 3)
+      rec("NYC Open Data", "ff-6"), rec("Other Source", "x-1"),
+      rec("NYC Open Data", "gg-7"))) == 3)
     val added = filesPerSource.map { case (k, n) =>
       k -> (n - before.getOrElse(k, 0)) }
     assert(added.size == 2 && added.values.forall(_ == 1), added)
+  }
+
+  test("after an upsert, an embedding backfill or a compaction, a " +
+      "collect adds exactly the keys the table lacks") {
+    import spark.implicits._
+    val dir = tmpDir("graftrewrite")
+    val g = new Graft(spark, dir)
+    val p = new Pipeline(spark, dir)
+    def collect(ids: String*): Long =
+      g.collect(Seq(nycFixture(ids.map(id => item(id, s"Title $id", 1)): _*)))
+    def stored: Seq[String] =
+      g.records.select("record_id").as[String].collect().toSeq
+
+    // a table first written by an upsert, before any collect
+    p.upsertRecords(Seq(rec("NYC Open Data", "aa-1")))
+    assert(collect("aa-1", "bb-2") == 1)
+    Seq[(String, () => Unit)](
+      "upsert" -> (() => p.upsertRecords(Seq(rec("NYC Open Data", "bb-2"),
+        rec("NYC Open Data", "cc-3")))),
+      "backfill" -> (() => g.backfillEmbeddings()),
+      "compact" -> (() => Catalog.compact(spark, dir + "/data_records"))
+    ).zipWithIndex.foreach { case ((name, rewrite), i) =>
+      rewrite()
+      assert(collect(stored: _*) == 0, name)
+      assert(collect(s"new-$i") == 1, name)
+    }
+    assert(stored.sorted == Seq("aa-1", "bb-2", "cc-3", "new-0", "new-1",
+      "new-2"))
   }
 
   test("read verbs on a set-up catalog with no records answer empty") {
@@ -299,12 +343,14 @@ class GraftSpec extends SparkSpec {
     val counts = batches.map(collect(clean, _))
     assert(counts == Seq(2L, 1L))
 
-    // a complete data file holding the second batch's new row, as the
-    // driver write leaves it when interrupted before its rename
+    // a complete data file holding the second batch's new row and a row
+    // no batch has, as the driver write leaves it when interrupted
+    // before its rename
     val donor = tmpDir("graftdonor")
-    new Pipeline(spark, donor).appendRecords(
-      clean.records.where("record_id = 'cc-3'").as[DataRecord](
-        org.apache.spark.sql.Encoders.product[DataRecord]).collect().toSeq)
+    val cc3 = clean.records.where("record_id = 'cc-3'").as[DataRecord](
+      org.apache.spark.sql.Encoders.product[DataRecord]).head()
+    new Pipeline(spark, donor).appendRecords(Seq(cc3,
+      cc3.copy(record_id = "dd-4")))
     val donorFile = dataFiles(donor).head
     val fs = new Path(donor).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val future = System.currentTimeMillis() + 3600000L
@@ -340,7 +386,7 @@ class GraftSpec extends SparkSpec {
           lineage)
       }
 
-      // the key probe does not see the planted row either
+      // the key index does not see the planted row either
       val rest = if (committedFirst) batches.tail else batches
       assert(rest.map(collect(g, _)) == counts.takeRight(rest.size))
       assert(rows(g) == rows(clean))
@@ -352,9 +398,13 @@ class GraftSpec extends SparkSpec {
       val committed = new Path(s"$recordsDir/source_name=NYC Open Data", part)
       assert(fs.rename(inFlight, committed))
       assert(fs.getFileStatus(committed).getModificationTime == future)
-      assert(g.records.count() == counts.sum + 1)
+      assert(g.records.count() == counts.sum + 2)
       assert(sortedRows(g.analyticsMaterialized(v)) ==
         sortedRows(g.analytics()(v)))
+
+      // the committed file's keys are stored keys for the next collect
+      assert(collect(g, Seq(item("cc-3", "Bike Lanes", 5),
+        item("dd-4", "Signals", 7))) == 0)
     }
   }
 
@@ -386,6 +436,10 @@ class GraftSpec extends SparkSpec {
     assert(sortedRows(served) == sortedRows(g.analytics()(v)))
     assert(served.collect().map(_.getAs[String]("source_name")).toSeq ==
       Seq("NYC Open Data"))
+
+    // the deleted rows are gone for dedup too: collecting them adds them
+    assert(g.collect(Seq(nyc, sec)) == 3)
+    assert(g.records.count() == 5)
   }
 
   test("a torn lineage record reads as none: the view and the FTS index " +
@@ -579,6 +633,9 @@ class GraftSpec extends SparkSpec {
       "NYC Open Data" -> "bb-2", "Streamed Source" -> "s-1",
       "Streamed Source" -> "s-2"))
     assert(g1.records.count() == 4)
+    // the streamed files' keys are stored keys for the next collect
+    assert(new Pipeline(spark, d1 + "/catalog")
+      .appendRecords(Seq(rec("s-2"), rec("s-1"))) == 0)
 
     val d2 = tmpDir("layoutstreamfirst")
     val g2 = new Graft(spark, d2 + "/catalog")

@@ -871,8 +871,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("signature store: gates a batch, grows, re-append rejects all") {
-    val root = java.nio.file.Files.createTempDirectory("sigstore")
-      .toString + "/store"
+    val root = tmpDir("sigstore") + "/store"
     val base = "alpha beta gamma delta epsilon zeta eta theta"
     val stored = Seq(
       (1L, "s1", base),
@@ -917,8 +916,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // recompute (c3's relation) on rejected ids
     val docs = Tables.documents(spark, sfSmoke)
       .select("doc_id", "source", "text")
-    val root2 = java.nio.file.Files.createTempDirectory("sigstore2")
-      .toString + "/store"
+    val root2 = tmpDir("sigstore2") + "/store"
     DedupOps.initSignatureStore(
       docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text",
       root2, 100)
@@ -939,8 +937,7 @@ class DedupSimilaritySpec extends SparkSpec {
   }
 
   test("signature store: compaction recovers from a crashed swap") {
-    val root = java.nio.file.Files.createTempDirectory("sigstore3")
-      .toString + "/store"
+    val root = tmpDir("sigstore3") + "/store"
     val docs = Seq(
       (1L, "s1", "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "s1", "completely different text about unrelated matters"))
@@ -973,8 +970,7 @@ class DedupSimilaritySpec extends SparkSpec {
   test("signature store: short-doc replay rejects via identity") {
     // doc 20 yields 2 shingles (4 tokens, n=3) < minShared=3: without
     // the identity auto-reject a replay re-appends it forever
-    val root = java.nio.file.Files.createTempDirectory("sigstore4")
-      .toString + "/store"
+    val root = tmpDir("sigstore4") + "/store"
     DedupOps.initSignatureStore(
       Seq((1L, "s1", "alpha beta gamma delta epsilon zeta eta theta"))
         .toDF("doc_id", "source", "text"),
