@@ -9,8 +9,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
-  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
+  Cast, InterpretedOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -87,50 +89,74 @@ object Catalog {
     * reflects over `T`) and the session's [[ParquetFileFormat]] writer
     * (schema conversion, row metadata, timestamp type and codec from
     * the session conf), one file per partition-value group under its
-    * `col=value` directory. Each file is written under a `_`-prefixed
-    * name, which readers and file listings skip, and renamed to a
-    * `part-` name once every group is written, so a crash leaves no
-    * partial file in the table. Last, `refreshByPath` re-resolves
-    * cached plans over `path`, as Spark's insert command does. For a
-    * batch bounded by driver memory; a DataFrame keeps Spark's writer.
-    * Returns the committed files' stamps, as [[Lineage.stamps]] lists
-    * them; none for no rows.
+    * `col=value` directory.
+    *
+    * With `bucketBy = Some((col, n))` the files are those of a
+    * `bucketBy(n, col).sortBy(col)` write of the rows: one file per
+    * non-empty bucket in each group, the bucket id Spark's own
+    * `HashPartitioning(col, n)` partition id evaluated on the driver,
+    * the file named with it as Spark's writer names it
+    * (`part-00000-<uuid>_0000b.c000…`, [[BucketingUtils]]), its rows
+    * sorted by `col`. A bucketed table's reads then prune by bucket as
+    * they do over Spark's own files.
+    *
+    * Each file is written under a `_`-prefixed name, which readers and
+    * file listings skip, and renamed to its `part-` name once every
+    * file is written, so a crash leaves no partial file in the table.
+    * Last, `refreshByPath` re-resolves cached plans over `path`, as
+    * Spark's insert command does. For a batch bounded by driver memory;
+    * a DataFrame keeps Spark's writer. Returns the committed files'
+    * stamps, as [[Lineage.stamps]] lists them; none for no rows.
     */
   def appendRows[T](spark: SparkSession, rows: Seq[T],
       encoder: ExpressionEncoder[T], path: String,
-      partitionCols: Seq[String] = Nil): Seq[FixtureCache.FileStamp] =
+      partitionCols: Seq[String] = Nil,
+      bucketBy: Option[(String, Int)] = None): Seq[FixtureCache.FileStamp] =
     if (rows.isEmpty) Nil
     else SQLConf.withExistingConf(spark.sessionState.conf) {
       val toRow = encoder.createSerializer()
-      val (parts, data) = encoder.schema.fields.zipWithIndex
-        .partition(f => partitionCols.contains(f._1.name))
+      val fields = encoder.schema.fields.zipWithIndex.toSeq
+      def bound(i: Int) = {
+        val f = encoder.schema(i)
+        BoundReference(i, f.dataType, f.nullable)
+      }
+      val (parts, data) = fields.partition(f => partitionCols.contains(f._1.name))
       val dataSchema = StructType(data.map(_._1))
-      val project = UnsafeProjection.create(data.toSeq.map { case (f, i) =>
-        BoundReference(i, f.dataType, f.nullable) })
+      val project = UnsafeProjection.create(data.map(f => bound(f._2)))
       // each partition column's `col=value` directory, as Spark names it
-      val partDirs = parts.toSeq.map { case (f, i) =>
-        val value = Cast(BoundReference(i, f.dataType, f.nullable), StringType,
+      val partDirs = parts.map { case (f, i) =>
+        val value = Cast(bound(i), StringType,
           Some(spark.sessionState.conf.sessionLocalTimeZone))
         (row: InternalRow) => ExternalCatalogUtils.getPartitionPathString(
           f.name, Option(value.eval(row)).map(_.toString).orNull)
       }
+      val bucketed = bucketBy.map { case (name, n) =>
+        val key = bound(encoder.schema.fieldIndex(name))
+        (HashPartitioning(Seq(key), n).partitionIdExpression,
+          new InterpretedOrdering(Seq(SortOrder(key, Ascending))))
+      }
       val groups = rows.map(r => toRow(r).copy())
-        .groupBy(row => partDirs.map(_(row)).mkString("/")).toSeq.sortBy(_._1)
+        .groupBy(row => (partDirs.map(_(row)).mkString("/"),
+          bucketed.map(_._1.eval(row).asInstanceOf[Int])))
+        .toSeq.sortBy(_._1)
 
       val job = Job.getInstance(spark.sessionState.newHadoopConf())
       val factory = new ParquetFileFormat()
         .prepareWrite(spark, job, Map.empty, dataSchema)
       val conf = job.getConfiguration
       val context = new TaskAttemptContextImpl(conf, new TaskAttemptID())
-      val name = s"part-00000-${UUID.randomUUID()}-c000" +
-        factory.getFileExtension(context)
+      val prefix = s"part-00000-${UUID.randomUUID()}"
+      val ext = factory.getFileExtension(context)
       val root = new Path(path)
       val fs = root.getFileSystem(conf)
-      val written = groups.map { case (dir, group) =>
+      val written = groups.map { case ((dir, bucket), group) =>
+        val name = bucket.fold(s"$prefix-c000$ext")(b =>
+          s"$prefix${BucketingUtils.bucketIdToString(b)}.c000$ext")
         val parent = if (dir.isEmpty) root else new Path(root, dir)
         val tmp = new Path(parent, s"_tmp-$name")
         val writer = factory.newInstance(tmp.toString, dataSchema, context)
-        try group.foreach(r => writer.write(project(r))) finally writer.close()
+        val sorted = bucketed.fold(group)(b => group.sorted(b._2))
+        try sorted.foreach(r => writer.write(project(r))) finally writer.close()
         tmp -> new Path(parent, name)
       }
       written.foreach { case (tmp, dst) =>

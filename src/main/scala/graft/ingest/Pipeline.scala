@@ -93,12 +93,15 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
 
   /** Full collect: gate → persist checks (K4 append-only audit table)
     * → discover → dedup-append. Returns (new records, checks run).
+    * `appended` goes to [[appendRecords]].
     */
-  def collectAll(adapters: Seq[Adapter]): (Long, Seq[ComplianceCheck]) = {
+  def collectAll(adapters: Seq[Adapter],
+      appended: Pipeline.Appended => Unit = _ => ())
+      : (Long, Seq[ComplianceCheck]) = {
     val (ok, checks) = compliantAdapters(adapters)
     appendChecks(checks)
     val discovered = ok.flatMap(_.discover())
-    (appendRecords(discovered), checks)
+    (appendRecords(discovered, appended), checks)
   }
 
   /** K5 — dedup append of a batch into `data_records`: existing rows
@@ -107,19 +110,24 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     * Returns the number of genuinely new rows written. The table's key
     * index is locked from its refresh to its update with the written
     * files, so two appends to one table in a session never both find a
-    * key new.
+    * key new. When rows were written, `appended` gets what was written
+    * while the lock is still held, so a caller that keeps an artifact
+    * current from it sees the appends to the table in this session one
+    * at a time.
     */
-  def appendRecords(records: Seq[DataRecord]): Long = {
+  def appendRecords(records: Seq[DataRecord],
+      appended: Pipeline.Appended => Unit = _ => ()): Long = {
     val batch = records.distinctBy(r => (r.source_name, r.record_id))
     if (batch.isEmpty) return 0L
     val index = Pipeline.keyIndexes(spark,
       FixtureCache.qualified(spark, recordsPath))(new Pipeline.KeyIndex)
     index.synchronized {
-      refresh(index)
+      val listed = refresh(index)
       val fresh = batch.filterNot(r => index.contains(r.source_name, r.record_id))
-      index.add(Catalog.appendRows(spark, fresh, Pipeline.RecordsEncoder,
-          recordsPath, Seq("source_name")),
-        fresh.map(r => (r.source_name, r.record_id)))
+      val written = Catalog.appendRows(spark, fresh, Pipeline.RecordsEncoder,
+        recordsPath, Seq("source_name"))
+      index.add(written, fresh.map(r => (r.source_name, r.record_id)))
+      if (fresh.nonEmpty) appended(Pipeline.Appended(listed, written, fresh))
       fresh.size.toLong
     }
   }
@@ -129,9 +137,9 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
     * partition) it is rebuilt from one scan of the whole table's key
     * columns, covering the listed files that scan read; otherwise only
     * the files it does not cover (another writer's, `collectStream`'s)
-    * are scanned.
+    * are scanned. Returns the listing.
     */
-  private def refresh(index: Pipeline.KeyIndex): Unit = {
+  private def refresh(index: Pipeline.KeyIndex): Seq[FileStamp] = {
     def keys(table: DataFrame) = table.select("source_name", "record_id")
       .as[(String, String)].collect().toSeq
     val listed = Lineage.stamps(spark, recordsPath)
@@ -146,6 +154,7 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
       val files = index.lineage.uncovered(listed)
       if (files.nonEmpty) index.add(files, keys(recordsFiles(files)))
     }
+    listed
   }
 
   /** L6 — per-dataset refresh, last-write-wins upsert: refreshed rows
@@ -179,6 +188,12 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
 }
 
 object Pipeline {
+  /** One [[Pipeline.appendRecords]] write: the records table's files
+    * listed before it, the files it committed and the rows in them.
+    */
+  final case class Appended(listed: Seq[FileStamp], written: Seq[FileStamp],
+      rows: Seq[DataRecord])
+
   /** The two tables' row encoders, derived (by reflection) once. */
   private[graft] val RecordsEncoder = ExpressionEncoder[DataRecord]()
   private[graft] val ChecksEncoder = ExpressionEncoder[ComplianceCheck]()

@@ -1,7 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.Catalog
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Full-text search v2 (L2): a tokenized inverted index as ordinary
   * tables — the scale path the reference skipped ("Skip FTS for now
@@ -31,12 +40,31 @@ object FtsOps {
       : DataFrame =
     postings(tokens(docs, idCol, textCol), idCol)
 
+  /** The index's tokenizer, one expression over `text`: the lower-cased
+    * text split on single spaces, less the empty strings that leading,
+    * trailing and repeated spaces leave; null for a null text. The
+    * DataFrame path ([[tokens]]) and the driver path
+    * ([[appendPostings]], through [[driverTokenizer]]) both evaluate
+    * it, so they cannot drift.
+    */
+  private def tokenized(text: Column): Column =
+    array_remove(split(lower(text), " "), "")
+
   /** One (id, token) row per token occurrence. */
   private def tokens(docs: DataFrame, idCol: String, textCol: String)
       : DataFrame =
-    docs.select(col(idCol),
-        explode(split(lower(col(textCol)), " ")).as("token"))
-      .filter(col("token") =!= "")
+    docs.select(col(idCol), explode(tokenized(col(textCol))).as("token"))
+
+  /** [[tokenized]] as the session analyzes it for the DataFrame path,
+    * bound to a one-string row for evaluation on the driver (analyzed
+    * over an empty relation: no job).
+    */
+  private def driverTokenizer(spark: SparkSession): Expression = {
+    val plan = spark.createDataFrame(java.util.List.of[Row](),
+        StructType(Seq(StructField("text", StringType))))
+      .select(tokenized(col("text"))).queryExecution.analyzed
+    BindReferences.bindReference(plan.expressions.head, plan.children.head.output)
+  }
 
   private def postings(tokens: DataFrame, idCol: String): DataFrame =
     tokens.groupBy(col("token"), col(idCol)).agg(count(lit(1)).as("tf"))
@@ -445,7 +473,8 @@ object FtsOps {
     * of tasks. `SaveMode.Append` adds postings under the same bucket
     * spec (at most `buckets` files) without merging them into the
     * existing ones, so the appended docs must be ids the index does
-    * not hold yet.
+    * not hold yet. [[appendPostings]] writes the same appended files
+    * from docs already on the driver, with no job.
     */
   def writeIndex(docs: DataFrame, idCol: String, textCol: String,
       tableName: String, path: String, buckets: Int = 32,
@@ -458,6 +487,40 @@ object FtsOps {
       .bucketBy(buckets, "token")
       .sortBy("token")
       .saveAsTable(tableName)
+
+  /** [[writeIndex]]'s `SaveMode.Append` of `docs` (id, text), rows
+    * already on the driver, with no Spark job: the (token, id, tf)
+    * postings are computed on the driver with the index's own
+    * tokenizer ([[tokenized]]) and written bucketed and sorted by token
+    * through [[Catalog.appendRows]], the files Spark's writer leaves,
+    * at most one per bucket. Then the table's cached file listing is
+    * refreshed, so the next lookup reads the new files. As with
+    * [[writeIndex]]'s append, the ids must be ones the index does not
+    * hold yet.
+    */
+  def appendPostings(spark: SparkSession, docs: Seq[(String, String)],
+      idCol: String, tableName: String, path: String, buckets: Int): Unit = {
+    val postings = SQLConf.withExistingConf(spark.sessionState.conf) {
+      val tokenize = driverTokenizer(spark)
+      docs.flatMap { case (id, text) =>
+        val toks = tokenize.eval(InternalRow(UTF8String.fromString(text)))
+          .asInstanceOf[ArrayData]
+        if (toks == null) Nil
+        else toks.toSeq[UTF8String](StringType).groupMapReduce(_.toString)(
+          _ => 1L)(_ + _).map { case (token, tf) => Row(token, id, tf) }
+      }
+    }
+    Catalog.appendRows(spark, postings,
+      ExpressionEncoder(postingsSchema(idCol)), path,
+      bucketBy = Some("token" -> buckets))
+    spark.catalog.refreshTable(tableName)
+  }
+
+  /** The schema [[writeIndex]] writes for string ids. */
+  private def postingsSchema(idCol: String): StructType = StructType(Seq(
+    StructField("token", StringType, nullable = false),
+    StructField(idCol, StringType),
+    StructField("tf", LongType, nullable = false)))
 
   /** [[search]] over a persisted [[writeIndex]] table: the IN-list on
     * the bucket column prunes to the terms' buckets before any IO.

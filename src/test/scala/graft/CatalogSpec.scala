@@ -1,14 +1,18 @@
 package graft
 
 import graft.ingest.{ComplianceCheck, DataRecord, Pipeline}
+import graft.operators.FtsOps
 import java.sql.Timestamp
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import scala.jdk.CollectionConverters._
 
 /** [[Catalog.appendRows]], the driver-side append, against Spark's own
-  * writer ([[Catalog.appendPartitioned]]) over the same rows.
+  * writer ([[Catalog.appendPartitioned]], and [[FtsOps.writeIndex]]'s
+  * bucketed write for [[FtsOps.appendPostings]]) over the same rows.
   */
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -32,25 +36,33 @@ class CatalogSpec extends SparkSpec {
       api_key_valid = true, Timestamp.valueOf("2026-01-01 00:00:00"),
       Seq("no terms"), Nil))
 
-  /** Each parquet file's footer under `dir`, keyed on its directory
-    * relative to `dir`: (schema, key-value metadata, column codecs).
+  /** A parquet file's footer: (schema, key-value metadata, column
+    * codecs).
     */
-  def footers(dir: String): Map[String, (String, Map[String, String], Seq[String])] = {
+  def footer(p: Path): (String, Map[String, String], Seq[String]) = {
     val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir).toUri.getPath
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    try {
+      val footer = reader.getFooter
+      val meta = footer.getFileMetaData
+      (meta.getSchema.toString, meta.getKeyValueMetaData.asScala.toMap,
+        footer.getBlocks.asScala.toSeq.flatMap(
+          _.getColumns.asScala.map(_.getCodec.toString)))
+    } finally reader.close()
+  }
+
+  /** The parquet data files under `dir`. */
+  def parquetFiles(dir: String): Seq[Path] =
     Catalog.files(spark, dir).map(_.getPath)
       .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-      .map { p =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-        try {
-          val footer = reader.getFooter
-          val meta = footer.getFileMetaData
-          p.getParent.toUri.getPath.stripPrefix(root) ->
-            ((meta.getSchema.toString, meta.getKeyValueMetaData.asScala.toMap,
-              footer.getBlocks.asScala.toSeq.flatMap(
-                _.getColumns.asScala.map(_.getCodec.toString))))
-        } finally reader.close()
-      }.toMap
+
+  /** Each parquet file's [[footer]] under `dir`, keyed on its directory
+    * relative to `dir`.
+    */
+  def footers(dir: String): Map[String, (String, Map[String, String], Seq[String])] = {
+    val root = new Path(dir).toUri.getPath
+    parquetFiles(dir).map(p =>
+      p.getParent.toUri.getPath.stripPrefix(root) -> footer(p)).toMap
   }
 
   def withConf(kv: (String, String)*)(body: => Unit): Unit = {
@@ -126,5 +138,69 @@ class CatalogSpec extends SparkSpec {
       .filter(_.endsWith(".parquet"))
     assert(names.size == 3 && names.forall(_.startsWith("part-00000-")), names)
     assert(spark.read.parquet(dir).count() == 4)
+  }
+
+  test("appendPostings writes the files writeIndex appends: bucket id " +
+      "per token, token order, schema and row metadata; lookups still " +
+      "prune to one bucket") {
+    val buckets = 4
+    val seed = Seq("s-1" -> "Traffic Volume about traffic",
+      "s-2" -> "Bike Counts about bikes")
+    // a null and an empty text, leading and repeated spaces, a tab (not
+    // a separator), non-ASCII case folding, a token repeated in a doc
+    val docs = Seq[(String, String)]("d-1" -> null, "d-2" -> "",
+      "d-3" -> "  Leading  and   repeated spaces ", "d-4" -> "tab\tinside a word",
+      "d-5" -> "İSTANBUL İi Straße STRASSE ß ΣΟΦΟΣ Σίσυφος ΟΔΟΣ",
+      "d-6" -> "bike Bike BIKE lanes bike share bike",
+      "d-7" -> "Permits about traffic",
+      "d-8" -> "a b c d e f g h i j k l m n o p q r s t u v w x y z")
+    def df(rows: Seq[(String, String)]) = rows.toDF("record_id", "text")
+    val dir = tmpDir("postings")
+    val Seq(viaSpark, viaDriver) = Seq("spark", "driver").map(n => s"$dir/$n")
+    val tables = Seq("postings_spark", "postings_driver")
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      tables.zip(Seq(viaSpark, viaDriver)).foreach { case (t, path) =>
+        FtsOps.writeIndex(df(seed), "record_id", "text", t, path, buckets)
+      }
+      val built = parquetFiles(viaSpark).map(_.getName).toSet ++
+        parquetFiles(viaDriver).map(_.getName)
+      FtsOps.writeIndex(df(docs), "record_id", "text", tables(0), viaSpark,
+        buckets, SaveMode.Append)
+      FtsOps.appendPostings(spark, docs, "record_id", tables(1), viaDriver,
+        buckets)
+      // the appended files by bucket id: (footer, tokens in file order)
+      def appended(path: String) = parquetFiles(path)
+        .filterNot(p => built(p.getName)).map { p =>
+          val bucket = BucketingUtils.getBucketId(p.getName)
+            .getOrElse(fail(s"no bucket id: $p"))
+          bucket -> (footer(p), spark.read.parquet(p.toString)
+            .select("token").as[String].collect().toSeq)
+        }
+      val (expected, actual) = (appended(viaSpark), appended(viaDriver))
+      assert(actual.map(_._1).distinct.size == actual.size,
+        s"two files in one bucket: $actual")
+      assert(actual.toMap.keySet == expected.toMap.keySet)
+      expected.foreach { case (bucket, ((schema, kv, codecs), tokens)) =>
+        val ((s, k, c), t) = actual.toMap.apply(bucket)
+        assert(s == schema, bucket)
+        assert(k == kv, bucket)
+        assert(k.contains("org.apache.spark.sql.parquet.row.metadata"), bucket)
+        assert(c == codecs, bucket)
+        assert(t == tokens, bucket)
+      }
+      def rows(t: String) = spark.table(t).collect().map(_.toString).sorted.toSeq
+      assert(rows(tables(1)) == rows(tables(0)))
+      assert(rows(tables(1)).exists(_.startsWith("[bike,d-6,5]")))
+      assert(rows(tables(1)).exists(_.startsWith("[tab\tinside,d-4,1]")))
+
+      // a one-term lookup over the driver-appended table scans one bucket
+      val q = FtsOps.searchIndexed(spark, tables(1), "record_id", Seq("bike"), 50)
+      val plan = q.queryExecution.executedPlan.toString
+      val m = s"SelectedBucketsCount: (\\d+) out of $buckets".r.findFirstMatchIn(plan)
+      assert(m.map(_.group(1)).contains("1"), s"no one-bucket pruning:\n$plan")
+      assert(q.collect().toSeq == FtsOps.searchDocs(df(seed ++ docs),
+        "record_id", "text", Seq("bike"), 50).collect().toSeq)
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

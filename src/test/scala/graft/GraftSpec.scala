@@ -275,6 +275,21 @@ class GraftSpec extends SparkSpec {
     val added = filesPerSource.map { case (k, n) =>
       k -> (n - before.getOrElse(k, 0)) }
     assert(added.size == 2 && added.values.forall(_ == 1), added)
+    // no collect above made an FTS index
+    assert(!new java.io.File(dir + "/fts_index").exists)
+
+    // over an indexed catalog: the collect appends its postings on the
+    // driver, and the indexFts after it finds nothing to do
+    g.indexFts()
+    def indexFiles = Catalog.files(spark, dir + "/fts_index")
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val built = indexFiles
+    assert(jobsLaunchedBy(assert(g.collect(Seq(nycFixture(
+      item("hh-8", "Bike Routes", 4)))) == 1)) == 0)
+    val appended = indexFiles
+    assert(appended.size > built.size)
+    assert(jobsLaunchedBy(g.indexFts()) == 0)
+    assert(indexFiles == appended)
   }
 
   test("after an upsert, an embedding backfill or a compaction, a " +
@@ -513,8 +528,9 @@ class GraftSpec extends SparkSpec {
     assert(first.status().head.getAs[Long]("n_records") == 2L)
   }
 
-  test("indexFts appends the postings of new records files; a rewrite " +
-      "or a stale lineage rebuilds") {
+  test("a collect over a current FTS index appends its postings; " +
+      "indexFts appends another writer's files; a rewrite or a stale " +
+      "lineage rebuilds") {
     import org.apache.hadoop.fs.Path
     val dir = tmpDir("graftfts")
     val g = new Graft(spark, dir)
@@ -524,16 +540,24 @@ class GraftSpec extends SparkSpec {
     def indexFiles: Set[String] =
       new java.io.File(s"$dir/fts_index").listFiles.map(_.getName)
         .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    def indexStamps = Lineage.stamps(spark, s"$dir/fts_index")
     def collect(items: String*): Long = g.collect(Seq(nycFixture(items: _*)))
     def assertSearchesMatch(): Unit = assertFtsMatches(g)
-    // the append path keeps the old files and adds at most `width`
-    def indexFtsAppends(): Set[String] = {
+    // an append keeps the old files and adds at most `width`
+    def appends(write: => Unit): Unit = {
       val before = indexFiles
-      g.indexFts()
+      write
       val after = indexFiles
       assert(before.subsetOf(after), "an append must keep the old files")
       assert(after.size > before.size && after.size - before.size <= width)
-      after
+    }
+    // the index files and its record are left as they are
+    def writesNothing(write: => Unit): Unit = {
+      val before = Catalog.files(spark, s"$dir/fts_index")
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      write
+      assert(Catalog.files(spark, s"$dir/fts_index")
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)) == before)
     }
     // the full path replaces every file
     def indexFtsRebuilds(): Unit = {
@@ -542,6 +566,14 @@ class GraftSpec extends SparkSpec {
       assert((indexFiles intersect before).isEmpty,
         "a full build must replace the old files")
     }
+    def saveLineage(): Array[Byte] = {
+      val in = fs.open(lineage)
+      try in.readAllBytes() finally in.close()
+    }
+    def restoreLineage(saved: Array[Byte]): Unit = {
+      val out = fs.create(lineage, true)
+      try out.write(saved) finally out.close()
+    }
 
     g.setup(Seq(nycFixture()))
     assert(collect(item("aa-1", "Traffic Volume", 10),
@@ -549,29 +581,48 @@ class GraftSpec extends SparkSpec {
     g.indexFts()
     assertSearchesMatch()
 
-    assert(collect(item("cc-3", "Bike Lanes", 5),
+    // a collect over the current index appends its postings, and the
+    // index serves them with no indexFts; indexFts then writes nothing
+    appends(assert(collect(item("cc-3", "Bike Lanes", 5),
       item("bb-2", "Bike Counts", 20),
-      item("dd-4", "Traffic Bike Signals", 7)) == 2)
-    val appended = indexFtsAppends()
+      item("dd-4", "Traffic Bike Signals", 7)) == 2))
+    assert(g.searchFts(Seq("lanes")).collect().map(_.getString(0)).toSeq ==
+      Seq("cc-3"))
     assertSearchesMatch()
-    g.indexFts() // nothing new: the index is left as it is
-    assert(indexFiles == appended)
+    writesNothing(g.indexFts())
+    assertSearchesMatch()
+    // nothing new: no postings
+    writesNothing(assert(collect(item("cc-3", "Bike Lanes", 5)) == 0))
 
-    // a rewrite of the records table replaces every covered file
-    assert(g.backfillEmbeddings() == 4L)
+    // another writer's records file is left to indexFts, which appends
+    // its postings; the collect's own keep the index current meanwhile
+    assert(new Pipeline(spark, dir).appendRecords(Seq(rec("NYC Open Data",
+      "ee-5"))) == 1)
+    appends(assert(collect(item("ff-6", "Bike Share Trips", 3)) == 1))
+    appends(g.indexFts())
+    assertSearchesMatch()
+    writesNothing(g.indexFts())
+
+    // a rewrite of the records table replaces every covered file: a
+    // collect writes no postings, and indexFts rebuilds
+    assert(g.backfillEmbeddings() == 6L)
+    writesNothing(assert(collect(item("gg-7", "Bike Parking", 2)) == 1))
     indexFtsRebuilds()
     assertSearchesMatch()
 
-    // crash window: an append whose lineage write was lost leaves the
-    // previous lineage, which no longer describes the index files
-    val in = fs.open(lineage)
-    val saved = try in.readAllBytes() finally in.close()
-    assert(collect(item("ee-5", "Bike Share Trips", 3)) == 1)
-    indexFtsAppends()
-    val out = fs.create(lineage, true)
-    try out.write(saved) finally out.close()
+    // crash window: a postings append whose lineage write was lost
+    // leaves the previous record, which no longer describes the index
+    // files; a later collect leaves the index alone, and indexFts
+    // rebuilds
+    val saved = saveLineage()
+    appends(assert(collect(item("hh-8", "Bike Routes", 4)) == 1))
+    restoreLineage(saved)
+    val stale = indexStamps
+    assert(collect(item("ii-9", "Bike Racks", 6)) == 1)
+    assert(indexStamps == stale)
     indexFtsRebuilds()
     assertSearchesMatch()
+    assert(g.searchFts(Seq("bike"), 50).count() == 7)
   }
 
   test("collectStream: continuous dedup-append collect, idempotent replays") {

@@ -22,6 +22,10 @@ the change's median is worse than the parent's by more than the bound
 when the parent's own spread (IQR over median) exceeds the bound, unless
 every change run is better than every parent run.
 
+Each op kind's median latency, as the harness logs it at the end of a
+run, is listed too, as `kind.<op>_ms` (direction `?`), so a move of an
+end-to-end latency can be traced to the op kinds that moved it.
+
 Exits 1 when any run failed, reported `correct: false` or counted failed
 ops; every run still goes ahead, so the table shows what was measured.
 """
@@ -29,6 +33,7 @@ ops; every run still goes ahead, so the table shows what was measured.
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -66,8 +71,14 @@ def regression(ps, cs, pq, cq, sign, bound):
     return "worse" if sign * (pq[1] - cq[1]) / abs(pq[1]) < -bound else "ok"
 
 
+# the harness's per-kind summary line: "[perfbench +41.2s] search  n=  3
+# median=    69.0 ms min=…"
+KIND_LINE = re.compile(r"^\[perfbench [^\]]*\] (\S+)\s+n=\s*\d+ median=\s*([\d.]+) ms")
+
+
 def run(tree, workload, seed, seconds, trace):
-    """One benchmark run; (result dict or None, error text)."""
+    """One benchmark run; (result dict or None, error text). The op kinds'
+    median latencies join the result's metrics."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds),
            "--trace", str(trace)]
@@ -77,7 +88,11 @@ def run(tree, workload, seed, seconds, trace):
     if p.returncode != 0 or not lines or not lines[-1].startswith("{"):
         tail = "\n".join(p.stderr.splitlines()[-20:])
         return None, f"exit {p.returncode}\n{tail}"
-    return json.loads(lines[-1]), ""
+    result = json.loads(lines[-1])
+    for m in map(KIND_LINE.match, p.stderr.splitlines()):
+        if m:
+            result.setdefault("metrics", {})[f"kind.{m[1]}_ms"] = float(m[2])
+    return result, ""
 
 
 def quartiles(xs):
