@@ -1,6 +1,5 @@
 package graft
 
-import graft.FixtureCache.FileStamp
 import graft.ingest.{Adapter, ComplianceCheck, DataRecord, Pipeline}
 import graft.operators.{ExportOps, FtsOps, ReferenceOps}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -69,9 +68,9 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * cold process's first collect. No checks or nothing new skips the
     * matching write.
     *
-    * When the catalog has an FTS index that [[indexFts]]' rule finds
-    * current for the records files listed before the write, the collect
-    * also appends its new rows' postings to it on the driver
+    * When the catalog has an FTS index current for the records files
+    * listed before the write ([[Lineage.cover]]), the collect also
+    * appends its new rows' postings to it on the driver
     * ([[FtsOps.appendPostings]], at most one file per bucket) and
     * records the index covering the written files, still with no job;
     * [[indexFts]] then has nothing to do. Any other index is left to
@@ -81,19 +80,12 @@ final class Graft(spark: SparkSession, tableDir: String) {
   def collect(adapters: Seq[Adapter]): Long =
     pipeline.collectAll(adapters, extendFts)._1
 
-  /** Append the postings of a collect's new rows to the FTS index on
-    * the driver, when the index is current for the records files
-    * listed before the write ([[ftsLineage]]), and record it covering
-    * the written files too. Otherwise nothing: a catalog with no index
-    * pays one failed open of its record, and a stale index is left to
-    * [[indexFts]].
-    */
+  /** [[collect]]'s postings append to a current FTS index. */
   private def extendFts(a: Pipeline.Appended): Unit = {
     val buckets = spark.sessionState.conf.numShufflePartitions
-    ftsLineage(a.listed, buckets).foreach { l =>
+    Lineage.cover(a.listed, a.written, ftsStore(buckets)) {
       FtsOps.appendPostings(spark, a.rows.map(r => r.record_id -> ftsText(r)),
         "record_id", ftsTable, ftsPath, buckets)
-      Lineage.write(spark, ftsPath, l.covered ++ a.written)
     }
   }
 
@@ -132,63 +124,38 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * shuffle width, one file per bucket per write
     * ([[FtsOps.writeIndex]]).
     *
-    * Incremental rule: the index records its [[Lineage]] next to it —
-    * the stamps of the records files it covers and its own file stamps
-    * after the write. A call appends the postings of only the records
-    * files not covered yet when
-    *  - the index table is registered in this session at the current
-    *    width,
-    *  - every covered records file is still present and unchanged,
-    *  - the index files equal the recorded ones.
-    * Otherwise it rebuilds from the whole table. [[collect]] keeps the
-    * index by the same rule and covers its own files as it writes them,
-    * so after a collect over a current index this call writes nothing;
-    * it appends the postings of files from other writers
-    * (`Pipeline.appendRecords`, [[collectStream]]). A rewrite of the
-    * records table (upsert, embedding backfill, compaction), a width
-    * change, a new session or a crash between an append and its lineage
-    * write all lead to a full build. The records files are listed
-    * before the write: a collect that races the build is left
-    * uncovered, for the next call.
+    * The index is kept by [[Lineage.maintain]] over the records files,
+    * its record next to it. FTS-specific:
+    *  - the record counts only while the index table is registered in
+    *    this session at the current width, so a width change or a new
+    *    session leads to a full build;
+    *  - [[collect]] covers the files it writes as it writes them, so
+    *    after a collect over a current index this call writes nothing;
+    *    it appends the postings of other writers' files
+    *    (`Pipeline.appendRecords`, [[collectStream]]).
     */
   def indexFts(): Unit = {
     val buckets = spark.sessionState.conf.numShufflePartitions
-    val listed = Lineage.stamps(spark, pipeline.recordsPath)
     def write(docs: DataFrame, mode: SaveMode): Unit =
       FtsOps.writeIndex(ftsDocs(docs), "record_id", "text", ftsTable,
         ftsPath, buckets, mode)
-    val covered = ftsLineage(listed, buckets).map(_.uncovered(listed)) match {
-      case Some(files) if files.isEmpty => None // up to date
-      case Some(files) =>
-        write(pipeline.recordsFiles(files), SaveMode.Append)
-        Some(listed)
-      case None =>
+    Lineage.maintain(Lineage.stamps(spark, pipeline.recordsPath),
+      ftsStore(buckets),
+      Some(files => write(pipeline.recordsFiles(files), SaveMode.Append)),
+      () => {
         val r = records
         write(r, SaveMode.Overwrite)
-        // the resolved relation may postdate the listing; record it
-        // only when it read exactly the listed files (an unrecorded
-        // build leaves a record whose index files no longer match)
-        Some(listed).filter(_.map(_._1).toSet ==
-          Lineage.inputs(spark, pipeline.recordsPath, r))
-    }
-    covered.foreach(Lineage.write(spark, ftsPath, _))
+        Lineage.inputs(spark, pipeline.recordsPath, r)
+      })
   }
 
-  /** The FTS index's record, when the index can be extended for the
-    * records files `listed`: the index table is registered in this
-    * session at `buckets`, every covered records file is still listed
-    * unchanged and the index files equal the recorded ones. None means
-    * a full build. [[indexFts]] and [[collect]] both keep the index by
-    * this one rule.
+  /** The FTS index's record, usable only while the index table is
+    * registered in this session at `buckets`.
     */
-  private def ftsLineage(listed: Seq[FileStamp], buckets: Int): Option[Lineage] =
-    Lineage.read(spark, ftsPath).filter(l => ftsIndexAt(buckets) &&
-      l.valid(listed, Lineage.stamps(spark, ftsPath)))
-
-  private def ftsIndexAt(buckets: Int): Boolean =
-    spark.catalog.tableExists(ftsTable) &&
+  private def ftsStore(buckets: Int): Lineage.Store =
+    new Lineage.Dir(spark, ftsPath, spark.catalog.tableExists(ftsTable) &&
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(ftsTable))
-        .bucketSpec.exists(_.numBuckets == buckets)
+        .bucketSpec.exists(_.numBuckets == buckets))
 
   /** Full-text variant of search over the inverted index (L2 v2):
     * reads the persisted index when [[indexFts]] has built one, else
@@ -311,9 +278,8 @@ final class Graft(spark: SparkSession, tableDir: String) {
   def analyticsMaterialized(name: String): DataFrame = {
     val view = Graft.AnalyticsViews.getOrElse(name,
       throw new IllegalArgumentException(s"unknown analytics view: $name"))
-    Mv.readFresh(spark,
-      Mv.View(s"$tableDir/mv/$name", Seq(pipeline.recordsPath)),
-      _ => view(records))
+    Mv.readFresh(spark, Mv.View(s"$tableDir/mv/$name", pipeline.recordsPath),
+      view(records))
   }
 
   /** `status` — two-key stats rolled up per source joined with the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized views over path-based tables: a named result cached as
-  * parquet next to its sources, refreshed only when a source has
+  * parquet next to its source, refreshed only when the source has
   * changed since the last build, with an INCREMENTAL path for
   * append-only rollups. The reference recomputes its analytics on every
   * CLI call (ethical_crawler.py:1274–1349); at 100 TB a standing
@@ -11,96 +11,68 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * standard freshness contract (compute on change, serve from the
   * materialization otherwise).
   *
-  * Freshness is a [[Lineage]] record in the view's directory, not a
-  * max mtime nor the directory's own mtime: a view is current while
-  * its record is valid for its sources' data files as listed now and
-  * leaves none uncovered, so an added, deleted or rewritten source file
-  * makes it stale. A transactional table format's snapshot ids subsume
-  * this at scale; the contract (compare source version to built-from
-  * version) is the same.
+  * A view is kept by [[Lineage.maintain]] over its source's data
+  * files, its record in the view's directory naming them relative to
+  * the source. A view recorded by full paths, as earlier versions
+  * wrote them, reads as not valid and is rebuilt once. A
+  * transactional table format's snapshot ids subsume this at scale;
+  * the contract (compare source version to built-from version) is the
+  * same.
   */
 object Mv {
 
-  final case class View(path: String, sources: Seq[String])
+  final case class View(path: String, source: String)
 
-  /** The data files of the view's sources, each by its full path, and
-    * the view's record when it is valid for them.
-    */
-  private def lineage(spark: SparkSession, view: View)
-      : (Seq[FixtureCache.FileStamp], Option[Lineage]) = {
-    val in = view.sources.flatMap(s => Lineage.stamps(spark, s).map {
-      case (rel, size, mtime) => (s + rel, size, mtime)
-    })
-    (in, Lineage.read(spark, view.path)
-      .filter(_.valid(in, Lineage.stamps(spark, view.path))))
-  }
-
-  /** A view is stale when it has never been built, or its source files
-    * or its own files are not the ones its last build recorded.
-    */
-  def isStale(spark: SparkSession, view: View): Boolean = {
-    val (in, record) = lineage(spark, view)
-    !record.exists(_.uncovered(in).isEmpty)
-  }
-
-  /** Full rebuild: list the sources FIRST (a write that races the build
-    * is left uncovered and makes the view stale on the next check),
-    * materialize via write-temp-then-swap, record the listing.
-    */
-  def refresh(spark: SparkSession, view: View,
-      build: SparkSession => DataFrame): Unit = {
-    val covered = lineage(spark, view)._1
+  /** Materialize `df` as the view: write to a temp dir, then swap. */
+  private def swap(spark: SparkSession, view: View, df: DataFrame): Unit = {
     val tmp = view.path + "__mv_tmp"
-    Catalog.overwrite(build(spark), tmp)
+    Catalog.overwrite(df, tmp)
     Catalog.replace(spark, tmp, view.path)
-    Lineage.write(spark, view.path, covered)
   }
 
-  /** Serve the view, rebuilding only if stale — the read path every
-    * caller uses. A fresh view is served as the relation resolved at
-    * its current version ([[Catalog.resolved]]).
+  /** Serve the view, rebuilt from `build` after any added, deleted or
+    * rewritten source file, as the relation resolved at its current
+    * version ([[Catalog.resolved]]).
     */
-  def readFresh(spark: SparkSession, view: View,
-      build: SparkSession => DataFrame): DataFrame = {
-    if (isStale(spark, view)) refresh(spark, view, build)
+  def readFresh(spark: SparkSession, view: View, build: => DataFrame)
+      : DataFrame = {
+    Lineage.maintain(Lineage.stamps(spark, view.source),
+      new Lineage.Dir(spark, view.path), None, () => {
+        val df = build
+        swap(spark, view, df)
+        Lineage.inputs(spark, view.source, df)
+      })
     Catalog.resolved(spark, view.path)
   }
 
-  /** Incremental refresh for an APPEND-ONLY single-source rollup
-    * (count + long-sum per key, the [[operators.AnalyticsOps
-    * .incrementalRollup]] shape): aggregate ONLY the source files its
-    * record leaves uncovered and full-outer-merge the delta into the
-    * materialized rollup. Cost per refresh is O(delta) + O(|view|) —
-    * independent of total source size, which is the whole point at
-    * 100 TB (the full rebuild re-scans everything). A view with no
-    * valid record (never built, or a covered file deleted or
-    * rewritten) is rolled up from every source file; sources that
-    * rewrite rows in place need [[refresh]].
+  /** Incremental refresh for an APPEND-ONLY rollup (count + long-sum
+    * per key, the [[operators.AnalyticsOps.incrementalRollup]] shape):
+    * aggregate ONLY the source files its record leaves uncovered and
+    * full-outer-merge the delta into the materialized rollup. Cost per
+    * refresh is O(delta) + O(|view|) — independent of total source
+    * size, which is the whole point at 100 TB (the full rebuild
+    * re-scans everything). Any other change rolls every source file up
+    * again; sources that rewrite rows in place need [[readFresh]].
     */
   def refreshIncrementalRollup(spark: SparkSession, view: View,
       key: String, valueCol: String): Unit = {
-    require(view.sources.size == 1,
-      "incremental rollup views have exactly one source")
-    val source = view.sources.head
-    val (in, prior) = lineage(spark, view)
-    val delta = prior.fold(in)(_.uncovered(in))
-    if (delta.isEmpty) return
-    val deltaRollup = operators.AnalyticsOps.rollup(
-      spark.read.schema(Catalog.load(spark, source).schema)
-        .parquet(delta.map(_._1): _*),
-      key, valueCol)
-    val merged =
-      if (prior.isEmpty) deltaRollup.orderBy(org.apache.spark.sql
-        .functions.col(key).asc)
-      else operators.AnalyticsOps.mergeRollups(
-        Catalog.load(spark, view.path), deltaRollup, key)
-    val tmp = view.path + "__mv_tmp"
-    // The merged plan READS view.path — materialize before the swap
-    // deletes what it reads (write-temp-then-swap already guarantees
-    // this: the tmp write runs the read to completion first).
-    Catalog.overwrite(merged, tmp)
-    Catalog.replace(spark, tmp, view.path)
-    Lineage.write(spark, view.path, in)
+    val base = FixtureCache.qualified(spark, view.source)
+    def rollup(files: Seq[FixtureCache.FileStamp]) =
+      operators.AnalyticsOps.rollup(
+        spark.read.schema(Catalog.load(spark, view.source).schema)
+          .parquet(files.map(base + _._1): _*),
+        key, valueCol)
+    val listed = Lineage.stamps(spark, view.source)
+    // The merged plan READS view.path — the swap's temp write runs that
+    // read to completion before the swap deletes what it reads.
+    Lineage.maintain(listed, new Lineage.Dir(spark, view.path),
+      Some(files => swap(spark, view, operators.AnalyticsOps.mergeRollups(
+        Catalog.load(spark, view.path), rollup(files), key))),
+      () => {
+        swap(spark, view, rollup(listed)
+          .orderBy(org.apache.spark.sql.functions.col(key).asc))
+        listed.map(_._1).toSet
+      })
   }
 
   /** CDC-DRIVEN rollup maintenance — incremental view maintenance

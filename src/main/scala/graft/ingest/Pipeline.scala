@@ -22,15 +22,13 @@ import scala.collection.Searching
   * files it covers and, per `source_name`, the sorted record ids in
   * them: ~60 B of driver heap per stored key (Spark's `SizeEstimator`:
   * 4.3 MB for 72k keys with 9-character ids), so ~60 MB per million
-  * keys. A collect lists the table's files first. When a covered file
-  * is gone or changed, the index is rebuilt from one scan of the whole
-  * table's two key columns; otherwise only the files it does not cover
-  * (another writer's) are scanned. The files a collect writes join the
-  * index as they are written, so a warm collect runs no Spark job,
-  * while a cold process pays one scan of the key columns of the whole
-  * table on its first collect. The set
-  * logic — first per key in the batch, minus the stored keys — is
-  * batch-bounded and runs on the driver, with no shuffle. Only the NEW
+  * keys. The index is kept by [[Lineage.maintain]] over the table's
+  * files, and the files a collect writes join it as they are written
+  * ([[Lineage.cover]]), so a warm collect runs no Spark job, while a
+  * cold process pays one scan of the key columns of the whole table on
+  * its first collect. The set logic — first per key in the batch,
+  * minus the stored keys — is batch-bounded and runs on the driver,
+  * with no shuffle. Only the NEW
   * rows are written (the existing table is never rewritten), and they
   * are already on the driver, so the driver writes them with Spark's
   * parquet writer ([[Catalog.appendRows]]) instead of shipping them to
@@ -126,34 +124,33 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
       val fresh = batch.filterNot(r => index.contains(r.source_name, r.record_id))
       val written = Catalog.appendRows(spark, fresh, Pipeline.RecordsEncoder,
         recordsPath, Seq("source_name"))
-      index.add(written, fresh.map(r => (r.source_name, r.record_id)))
+      Lineage.cover(listed, written, index.lineage)(
+        index.add(fresh.map(r => (r.source_name, r.record_id))))
       if (fresh.nonEmpty) appended(Pipeline.Appended(listed, written, fresh))
       fresh.size.toLong
     }
   }
 
-  /** Bring `index` up to the table's listed files by [[Lineage]]'s
-    * rule. When a covered file is gone or changed (a rewrite, a deleted
-    * partition) it is rebuilt from one scan of the whole table's key
-    * columns, covering the listed files that scan read; otherwise only
-    * the files it does not cover (another writer's, `collectStream`'s)
-    * are scanned. Returns the listing.
+  /** Bring `index` up to the table's listed files by
+    * [[Lineage.maintain]]: the keys of the files it does not cover
+    * (another writer's, `collectStream`'s) are scanned and added, and
+    * anything else rebuilds it from one scan of the whole table's key
+    * columns. Returns the listing.
     */
   private def refresh(index: Pipeline.KeyIndex): Seq[FileStamp] = {
-    def keys(table: DataFrame) = table.select("source_name", "record_id")
-      .as[(String, String)].collect().toSeq
+    def add(table: DataFrame) = index.add(table.select("source_name",
+      "record_id").as[(String, String)].collect().toSeq)
     val listed = Lineage.stamps(spark, recordsPath)
-    if (!index.lineage.valid(listed, Nil)) {
-      index.clear()
-      if (listed.nonEmpty) {
-        val table = dataRecords
-        val read = Lineage.inputs(spark, recordsPath, table)
-        index.add(listed.filter(f => read(f._1)), keys(table))
-      }
-    } else {
-      val files = index.lineage.uncovered(listed)
-      if (files.nonEmpty) index.add(files, keys(recordsFiles(files)))
-    }
+    Lineage.maintain(listed, index.lineage,
+      Some(files => add(recordsFiles(files))), () => {
+        index.clear()
+        if (listed.isEmpty) Set.empty
+        else {
+          val table = dataRecords
+          add(table)
+          Lineage.inputs(spark, recordsPath, table)
+        }
+      })
     listed
   }
 
@@ -213,33 +210,29 @@ object Pipeline {
   private val ChecksSchema: StructType = ChecksEncoder.schema
 
   /** The `(source_name, record_id)` keys stored in one records table:
-    * the stamps of the files it covers, as a [[Lineage]] with no
-    * outputs, and for each `source_name` the sorted record ids in those
+    * the stamps of the files it covers, as a [[Lineage]] held in
+    * memory, and for each `source_name` the sorted record ids in those
     * files (sorted arrays hold 72k keys in 4.3 MB, a hash set of the
-    * pairs in 12.3 MB). Not thread-safe: callers lock it.
+    * pairs in 12.3 MB). It starts as a record covering no file, so a
+    * cold process's first collect scans every listed file as an
+    * append. Not thread-safe: callers lock it.
     */
   private final class KeyIndex {
-    var lineage: Lineage = Lineage(Nil, Nil)
+    val lineage = new Lineage.Held(Some(Lineage(Nil, Nil)))
     private var ids = Map.empty[String, Array[String]]
 
     def contains(source: String, id: String): Boolean =
       ids.get(source).exists(_.search(id).isInstanceOf[Searching.Found])
 
-    /** Cover `files` too, whose keys are `keys`. */
-    def add(files: Seq[FileStamp], keys: Seq[(String, String)]): Unit = {
-      lineage = Lineage(lineage.covered ++ files, Nil)
+    def add(keys: Seq[(String, String)]): Unit =
       keys.groupMap(_._1)(_._2).foreach { case (source, more) =>
         // the held ids are one sorted run, so the sort (TimSort) costs
         // about a merge plus sorting the new ids
         ids = ids.updated(source,
           (ids.getOrElse(source, Array.empty[String]) ++ more).sorted)
       }
-    }
 
-    def clear(): Unit = {
-      lineage = Lineage(Nil, Nil)
-      ids = Map.empty
-    }
+    def clear(): Unit = ids = Map.empty
   }
 
   /** Each records table's key index (by qualified path), held for the
