@@ -2,16 +2,20 @@ package graft
 
 import java.io.IOException
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference,
-  Cast, InterpretedOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.SQLConf
@@ -50,6 +54,33 @@ object Catalog {
       if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(walk)
       else Seq(f)
     if (fs.exists(root)) walk(fs.getFileStatus(root)) else Nil
+  }
+
+  /** Per table (qualified path), the footer row count of each data
+    * file [[rowCount]] last listed, by stamp.
+    */
+  private val footerRows =
+    new ConcurrentHashMap[String, Map[FixtureCache.FileStamp, Long]]()
+
+  /** The rows of the table at `path`: the sum of the row counts in its
+    * data files' parquet footers ([[Lineage.stamps]]: no uncommitted
+    * output), read on the driver, so no Spark job. A file's count is
+    * kept by its stamp, so a call opens only the footers of files added
+    * or rewritten since the last.
+    */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val base = FixtureCache.qualified(spark, path)
+    val conf = spark.sessionState.newHadoopConf()
+    val known = footerRows.getOrDefault(base, Map.empty)
+    val counts = Lineage.stamps(spark, path).map { stamp =>
+      stamp -> known.getOrElse(stamp, {
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(base + stamp._1), conf))
+        try reader.getRecordCount finally reader.close()
+      })
+    }.toMap
+    footerRows.put(base, counts)
+    counts.values.sum
   }
 
   private val resolvedTables = new FixtureCache[String, DataFrame]
@@ -97,8 +128,9 @@ object Catalog {
     * `HashPartitioning(col, n)` partition id evaluated on the driver,
     * the file named with it as Spark's writer names it
     * (`part-00000-<uuid>_0000b.c000…`, [[BucketingUtils]]), its rows
-    * sorted by `col`. A bucketed table's reads then prune by bucket as
-    * they do over Spark's own files.
+    * sorted by `col` (all rows sorted once, then split). A bucketed
+    * table's reads then prune by bucket as they do over Spark's own
+    * files.
     *
     * Each file is written under a `_`-prefixed name, which readers and
     * file listings skip, and renamed to its `part-` name once every
@@ -132,10 +164,17 @@ object Catalog {
       }
       val bucketed = bucketBy.map { case (name, n) =>
         val key = bound(encoder.schema.fieldIndex(name))
-        (HashPartitioning(Seq(key), n).partitionIdExpression,
-          new InterpretedOrdering(Seq(SortOrder(key, Ascending))))
+        (HashPartitioning(Seq(key), n).partitionIdExpression, key)
       }
-      val groups = rows.map(r => toRow(r).copy())
+      val serialized = rows.map(r => toRow(r).copy())
+      // one sort of every row by its bucket column value, taken once, in
+      // Spark's order for the type (nulls first); grouping keeps it
+      val ordered = bucketed.fold(serialized) { case (_, key) =>
+        val byValue = Ordering.Option(PhysicalDataType.ordering(key.dataType))
+        serialized.map(row => Option(key.eval(row)) -> row)
+          .sortBy(_._1)(byValue).map(_._2)
+      }
+      val groups = ordered
         .groupBy(row => (partDirs.map(_(row)).mkString("/"),
           bucketed.map(_._1.eval(row).asInstanceOf[Int])))
         .toSeq.sortBy(_._1)
@@ -155,8 +194,7 @@ object Catalog {
         val parent = if (dir.isEmpty) root else new Path(root, dir)
         val tmp = new Path(parent, s"_tmp-$name")
         val writer = factory.newInstance(tmp.toString, dataSchema, context)
-        val sorted = bucketed.fold(group)(b => group.sorted(b._2))
-        try sorted.foreach(r => writer.write(project(r))) finally writer.close()
+        try group.foreach(r => writer.write(project(r))) finally writer.close()
         tmp -> new Path(parent, name)
       }
       written.foreach { case (tmp, dst) =>

@@ -1,78 +1,73 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ingest.Pipeline
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Materialized views over path-based tables: a named result cached as
-  * parquet next to its source, refreshed only when the source has
-  * changed since the last build, with an INCREMENTAL path for
-  * append-only rollups. The reference recomputes its analytics on every
-  * CLI call (ethical_crawler.py:1274–1349); at 100 TB a standing
-  * dashboard query must not re-scan an unchanged corpus — this is the
-  * standard freshness contract (compute on change, serve from the
-  * materialization otherwise).
+/** Materialized analytics over the records table: the reference
+  * recomputes its analytics on every CLI call
+  * (ethical_crawler.py:1274–1349); at 100 TB a standing dashboard query
+  * must not re-scan an unchanged corpus, nor the whole corpus after an
+  * append.
   *
-  * A view is kept by [[Lineage.maintain]] over its source's data
-  * files, its record in the view's directory naming them relative to
-  * the source. A view recorded by full paths, as earlier versions
-  * wrote them, reads as not valid and is rebuilt once. A
-  * transactional table format's snapshot ids subsume this at scale;
-  * the contract (compare source version to built-from version) is the
-  * same.
+  * Every `analytics` view is served from one [[AnalyticsState]] kept as
+  * parquet in one directory ([[State]]) by [[Lineage.maintain]] over
+  * the records files, its record naming them relative to the table: an
+  * append by another writer is aggregated alone and appended, a
+  * `collect` appends its new rows' state on the driver, and any other
+  * change rebuilds it in one pass. A transactional table format's
+  * snapshot ids subsume the record at scale; the contract (compare
+  * source version to built-from version) is the same.
   */
 object Mv {
 
-  final case class View(path: String, source: String)
-
-  /** Materialize `df` as the view: write to a temp dir, then swap. */
-  private def swap(spark: SparkSession, view: View, df: DataFrame): Unit = {
-    val tmp = view.path + "__mv_tmp"
-    Catalog.overwrite(df, tmp)
-    Catalog.replace(spark, tmp, view.path)
-  }
-
-  /** Serve the view, rebuilt from `build` after any added, deleted or
-    * rewritten source file, as the relation resolved at its current
-    * version ([[Catalog.resolved]]).
+  /** The analytics state of the records table `pipeline` writes, kept
+    * in `dir`. Its record counts only under the session time zone the
+    * state was built in (its `day` keys depend on it), so a zone change
+    * rebuilds.
     */
-  def readFresh(spark: SparkSession, view: View, build: => DataFrame)
-      : DataFrame = {
-    Lineage.maintain(Lineage.stamps(spark, view.source),
-      new Lineage.Dir(spark, view.path), None, () => {
-        val df = build
-        swap(spark, view, df)
-        Lineage.inputs(spark, view.source, df)
-      })
-    Catalog.resolved(spark, view.path)
-  }
+  final class State(spark: SparkSession, dir: String, pipeline: Pipeline) {
+    private val zoneFile = new Path(dir, "_graft_zone")
+    private def zone = spark.sessionState.conf.sessionLocalTimeZone
+    private def fs = zoneFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Incremental refresh for an APPEND-ONLY rollup (count + long-sum
-    * per key, the [[operators.AnalyticsOps.incrementalRollup]] shape):
-    * aggregate ONLY the source files its record leaves uncovered and
-    * full-outer-merge the delta into the materialized rollup. Cost per
-    * refresh is O(delta) + O(|view|) — independent of total source
-    * size, which is the whole point at 100 TB (the full rebuild
-    * re-scans everything). Any other change rolls every source file up
-    * again; sources that rewrite rows in place need [[readFresh]].
-    */
-  def refreshIncrementalRollup(spark: SparkSession, view: View,
-      key: String, valueCol: String): Unit = {
-    val base = FixtureCache.qualified(spark, view.source)
-    def rollup(files: Seq[FixtureCache.FileStamp]) =
-      operators.AnalyticsOps.rollup(
-        spark.read.schema(Catalog.load(spark, view.source).schema)
-          .parquet(files.map(base + _._1): _*),
-        key, valueCol)
-    val listed = Lineage.stamps(spark, view.source)
-    // The merged plan READS view.path — the swap's temp write runs that
-    // read to completion before the swap deletes what it reads.
-    Lineage.maintain(listed, new Lineage.Dir(spark, view.path),
-      Some(files => swap(spark, view, operators.AnalyticsOps.mergeRollups(
-        Catalog.load(spark, view.path), rollup(files), key))),
-      () => {
-        swap(spark, view, rollup(listed)
-          .orderBy(org.apache.spark.sql.functions.col(key).asc))
-        listed.map(_._1).toSet
-      })
+    private def store: Lineage.Store = new Lineage.Dir(spark, dir,
+      scala.util.Try {
+        val in = fs.open(zoneFile)
+        try new String(in.readAllBytes(), UTF_8) finally in.close()
+      }.toOption.contains(zone))
+
+    /** The state, merged per key, after bringing it up to the records
+      * files: nothing to do after a `collect` ([[cover]]), the state of
+      * the uncovered files appended after another writer's append, one
+      * pass over the table after anything else.
+      */
+    def served(): DataFrame = {
+      def write(records: DataFrame, mode: SaveMode): Unit =
+        AnalyticsState.of(records).coalesce(1).write.mode(mode).parquet(dir)
+      Lineage.maintain(Lineage.stamps(spark, pipeline.recordsPath), store,
+        Some(files => write(pipeline.recordsFiles(files), SaveMode.Append)),
+        () => {
+          val r = pipeline.dataRecords
+          write(r, SaveMode.Overwrite)
+          val out = fs.create(zoneFile, true)
+          try out.write(zone.getBytes(UTF_8)) finally out.close()
+          Lineage.inputs(spark, pipeline.recordsPath, r)
+        })
+      AnalyticsState.merged(
+        Catalog.resolved(spark, dir, Some(AnalyticsState.Schema)))
+    }
+
+    /** Keep a current state current across a `collect`'s write: the
+      * written rows' state is computed and appended on the driver, with
+      * no Spark job ([[Lineage.cover]]).
+      */
+    def cover(a: Pipeline.Appended): Unit =
+      Lineage.cover(a.listed, a.written, store) {
+        Catalog.appendRows(spark, AnalyticsState.parts(spark, a.rows),
+          AnalyticsState.PartEncoder, dir)
+      }
   }
 
   /** CDC-DRIVEN rollup maintenance — incremental view maintenance
@@ -83,9 +78,8 @@ object Mv {
     * Inserts add their after-image; deletes subtract their carried
     * before-image; updates subtract the fromV pre-image and add the
     * after-image — which also moves mass correctly when the GROUP
-    * column itself changed. This is the piece [[refreshIncrementalRollup]]
-    * cannot do (it sees a CoW rewrite as an invalid record and rolls
-    * the whole source up again).
+    * column itself changed, which an append-only state cannot do ([[State]]
+    * sees a CoW rewrite as an invalid record and rebuilds).
     *
     * Pre-images for updated keys are looked up in the fromV snapshot
     * restricted by left-semi to the feed's update keys — key-bounded

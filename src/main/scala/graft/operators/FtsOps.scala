@@ -108,14 +108,25 @@ object FtsOps {
     * Deterministic total order (score desc, id asc), 6 dp.
     */
   def searchRanked(index: DataFrame, nDocs: DataFrame, idCol: String,
-      terms: Seq[String], k: Int): DataFrame = {
+      terms: Seq[String], k: Int): DataFrame =
+    ranked(index, idCol, terms, k)(_.crossJoin(broadcast(nDocs)))
+
+  /** [[searchRanked]] with the corpus count known on the driver: it
+    * rides in as a literal, so no relation is broadcast (a broadcast of
+    * even a local relation runs a job).
+    */
+  def searchRanked(index: DataFrame, nDocs: Long, idCol: String,
+      terms: Seq[String], k: Int): DataFrame =
+    ranked(index, idCol, terms, k)(_.withColumn("n_docs", lit(nDocs)))
+
+  /** The scoring of [[searchRanked]]; `withN` adds the `n_docs` column. */
+  private def ranked(index: DataFrame, idCol: String, terms: Seq[String],
+      k: Int)(withN: DataFrame => DataFrame): DataFrame = {
     require(terms.nonEmpty, "at least one search term")
     val normTerms = terms.map(_.toLowerCase).distinct
     val postings = index.filter(col("token").isInCollection(normTerms))
     val dfs = postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    postings
-      .join(broadcast(dfs), Seq("token"))
-      .crossJoin(broadcast(nDocs))
+    withN(postings.join(broadcast(dfs), Seq("token")))
       .groupBy(col(idCol))
       .agg(round(
         sum(col("tf") * log(col("n_docs").cast("double") / col("df"))),
@@ -144,12 +155,11 @@ object FtsOps {
   }
 
   /** [[searchRanked]] over a persisted [[writeIndex]] table (the
-    * corpus count rides in as a one-row relation so the index itself
-    * never needs a full scan at query time).
+    * corpus count, known on the driver, rides in as a literal so the
+    * index itself never needs a full scan at query time).
     */
   def searchRankedIndexed(spark: SparkSession, tableName: String,
-      nDocs: DataFrame, idCol: String, terms: Seq[String], k: Int)
-      : DataFrame =
+      nDocs: Long, idCol: String, terms: Seq[String], k: Int): DataFrame =
     searchRanked(spark.table(tableName), nDocs, idCol, terms, k)
 
   /** BM25-lite ranked search (tier 3 of the ranking ladder: raw tf →

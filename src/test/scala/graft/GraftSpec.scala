@@ -394,7 +394,7 @@ class GraftSpec extends SparkSpec {
       assert(g.records.count() == (if (committedFirst) counts.head else 0L))
       g.indexFts()
       g.analyticsMaterialized(v)
-      Seq("fts_index", s"mv/$v").foreach { artifact =>
+      Seq("fts_index", "mv/_analytics").foreach { artifact =>
         val lineage = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(s"$dir/$artifact/_graft_lineage")))
         assert(!lineage.contains("_tmp-") && !lineage.contains("_temporary"),
@@ -485,7 +485,7 @@ class GraftSpec extends SparkSpec {
         assert((Lineage.stamps(spark, s"$dir/$artifact").toSet intersect
           before).isEmpty, s"$artifact must be rebuilt")
       }
-    tearThenRebuilds(s"mv/$v") {
+    tearThenRebuilds("mv/_analytics") {
       assert(sortedRows(g.analyticsMaterialized(v)) ==
         sortedRows(g.analytics()(v)))
     }
@@ -493,6 +493,77 @@ class GraftSpec extends SparkSpec {
       g.indexFts()
       assertFtsMatches(g)
     }
+  }
+
+  test("analytics from one scan; after a collect the analytics state and " +
+      "the corpus count need no build") {
+    val dir = tmpDir("graftanalyticsjobs")
+    val g = new Graft(spark, dir)
+    g.setup(Seq(nycFixture()))
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    g.indexFts()
+    g.analyticsMaterialized("type_counts").collect()
+    def stateFiles = Catalog.files(spark, dir + "/mv/_analytics")
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    (1 to 2).foreach { i =>
+      assert(g.collect(Seq(nycFixture(item(s"n-$i", s"Bike Lanes $i", i)))) == 1)
+      val a = g.analytics()
+      val jobs = jobsLaunchedBy(a.values.foreach(_.collect()))
+      assert(jobs <= 6, s"$jobs jobs for the five analytics views")
+      val before = stateFiles
+      AnalyticsState.Views.keys.foreach { v =>
+        val served = jobsLaunchedBy(g.analyticsMaterialized(v).collect())
+        assert(served <= 3, s"$served jobs to serve $v after a collect")
+        assert(sortedRows(g.analyticsMaterialized(v)) == sortedRows(a(v)), v)
+      }
+      assert(stateFiles == before, "serving after a collect writes nothing")
+      var n = -1L
+      assert(jobsLaunchedBy { n = Catalog.rowCount(spark, dir + "/data_records") } == 0)
+      assert(n == 2L + i)
+      val ranked = jobsLaunchedBy(g.searchFtsRanked(Seq("bike", "lanes")).collect())
+      assert(ranked <= 3, s"$ranked jobs for searchFtsRanked")
+      assertFtsMatches(g)
+    }
+  }
+
+  test("the footer row count equals the records count across every kind " +
+      "of write and debris") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val dir = tmpDir("graftrowcount")
+    val g = new Graft(spark, dir + "/catalog")
+    val catalogRecords = dir + "/catalog/data_records"
+    def assertCounts(what: String): Unit =
+      assert(Catalog.rowCount(spark, catalogRecords) == g.records.count(), what)
+    assert(Catalog.rowCount(spark, catalogRecords) == 0L)
+    assert(g.collect(Seq(nycFixture(item("aa-1", "Traffic Volume", 10),
+      item("bb-2", "Bike Counts", 20)))) == 2)
+    assertCounts("after a collect")
+    Seq(rec("Streamed Source", "s-1"), rec("Streamed Source", "s-2"))
+      .toDS.toDF.coalesce(1).write.parquet(dir + "/landing/b0")
+    g.collectStream(dir + "/landing/*", dir + "/cp")
+    assertCounts("after collectStream")
+    assert(Catalog.rowCount(spark, catalogRecords) == 4L)
+    Catalog.compact(spark, catalogRecords)
+    assertCounts("after compact")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(s"$catalogRecords/source_name=Streamed Source"), true))
+    assertCounts("after a deleted partition")
+    assert(Catalog.rowCount(spark, catalogRecords) == 2L)
+    // a leftover driver temp file and an in-flight distributed write
+    val donor = Catalog.files(spark, catalogRecords).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    Seq(new Path(donor.getParent, "_tmp-" + donor.getName),
+      new Path(s"$catalogRecords/_temporary/0/task_0_m_000000/" +
+        "source_name=NYC Open Data", donor.getName)).foreach { dst =>
+      fs.mkdirs(dst.getParent)
+      assert(org.apache.hadoop.fs.FileUtil.copy(fs, donor, fs, dst, false,
+        spark.sparkContext.hadoopConfiguration))
+    }
+    assertCounts("with uncommitted files present")
+    assert(g.collect(Seq(nycFixture(item("cc-3", "Bike Lanes", 5)))) == 1)
+    assertCounts("after a further collect")
   }
 
   test("a collect refreshes a cached records frame, as Spark's writer does") {

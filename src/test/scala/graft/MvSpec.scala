@@ -24,57 +24,6 @@ class MvSpec extends SparkSpec {
       before.map(_._3).max, -1))
   }
 
-  test("readFresh builds once, serves cached, rebuilds on source change") {
-    val dir = tmpDir("mv")
-    val src = dir + "/src"
-    docs(30).write.parquet(src)
-    var builds = 0
-    val view = Mv.View(dir + "/mv_counts", src)
-    def build = {
-      builds += 1
-      Catalog.load(spark, src).groupBy("source")
-        .agg(count(lit(1)).as("n")).orderBy("source")
-    }
-    val r1 = Mv.readFresh(spark, view, build).collect()
-    assert(builds == 1 && r1.map(_.getLong(1)).sum == 30)
-    // unchanged source → served from the materialization, no rebuild
-    Mv.readFresh(spark, view, build).collect()
-    assert(builds == 1)
-    // append in the same mtime tick → stale → one rebuild
-    appendSameTick(docs(10, off = 100), src)
-    val r2 = Mv.readFresh(spark, view, build).collect()
-    assert(builds == 2 && r2.map(_.getLong(1)).sum == 40)
-  }
-
-  test("incremental rollup refresh: delta files only, equals full recompute") {
-    val dir = tmpDir("mvinc")
-    val src = dir + "/src"
-    docs(40).write.parquet(src)
-    val view = Mv.View(dir + "/mv_rollup", src)
-    Mv.refreshIncrementalRollup(spark, view, "source", "n_chars")
-    val first = Catalog.load(spark, view.path).collect()
-    assert(first.map(_.getLong(1)).sum == 40)
-
-    // no new files → refresh is a no-op (nothing uncovered)
-    val filesBefore = Catalog.load(spark, view.path).inputFiles.toSet
-    Mv.refreshIncrementalRollup(spark, view, "source", "n_chars")
-    assert(Catalog.load(spark, view.path).inputFiles.toSet == filesBefore)
-
-    // append a delta in the same mtime tick; merge must equal a full
-    // recompute
-    appendSameTick(docs(25, off = 1000), src)
-    Mv.refreshIncrementalRollup(spark, view, "source", "n_chars")
-    val merged = Catalog.load(spark, view.path)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val full = Catalog.load(spark, src).groupBy(col("source"))
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(col("n_chars")).cast("long").as("total_chars"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    assert(merged.toSeq == full.toSeq)
-  }
-
   test("incremental delta listing sees only the files a lineage record " +
       "does not cover") {
     val dir = tmpDir("mvdelta")
@@ -128,8 +77,8 @@ class MvSpec extends SparkSpec {
     Catalog.append(recs, dir + "/data_records")
     val tc = g.analyticsMaterialized("type_counts").collect()
     assert(tc.nonEmpty)
-    // served from the mv path, not recomputed from records
-    assert(Catalog.tableExists(spark, dir + "/mv/type_counts"))
+    // served from the analytics state, not recomputed from records
+    assert(Catalog.tableExists(spark, dir + "/mv/_analytics"))
     val again = g.analyticsMaterialized("type_counts").collect()
     assert(again.map(_.toString).toSeq == tc.map(_.toString).toSeq)
     intercept[IllegalArgumentException] {

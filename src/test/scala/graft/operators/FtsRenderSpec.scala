@@ -114,7 +114,7 @@ class FtsRenderSpec extends SparkSpec {
     FtsOps.writeIndex(docs, "doc_id", "text", "fts_rank_test", path,
       buckets = 32)
     try {
-      val n = docs.agg(count(lit(1)).as("n_docs"))
+      val n = docs.count()
       val fromIndex = FtsOps.searchRankedIndexed(spark,
         "fts_rank_test", n, "doc_id", Seq("dup", "window"), 20)
         .as[(Long, Double)].collect().toSeq
@@ -187,7 +187,7 @@ class FtsRenderSpec extends SparkSpec {
       FtsOps.writeIndex(docs, "doc_id", "text", tables(1), s"$dir/full",
         buckets = 4)
       assertOneFilePerBucket(tables(1), s"$dir/full")
-      val n = docs.agg(count(lit(1)).as("n_docs"))
+      val n = docs.count()
       Seq(Seq("window"), Seq("dup", "window")).foreach { terms =>
         val Seq(inc, full) = tables.map(t => FtsOps.searchIndexed(spark, t,
           "doc_id", terms, 50).collect().toSeq)
