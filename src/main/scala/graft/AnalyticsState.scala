@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.BindReferences
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
 
 /** The analytics state: one partial aggregate of the records table
   * from which every `analytics` view (ethical_crawler.py:1274–1349) is
@@ -62,21 +63,45 @@ object AnalyticsState {
       filter(coalesce(col("tags"), typedLit(Seq.empty[String])), _ =!= ""),
       entry("tag", _)))
 
-  /** The state of `records`, one pass: one aggregate over the
-    * records' exploded entries.
+  private val Earlier = Ordering.fromLessThan[Timestamp](_ before _)
+
+  /** `a` and `b`, two partial rows of one key, merged. */
+  private def plus(a: Part, b: Part): Part = Part(a.kind, a.key, a.n + b.n,
+    (a.size_sum ++ b.size_sum).reduceOption(_ + _), a.size_n + b.size_n,
+    (a.min_t ++ b.min_t).minOption(Earlier),
+    (a.max_t ++ b.max_t).maxOption(Earlier))
+
+  /** `parts` merged per key: one row per `(kind, key)`. */
+  private def perKey(parts: Iterator[Part]): Iterator[Part] = {
+    val byKey = mutable.HashMap.empty[(String, String), Part]
+    parts.foreach(p =>
+      byKey.updateWith((p.kind, p.key))(o => Some(o.fold(p)(plus(_, p)))))
+    byKey.valuesIterator
+  }
+
+  /** The state of `records`, one pass in parallel: each input
+    * partition's entries merged per key, the partial states brought to
+    * one partition and merged again. The shuffle is the RDD's, not a
+    * Dataset exchange, so a cached state has no adaptive stage of its
+    * own: the first view that reads the cache fills it in that view's
+    * job (scan and merge, two stages).
     */
-  def of(records: DataFrame): DataFrame =
-    records.select(explode(entries).as("e"), col("size_bytes"),
-        col("ingested_at"))
-      .groupBy(col("e.kind").as("kind"), col("e.key").as("key"))
-      .agg(count(lit(1)).as("n"), sum(col("size_bytes")).as("size_sum"),
-        count(col("size_bytes")).as("size_n"),
-        min(col("ingested_at")).as("min_t"),
-        max(col("ingested_at")).as("max_t"))
+  def of(records: DataFrame): DataFrame = {
+    val t = col("ingested_at")
+    val ones = records.select(explode(entries).as("e"), col("size_bytes"), t)
+      .select(col("e.kind").as("kind"), col("e.key").as("key"),
+        lit(1L).as("n"), col("size_bytes").cast(LongType).as("size_sum"),
+        when(col("size_bytes").isNull, 0L).otherwise(1L).as("size_n"),
+        t.as("min_t"), t.as("max_t"))
+      .as[Part](PartEncoder)
+    records.sparkSession.createDataset(
+      ones.rdd.mapPartitions(perKey).repartition(1).mapPartitions(perKey))(
+      PartEncoder).toDF()
+  }
 
   /** The state of `records`, which are on the driver: [[entries]] as
     * the session analyzes it, evaluated on the driver (analyzed over an
-    * empty relation: no job), then aggregated per key.
+    * empty relation: no job), then merged per key as [[of]] merges.
     */
   def parts(spark: SparkSession, records: Seq[DataRecord]): Seq[Part] =
     SQLConf.withExistingConf(spark.sessionState.conf) {
@@ -86,20 +111,16 @@ object AnalyticsState {
       val keysOf = BindReferences.bindReference(plan.expressions.head,
         plan.children.head.output)
       val toRow = encoder.createSerializer()
-      val byKey = records.flatMap { r =>
+      perKey(records.iterator.flatMap { r =>
         val es = keysOf.eval(toRow(r)).asInstanceOf[ArrayData]
+        val t = Option(r.ingested_at)
         (0 until es.numElements).map { i =>
           val e = es.getStruct(i, 2)
-          (e.getUTF8String(0).toString, Option(e.getUTF8String(1)).map(_.toString)) -> r
+          Part(e.getUTF8String(0).toString,
+            Option(e.getUTF8String(1)).map(_.toString).orNull, 1L,
+            r.size_bytes, r.size_bytes.size.toLong, t, t)
         }
-      }.groupMap(_._1)(_._2)
-      val earlier = Ordering.fromLessThan[Timestamp](_ before _)
-      byKey.map { case ((kind, key), rs) =>
-        val sizes = rs.flatMap(_.size_bytes)
-        val times = rs.flatMap(r => Option(r.ingested_at))
-        Part(kind, key.orNull, rs.size.toLong, sizes.reduceOption(_ + _),
-          sizes.size.toLong, times.minOption(earlier), times.maxOption(earlier))
-      }.toSeq
+      }).toSeq
     }
 
   /** One row per `(kind, key)` of `state`, which may hold several

@@ -56,31 +56,31 @@ object Catalog {
     if (fs.exists(root)) walk(fs.getFileStatus(root)) else Nil
   }
 
-  /** Per table (qualified path), the footer row count of each data
-    * file [[rowCount]] last listed, by stamp.
+  /** Per session and table (qualified path), the footer row count of
+    * each data file [[rowCount]] last listed, by stamp; a session's
+    * entries go with its SparkContext ([[FixtureCache]]).
     */
   private val footerRows =
-    new ConcurrentHashMap[String, Map[FixtureCache.FileStamp, Long]]()
+    new FixtureCache[String, ConcurrentHashMap[FixtureCache.FileStamp, Long]]
 
   /** The rows of the table at `path`: the sum of the row counts in its
     * data files' parquet footers ([[Lineage.stamps]]: no uncommitted
     * output), read on the driver, so no Spark job. A file's count is
-    * kept by its stamp, so a call opens only the footers of files added
-    * or rewritten since the last.
+    * kept by its stamp until a listing no longer holds it, so a call
+    * opens only the footers of files added or rewritten since the last.
     */
   def rowCount(spark: SparkSession, path: String): Long = {
     val base = FixtureCache.qualified(spark, path)
     val conf = spark.sessionState.newHadoopConf()
-    val known = footerRows.getOrDefault(base, Map.empty)
-    val counts = Lineage.stamps(spark, path).map { stamp =>
-      stamp -> known.getOrElse(stamp, {
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(base + stamp._1), conf))
-        try reader.getRecordCount finally reader.close()
-      })
-    }.toMap
-    footerRows.put(base, counts)
-    counts.values.sum
+    val known = footerRows(spark, base)(new ConcurrentHashMap())
+    val stamps = Lineage.stamps(spark, path)
+    val listed = stamps.toSet
+    known.keySet.removeIf(s => !listed(s))
+    stamps.map(stamp => known.computeIfAbsent(stamp, _ => {
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(base + stamp._1), conf))
+      try reader.getRecordCount finally reader.close()
+    })).sum
   }
 
   private val resolvedTables = new FixtureCache[String, DataFrame]

@@ -269,20 +269,17 @@ final class Graft(spark: SparkSession, tableDir: String) {
   /** `analytics` — per-source stats, type counts, and the three
     * reference-stubbed analytics (tags/temporal/license)
     * (ethical_crawler.py:1274–1349), recomputed per call as the
-    * reference does, from one scan: one [[AnalyticsState]] aggregate
-    * over `records` in one partition, cached, of which each view is a
-    * local projection and sort. Building the frames launches no job;
-    * collecting all five runs the aggregate once, in one task with no
-    * exchange, so six jobs in all. (Over a ~12k-record catalog on a
-    * 4-core host, aggregating in parallel behind an exchange took as
-    * long, with one job more; [[analyticsMaterialized]] is the path
-    * whose cost does not grow with the table.) The previous call's
-    * state is unpersisted when the next call starts, so no call answers
-    * from an earlier one's.
+    * reference does, from one scan: one [[AnalyticsState]] over
+    * `records` (each input partition merged per key in parallel, the
+    * partial states merged in one partition), cached, of which each
+    * view is a local projection and sort. Building the frames launches
+    * no job; collecting all five runs the scan once, so six jobs in
+    * all. The previous call's state is unpersisted when the next call
+    * starts, so no call answers from an earlier one's.
     */
   def analytics(): Map[String, DataFrame] = synchronized {
     analyticsCached.foreach(_.unpersist())
-    val state = AnalyticsState.of(records.coalesce(1)).cache()
+    val state = AnalyticsState.of(records).cache()
     analyticsCached = Some(state)
     AnalyticsState.Views.map { case (name, view) => name -> view(state) }
   }

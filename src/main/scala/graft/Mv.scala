@@ -16,9 +16,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the records files, its record naming them relative to the table: an
   * append by another writer is aggregated alone and appended, a
   * `collect` appends its new rows' state on the driver, and any other
-  * change rebuilds it in one pass. A transactional table format's
-  * snapshot ids subsume the record at scale; the contract (compare
-  * source version to built-from version) is the same.
+  * change rebuilds it in one pass. Serving folds a state grown to many
+  * files into one, so a long run of collects does not slow it. A
+  * transactional table format's snapshot ids subsume the record at
+  * scale; the contract (compare source version to built-from version)
+  * is the same.
   */
 object Mv {
 
@@ -28,6 +30,8 @@ object Mv {
     * rebuilds.
     */
   final class State(spark: SparkSession, dir: String, pipeline: Pipeline) {
+    /** The most state files [[served]] merges before it folds them. */
+    private val FoldAt = 16
     private val zoneFile = new Path(dir, "_graft_zone")
     private def zone = spark.sessionState.conf.sessionLocalTimeZone
     private def fs = zoneFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -41,12 +45,17 @@ object Mv {
     /** The state, merged per key, after bringing it up to the records
       * files: nothing to do after a `collect` ([[cover]]), the state of
       * the uncovered files appended after another writer's append, one
-      * pass over the table after anything else.
+      * pass over the table after anything else. A current state of more
+      * than [[FoldAt]] files (each `collect` adds one) is first folded
+      * into one file.
       */
     def served(): DataFrame = {
       def write(records: DataFrame, mode: SaveMode): Unit =
-        AnalyticsState.of(records).coalesce(1).write.mode(mode).parquet(dir)
-      Lineage.maintain(Lineage.stamps(spark, pipeline.recordsPath), store,
+        AnalyticsState.of(records).write.mode(mode).parquet(dir)
+      def state = AnalyticsState.merged(
+        Catalog.resolved(spark, dir, Some(AnalyticsState.Schema)))
+      val listed = Lineage.stamps(spark, pipeline.recordsPath)
+      Lineage.maintain(listed, store,
         Some(files => write(pipeline.recordsFiles(files), SaveMode.Append)),
         () => {
           val r = pipeline.dataRecords
@@ -55,8 +64,17 @@ object Mv {
           try out.write(zone.getBytes(UTF_8)) finally out.close()
           Lineage.inputs(spark, pipeline.recordsPath, r)
         })
-      AnalyticsState.merged(
-        Catalog.resolved(spark, dir, Some(AnalyticsState.Schema)))
+      val files = store.outputs
+      if (files.size > FoldAt) store.current(listed).foreach { record =>
+        // the merged rows go in before the old files go; a crash in
+        // between leaves outputs other than the recorded ones: a rebuild
+        Catalog.appendRows(spark,
+          state.as[AnalyticsState.Part](AnalyticsState.PartEncoder).collect()
+            .toSeq, AnalyticsState.PartEncoder, dir)
+        files.foreach(f => fs.delete(new Path(dir + f._1), false))
+        store.write(record.covered)
+      }
+      state
     }
 
     /** Keep a current state current across a `collect`'s write: the

@@ -158,4 +158,27 @@ class AnalyticsStateSpec extends SparkSpec {
       } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
     }
   }
+
+  test("serving folds a state of many collects' files into one, and the " +
+      "views still equal their ReferenceOps frames") {
+    val dir = tmpDir("analyticsfold")
+    val g = new Graft(spark, dir)
+    def stateFiles = Lineage.stamps(spark, dir + "/mv/_analytics")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try {
+      assert(g.collect(Seq(adapter(base))) == base.size)
+      assertViews(g, "the first build")
+      (1 to 17).foreach(i => assert(g.collect(Seq(adapter(more(s"f$i")))) == 3))
+      assert(stateFiles.size == 18, "each collect covers with one file")
+      assertViews(g, "after the fold")
+      assert(stateFiles.size == 1)
+      val folded = stateFiles
+      g.analyticsMaterialized("type_counts").collect()
+      assert(stateFiles == folded, "a folded state is current")
+      assert(g.collect(Seq(adapter(more("g")))) == 3)
+      assert(stateFiles.size == 2 && folded.toSet.subsetOf(stateFiles.toSet),
+        "a collect covers a folded state")
+      assertViews(g, "after the fold, then a collect")
+    } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+  }
 }

@@ -2,8 +2,7 @@ package graft
 
 import graft.ingest._
 import java.time.{Clock, Instant, ZoneOffset}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** End-to-end verb tests: the reference CLI surface over a fresh
@@ -149,20 +148,23 @@ class GraftSpec extends SparkSpec {
     assert(red.getAs[Long]("n_rows") == 2L)
   }
 
-  /** Spark jobs `body` launches on this thread, counted by a listener.
-    * A sentinel job in a second group marks the end: the listener bus
-    * delivers in order, so once the sentinel is seen every job `body`
-    * started has been counted.
+  /** Spark jobs `body` launches on this thread, counted by a listener. */
+  def jobsLaunchedBy(body: => Unit): Int = stagesLaunchedBy(body).size
+
+  /** Per Spark job `body` launches on this thread, the task count of
+    * each of its stages, seen by a listener. A sentinel job in a second
+    * group marks the end: the listener bus delivers in order, so once
+    * the sentinel is seen every job `body` started has been seen.
     */
-  def jobsLaunchedBy(body: => Unit): Int = {
+  def stagesLaunchedBy(body: => Unit): Seq[Seq[Int]] = {
     val sc = spark.sparkContext
     val group = s"graftspec-${System.nanoTime}"
-    val jobs = new AtomicInteger()
+    val jobs = new ConcurrentLinkedQueue[Seq[Int]]()
     val end = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`group`) => jobs.add(e.stageInfos.map(_.numTasks))
           case Some(g) if g == s"$group-end" => end.countDown()
           case _ => ()
         }
@@ -178,7 +180,7 @@ class GraftSpec extends SparkSpec {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    jobs.get
+    jobs.toArray(Array.empty[Seq[Int]]).toSeq
   }
 
   test("catalog reads resolve once per table version") {
@@ -509,8 +511,9 @@ class GraftSpec extends SparkSpec {
     (1 to 2).foreach { i =>
       assert(g.collect(Seq(nycFixture(item(s"n-$i", s"Bike Lanes $i", i)))) == 1)
       val a = g.analytics()
-      val jobs = jobsLaunchedBy(a.values.foreach(_.collect()))
-      assert(jobs <= 6, s"$jobs jobs for the five analytics views")
+      val stages = stagesLaunchedBy(a.values.foreach(_.collect()))
+      assert(stages.size <= 6, s"${stages.size} jobs for the five analytics views")
+      assert(stages.flatten.max > 1, s"the scan runs in one task: $stages")
       val before = stateFiles
       AnalyticsState.Views.keys.foreach { v =>
         val served = jobsLaunchedBy(g.analyticsMaterialized(v).collect())
