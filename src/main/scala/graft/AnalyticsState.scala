@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.BindReferences
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -72,31 +73,53 @@ object AnalyticsState {
     (a.max_t ++ b.max_t).maxOption(Earlier))
 
   /** `parts` merged per key: one row per `(kind, key)`. */
-  private def perKey(parts: Iterator[Part]): Iterator[Part] = {
+  private[graft] def perKey(parts: Iterator[Part]): Iterator[Part] = {
     val byKey = mutable.HashMap.empty[(String, String), Part]
     parts.foreach(p =>
       byKey.updateWith((p.kind, p.key))(o => Some(o.fold(p)(plus(_, p)))))
     byKey.valuesIterator
   }
 
-  /** The state of `records`, one pass in parallel: each input
-    * partition's entries merged per key, the partial states brought to
-    * one partition and merged again. The shuffle is the RDD's, not a
+  /** The state of `records`, one pass in parallel: each input split's
+    * entries merged per key ([[partials]]), the partial states brought
+    * to one partition and merged again. The shuffle is the RDD's, not a
     * Dataset exchange, so a cached state has no adaptive stage of its
     * own: the first view that reads the cache fills it in that view's
     * job (scan and merge, two stages).
     */
   def of(records: DataFrame): DataFrame = {
-    val t = col("ingested_at")
-    val ones = records.select(explode(entries).as("e"), col("size_bytes"), t)
-      .select(col("e.kind").as("kind"), col("e.key").as("key"),
-        lit(1L).as("n"), col("size_bytes").cast(LongType).as("size_sum"),
-        when(col("size_bytes").isNull, 0L).otherwise(1L).as("size_n"),
-        t.as("min_t"), t.as("max_t"))
-      .as[Part](PartEncoder)
-    records.sparkSession.createDataset(
-      ones.rdd.mapPartitions(perKey).repartition(1).mapPartitions(perKey))(
+    val ones = records.select(explode(entries).as("e"),
+      col("size_bytes").cast(LongType), col("ingested_at"))
+    records.sparkSession.createDataset(ones.queryExecution.toRdd
+      .mapPartitions(partials).repartition(1).mapPartitions(perKey))(
       PartEncoder).toDF()
+  }
+
+  /** A split's `(entry, size_bytes, ingested_at)` rows merged per key,
+    * read in place: one [[Part]] per key, not one per row.
+    */
+  private def partials(rows: Iterator[InternalRow]): Iterator[Part] = {
+    final class Acc(var n: Long = 0L, var sizeSum: Long = 0L,
+        var sizeN: Long = 0L, var minT: Long = Long.MaxValue,
+        var maxT: Long = Long.MinValue)
+    val byKey = mutable.HashMap.empty[(String, String), Acc]
+    rows.foreach { r =>
+      val e = r.getStruct(0, 2)
+      val a = byKey.getOrElseUpdate((e.getUTF8String(0).toString,
+        if (e.isNullAt(1)) null else e.getUTF8String(1).toString), new Acc)
+      a.n += 1
+      if (!r.isNullAt(1)) { a.sizeSum += r.getLong(1); a.sizeN += 1 }
+      if (!r.isNullAt(2)) {
+        a.minT = math.min(a.minT, r.getLong(2))
+        a.maxT = math.max(a.maxT, r.getLong(2))
+      }
+    }
+    byKey.iterator.map { case ((kind, key), a) =>
+      def at(micros: Long) = Option.when(a.minT <= a.maxT)(
+        DateTimeUtils.toJavaTimestamp(micros))
+      Part(kind, key, a.n, Option.when(a.sizeN > 0)(a.sizeSum), a.sizeN,
+        at(a.minT), at(a.maxT))
+    }
   }
 
   /** The state of `records`, which are on the driver: [[entries]] as

@@ -290,8 +290,9 @@ final class Graft(spark: SparkSession, tableDir: String) {
   /** One [[analytics]] view served from the analytics state persisted
     * under `$tableDir/mv/_analytics` ([[Mv.State]]): its files merged
     * per key, then projected. After a [[collect]] the state is already
-    * current and nothing is written; another writer's append costs a
-    * pass over the new files only, and a rewrite a pass over the table.
+    * current, merged on the driver, and nothing is read or written;
+    * another writer's append costs a pass over the new files only, and
+    * a rewrite a pass over the table.
     */
   def analyticsMaterialized(name: String): DataFrame = {
     val view = AnalyticsState.Views.getOrElse(name,

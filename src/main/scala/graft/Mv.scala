@@ -16,8 +16,12 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the records files, its record naming them relative to the table: an
   * append by another writer is aggregated alone and appended, a
   * `collect` appends its new rows' state on the driver, and any other
-  * change rebuilds it in one pass. Serving folds a state grown to many
-  * files into one, so a long run of collects does not slow it. A
+  * change rebuilds it in one pass. The state, merged per key, is also
+  * held on the driver for as long as the directory holds the files it
+  * merges (a `collect` merges its rows into both), so serving after a
+  * `collect` reads no state file; the state is small, one row per
+  * source, type, day, license, tag and (source, type) pair. Serving
+  * folds a state grown to many files into one. A
   * transactional table format's snapshot ids subsume the record at
   * scale; the contract (compare source version to built-from version)
   * is the same.
@@ -42,18 +46,25 @@ object Mv {
         try new String(in.readAllBytes(), UTF_8) finally in.close()
       }.toOption.contains(zone))
 
+    /** The state files last read or written here, and their state
+      * merged per key: while the directory holds exactly these files,
+      * serving reads none of them.
+      */
+    private var kept: (Set[FixtureCache.FileStamp], Seq[AnalyticsState.Part]) =
+      (Set.empty, Nil)
+
     /** The state, merged per key, after bringing it up to the records
       * files: nothing to do after a `collect` ([[cover]]), the state of
       * the uncovered files appended after another writer's append, one
-      * pass over the table after anything else. A current state of more
-      * than [[FoldAt]] files (each `collect` adds one) is first folded
-      * into one file.
+      * pass over the table after anything else. The merged rows come
+      * from [[kept]] when the directory still holds its files (after a
+      * `collect`, which keeps it), else from one read of the files. A
+      * current state of more than [[FoldAt]] files (each `collect` adds
+      * one) is first folded into one file.
       */
-    def served(): DataFrame = {
+    def served(): DataFrame = synchronized {
       def write(records: DataFrame, mode: SaveMode): Unit =
         AnalyticsState.of(records).write.mode(mode).parquet(dir)
-      def state = AnalyticsState.merged(
-        Catalog.resolved(spark, dir, Some(AnalyticsState.Schema)))
       val listed = Lineage.stamps(spark, pipeline.recordsPath)
       Lineage.maintain(listed, store,
         Some(files => write(pipeline.recordsFiles(files), SaveMode.Append)),
@@ -65,27 +76,38 @@ object Mv {
           Lineage.inputs(spark, pipeline.recordsPath, r)
         })
       val files = store.outputs
+      if (kept._1 != files.toSet) kept = (files.toSet,
+        AnalyticsState.merged(Catalog.resolved(spark, dir,
+          Some(AnalyticsState.Schema)))
+          .as[AnalyticsState.Part](AnalyticsState.PartEncoder).collect().toSeq)
       if (files.size > FoldAt) store.current(listed).foreach { record =>
         // the merged rows go in before the old files go; a crash in
         // between leaves outputs other than the recorded ones: a rebuild
-        Catalog.appendRows(spark,
-          state.as[AnalyticsState.Part](AnalyticsState.PartEncoder).collect()
-            .toSeq, AnalyticsState.PartEncoder, dir)
+        val folded = Catalog.appendRows(spark, kept._2,
+          AnalyticsState.PartEncoder, dir)
         files.foreach(f => fs.delete(new Path(dir + f._1), false))
         store.write(record.covered)
+        kept = (folded.toSet, kept._2)
       }
-      state
+      spark.createDataset(kept._2)(AnalyticsState.PartEncoder).toDF()
     }
 
     /** Keep a current state current across a `collect`'s write: the
       * written rows' state is computed and appended on the driver, with
-      * no Spark job ([[Lineage.cover]]).
+      * no Spark job ([[Lineage.cover]]), and merged into [[kept]] when
+      * that holds the files the append adds to.
       */
-    def cover(a: Pipeline.Appended): Unit =
+    def cover(a: Pipeline.Appended): Unit = synchronized {
       Lineage.cover(a.listed, a.written, store) {
-        Catalog.appendRows(spark, AnalyticsState.parts(spark, a.rows),
+        val before = store.outputs.toSet
+        val delta = AnalyticsState.parts(spark, a.rows)
+        val written = Catalog.appendRows(spark, delta,
           AnalyticsState.PartEncoder, dir)
+        if (kept._1 == before)
+          kept = (before ++ written,
+            AnalyticsState.perKey((kept._2 ++ delta).iterator).toSeq)
       }
+    }
   }
 
   /** CDC-DRIVEN rollup maintenance — incremental view maintenance

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StringType, StructField,
@@ -108,32 +109,42 @@ object FtsOps {
     * Deterministic total order (score desc, id asc), 6 dp.
     */
   def searchRanked(index: DataFrame, nDocs: DataFrame, idCol: String,
-      terms: Seq[String], k: Int): DataFrame =
-    ranked(index, idCol, terms, k)(_.crossJoin(broadcast(nDocs)))
+      terms: Seq[String], k: Int): DataFrame = {
+    val postings = termPostings(index, terms)
+    val dfs = postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    ranked(postings.join(broadcast(dfs), Seq("token"))
+      .crossJoin(broadcast(nDocs)), idCol, k)
+  }
 
-  /** [[searchRanked]] with the corpus count known on the driver: it
-    * rides in as a literal, so no relation is broadcast (a broadcast of
-    * even a local relation runs a job).
+  /** [[searchRanked]] with the corpus count known on the driver, for an
+    * index bucketed by token: the count rides in as a literal (a
+    * broadcast of even a local relation runs a job), and df(t) is a
+    * count over each token's postings, which a bucketed read holds in
+    * one partition, so the postings are read once, with no broadcast.
     */
   def searchRanked(index: DataFrame, nDocs: Long, idCol: String,
       terms: Seq[String], k: Int): DataFrame =
-    ranked(index, idCol, terms, k)(_.withColumn("n_docs", lit(nDocs)))
+    ranked(termPostings(index, terms)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("token"))))
+      .withColumn("n_docs", lit(nDocs)), idCol, k)
 
-  /** The scoring of [[searchRanked]]; `withN` adds the `n_docs` column. */
-  private def ranked(index: DataFrame, idCol: String, terms: Seq[String],
-      k: Int)(withN: DataFrame => DataFrame): DataFrame = {
+  /** The postings of `terms`, lower-cased. */
+  private def termPostings(index: DataFrame, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "at least one search term")
-    val normTerms = terms.map(_.toLowerCase).distinct
-    val postings = index.filter(col("token").isInCollection(normTerms))
-    val dfs = postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    withN(postings.join(broadcast(dfs), Seq("token")))
+    index.filter(col("token").isInCollection(terms.map(_.toLowerCase).distinct))
+  }
+
+  /** The scoring of [[searchRanked]] over postings with `df` and
+    * `n_docs` columns.
+    */
+  private def ranked(postings: DataFrame, idCol: String, k: Int): DataFrame =
+    postings
       .groupBy(col(idCol))
       .agg(round(
         sum(col("tf") * log(col("n_docs").cast("double") / col("df"))),
         6).as("score"))
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
-  }
 
   /** [[searchRanked]] building the index inline from the corpus.
     * The IN-filtered postings are cached so the df branch and the

@@ -11,7 +11,9 @@ import scala.collection.immutable.ListMap
 
 /** Equality witness for the analytics state: after each kind of write
   * to the records table, every view from `analytics()` and from
-  * `analyticsMaterialized` equals its `ReferenceOps` frame over
+  * `analyticsMaterialized` (of the Graft that wrote, and of a new one,
+  * which merges the state's files, not the state the writer holds)
+  * equals its `ReferenceOps` frame over
   * `records`, rows, order and column types. Each case then collects
   * once more, so the state it left is also extended on the driver and
   * served merged with that delta. The session runs in a zone other
@@ -78,19 +80,22 @@ class AnalyticsStateSpec extends SparkSpec {
     rec(sec, s"$tag-3", "filing", "2026-04-02T01:00:00Z", Nil, Some(9L),
       Some("cc-by")))
 
-  private def assertViews(g: Graft, what: String): Unit = {
+  private def assertViews(g: Graft, dir: String, what: String): Unit = {
     val records = g.records
     val fresh = g.analytics()
+    // a new Graft holds no merged state, so it merges the state's files
+    val cold = new Graft(spark, dir)
     reference.foreach { case (v, ref) =>
       val want = ref(records)
       val types = want.schema.map(f => f.name -> f.dataType)
       Seq("analytics" -> fresh(v),
-        "analyticsMaterialized" -> g.analyticsMaterialized(v)).foreach {
-        case (verb, got) =>
+        "analyticsMaterialized" -> g.analyticsMaterialized(v),
+        "analyticsMaterialized in a new Graft" -> cold.analyticsMaterialized(v))
+        .foreach { case (verb, got) =>
           assert(got.schema.map(f => f.name -> f.dataType) == types,
             s"$what: $verb($v)")
           assert(got.collect().toSeq == want.collect().toSeq, s"$what: $verb($v)")
-      }
+        }
     }
   }
 
@@ -142,10 +147,10 @@ class AnalyticsStateSpec extends SparkSpec {
       spark.conf.set("spark.sql.session.timeZone", zone)
       try {
         assert(g.collect(Seq(adapter(base))) == base.size)
-        assertViews(g, "the first build")
+        assertViews(g, dir, "the first build")
         val built = stateFiles
         write(g, dir)
-        assertViews(g, s"after $name")
+        assertViews(g, dir, s"after $name")
         val after = stateFiles
         follows match {
           case Covered | Extended =>
@@ -153,7 +158,7 @@ class AnalyticsStateSpec extends SparkSpec {
           case Rebuilt => assert((after intersect built).isEmpty, name)
         }
         assert(g.collect(Seq(adapter(more("d")))) == 3)
-        assertViews(g, s"after $name, then a collect")
+        assertViews(g, dir, s"after $name, then a collect")
         assert(after.subsetOf(stateFiles) && stateFiles.size == after.size + 1)
       } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
     }
@@ -167,10 +172,10 @@ class AnalyticsStateSpec extends SparkSpec {
     spark.conf.set("spark.sql.session.timeZone", zone)
     try {
       assert(g.collect(Seq(adapter(base))) == base.size)
-      assertViews(g, "the first build")
+      assertViews(g, dir, "the first build")
       (1 to 17).foreach(i => assert(g.collect(Seq(adapter(more(s"f$i")))) == 3))
       assert(stateFiles.size == 18, "each collect covers with one file")
-      assertViews(g, "after the fold")
+      assertViews(g, dir, "after the fold")
       assert(stateFiles.size == 1)
       val folded = stateFiles
       g.analyticsMaterialized("type_counts").collect()
@@ -178,7 +183,7 @@ class AnalyticsStateSpec extends SparkSpec {
       assert(g.collect(Seq(adapter(more("g")))) == 3)
       assert(stateFiles.size == 2 && folded.toSet.subsetOf(stateFiles.toSet),
         "a collect covers a folded state")
-      assertViews(g, "after the fold, then a collect")
+      assertViews(g, dir, "after the fold, then a collect")
     } finally spark.conf.set("spark.sql.session.timeZone", "UTC")
   }
 }
