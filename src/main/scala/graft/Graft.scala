@@ -5,6 +5,8 @@ import graft.operators.{ExportOps, FtsOps, ReferenceOps}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The user-facing client: the reference CLI's five verbs
   * (`setup`/`collect`/`search`/`analytics`/`status`/`export`,
@@ -77,13 +79,25 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * index's record. The analytics state is kept the same way
     * ([[Mv.State.cover]]): over a current state, the collect appends its
     * new rows' state on the driver, so [[analyticsMaterialized]] then
-    * builds nothing.
+    * builds nothing. The two appends write different directories and
+    * run side by side; the collect returns when both are done.
     */
   def collect(adapters: Seq[Adapter]): Long =
     pipeline.collectAll(adapters, { a =>
-      extendFts(a)
-      analyticsState.cover(a)
+      val state = Future(analyticsState.cover(a))(ownThread)
+      try extendFts(a) finally Await.ready(state, Duration.Inf)
+      Await.result(state, Duration.Inf)
     })._1
+
+  /** Runs each task on a new thread, which inherits the caller's Spark
+    * local properties (its job group), so a job the task launched would
+    * count as the caller's.
+    */
+  private val ownThread = ExecutionContext.fromExecutor { (r: Runnable) =>
+    val t = new Thread(r)
+    t.setDaemon(true)
+    t.start()
+  }
 
   /** [[collect]]'s postings append to a current FTS index. */
   private def extendFts(a: Pipeline.Appended): Unit = {

@@ -509,7 +509,9 @@ class GraftSpec extends SparkSpec {
     def stateFiles = Catalog.files(spark, dir + "/mv/_analytics")
       .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
     (1 to 2).foreach { i =>
-      assert(g.collect(Seq(nycFixture(item(s"n-$i", s"Bike Lanes $i", i)))) == 1)
+      val covering = jobsLaunchedBy(assert(
+        g.collect(Seq(nycFixture(item(s"n-$i", s"Bike Lanes $i", i)))) == 1))
+      assert(covering == 0, s"$covering jobs to collect over a current state")
       val a = g.analytics()
       val stages = stagesLaunchedBy(a.values.foreach(_.collect()))
       assert(stages.size <= 6, s"${stages.size} jobs for the five analytics views")
