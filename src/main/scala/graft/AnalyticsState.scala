@@ -1,21 +1,28 @@
 package graft
 
 import graft.ingest.{DataRecord, Pipeline}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
+import java.util.HexFormat
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.BindReferences
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences,
+  BoundReference, Descending, InterpretedOrdering, SortDirection, SortOrder}
 import org.apache.spark.sql.catalyst.util.{ArrayData, DateTimeUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType,
+  StringType, StructType, TimestampType}
 import scala.collection.immutable.ListMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** The analytics state: one partial aggregate of the records table
-  * from which every `analytics` view (ethical_crawler.py:1274–1349) is
-  * a projection. One row per `(kind, key)`:
+  * from which every `analytics` view (ethical_crawler.py:1274–1349) and
+  * `status`'s per-source counts are projections ([[View]]). One row per
+  * `(kind, key)`:
   *  - `source`: `source_name`;
   *  - `type`: `data_type`;
   *  - `day`: `date_trunc('day', ingested_at)` under the session time
@@ -30,7 +37,10 @@ import scala.collection.mutable
   * non-null `size_bytes` and its first and last `ingested_at`. Every
   * column is exactly mergeable (counts and sums add, min and max fold),
   * so the state of a table is the per-key merge of the states of any
-  * split of its files ([[merged]]).
+  * split of its files ([[merged]]). A view projects the merged rows
+  * with plain code, on the driver for a state already there and in the
+  * one task that holds a state Spark merged; both run the same
+  * [[View.rows]].
   */
 object AnalyticsState {
 
@@ -80,20 +90,21 @@ object AnalyticsState {
     byKey.valuesIterator
   }
 
-  /** The state of `records`, one pass in parallel: each input split's
-    * entries merged per key ([[partials]]), the partial states brought
-    * to one partition and merged again. The shuffle is the RDD's, not a
-    * Dataset exchange, so a cached state has no adaptive stage of its
-    * own: the first view that reads the cache fills it in that view's
-    * job (scan and merge, two stages).
+  /** The state of `records` in one partition, one pass in parallel:
+    * each input split's entries merged per key ([[partials]]), the
+    * partial states brought to one partition by the RDD's shuffle and
+    * merged again. Building it launches no job.
     */
-  def of(records: DataFrame): DataFrame = {
+  def partsOf(records: DataFrame): RDD[Part] = {
     val ones = records.select(explode(entries).as("e"),
       col("size_bytes").cast(LongType), col("ingested_at"))
-    records.sparkSession.createDataset(ones.queryExecution.toRdd
-      .mapPartitions(partials).repartition(1).mapPartitions(perKey))(
-      PartEncoder).toDF()
+    ones.queryExecution.toRdd.mapPartitions(partials).repartition(1)
+      .mapPartitions(perKey)
   }
+
+  /** [[partsOf]] as a frame of [[Schema]], as the state's files hold it. */
+  def of(records: DataFrame): DataFrame =
+    records.sparkSession.createDataset(partsOf(records))(PartEncoder).toDF()
 
   /** A split's `(entry, size_bytes, ingested_at)` rows merged per key,
     * read in place: one [[Part]] per key, not one per row.
@@ -155,54 +166,112 @@ object AnalyticsState {
         sum(col("size_n")).as("size_n"), min(col("min_t")).as("min_t"),
         max(col("max_t")).as("max_t"))
 
-  /** The `analytics` views by name, each a projection of a merged state
-    * with the columns, types, order and tie-breaks of its
-    * `ReferenceOps` frame (`sourceStats`, `typeCounts`, `popularTags`,
-    * `temporalActivity`, `licenseDistribution`). The state is brought
-    * to one partition, so each view is a local aggregate and sort, with
-    * no exchange.
+  /** A projection of the merged state: the rows `project` makes of the
+    * merged [[Part]]s, of `schema`, sorted by `order` (columns and
+    * directions, each direction with Spark's null placement) and cut to
+    * `limit` rows. The sort compares the rows' internal form with
+    * Spark's own ordering, so strings compare by their UTF-8 bytes, as
+    * a Spark sort does, not as Java's `String` does.
     */
-  val Views: ListMap[String, DataFrame => DataFrame] = ListMap(
-    "source_stats" -> sourceStats,
-    "type_counts" -> (s => counts(s, "type", "data_type", "cnt")),
-    "popular_tags" -> (s => counts(s, "tag", "tag", "frequency").limit(20)),
-    "temporal_activity" -> (s => ofKind(s, "day")
-      .select(timestamp_micros(col("key").cast("long")).as("day"),
-        col("n").as("cnt"))
-      .sortWithinPartitions(col("day").asc)),
-    "license_distribution" ->
-      (s => counts(s, "license", "license_info", "cnt")))
+  final class View(val schema: StructType, order: Seq[(String, SortDirection)],
+      limit: Int = Int.MaxValue)(project: Seq[Part] => Seq[Row])
+      extends Serializable {
 
-  private def ofKind(state: DataFrame, kind: String): DataFrame =
-    state.coalesce(1).filter(col("kind") === kind)
+    /** The view's rows of `parts`, merged per key, in order. */
+    def rows(parts: Seq[Part]): Seq[Row] = {
+      val internal = CatalystTypeConverters.createToCatalystConverter(schema)
+      val ordering = new InterpretedOrdering(order.map { case (name, dir) =>
+        val f = schema(name)
+        SortOrder(BoundReference(schema.fieldIndex(name), f.dataType, f.nullable),
+          dir)
+      })
+      project(parts).map(r => internal(r).asInstanceOf[InternalRow] -> r)
+        .sortBy(_._1)(ordering).take(limit).map(_._2)
+    }
 
-  private def counts(state: DataFrame, kind: String, name: String,
-      cnt: String): DataFrame =
-    ofKind(state, kind).select(col("key").as(name), col("n").as(cnt))
-      .sortWithinPartitions(col(cnt).desc, col(name).asc)
+    /** The rows of `parts` as a local relation: collecting it launches
+      * no job.
+      */
+    def local(spark: SparkSession, parts: Seq[Part]): DataFrame =
+      spark.createDataFrame(rows(parts).asJava, schema)
 
-  /** Per source: its `source` row's stats and its pair rows with a
-    * non-null type, counted.
-    */
-  private def sourceStats(state: DataFrame): DataFrame = {
-    val isSource = col("kind") === "source"
-    def ofSource(c: String) = when(isSource, col(c))
-    state.coalesce(1)
-      .filter(isSource || (col("kind") === "pair" && col("key").isNotNull))
-      .groupBy(when(isSource, col("key"))
-        .otherwise(unhex(substring_index(col("key"), " ", 1)).cast(StringType))
-        .as("source_name"))
-      .agg(sum(ofSource("n")).as("record_count"),
-        count(when(!isSource, lit(1))).as("distinct_types"),
-        sum(ofSource("size_sum")).as("size_sum"),
-        sum(ofSource("size_n")).as("size_n"),
-        min(ofSource("min_t")).as("first_ingested"),
-        max(ofSource("max_t")).as("last_ingested"))
-      .select(col("source_name"), col("record_count"), col("distinct_types"),
-        when(col("size_n") > 0,
-          col("size_sum").cast("double") / col("size_n").cast("double"))
-          .as("avg_size"),
-        col("first_ingested"), col("last_ingested"))
-      .sortWithinPartitions(col("record_count").desc, col("source_name").asc)
+    /** The rows of `state`, a merged state in one partition, projected
+      * in that partition's task.
+      */
+    def over(spark: SparkSession, state: RDD[Part]): DataFrame =
+      spark.createDataFrame(state.mapPartitions(ps => rows(ps.toSeq).iterator),
+        schema)
   }
+
+  /** The `analytics` views by name, each with the columns, types, order
+    * and tie-breaks of its `ReferenceOps` frame (`sourceStats`,
+    * `typeCounts`, `popularTags`, `temporalActivity`,
+    * `licenseDistribution`).
+    */
+  val Views: ListMap[String, View] = ListMap(
+    "source_stats" -> new View(new StructType().add("source_name", StringType)
+        .add("record_count", LongType, nullable = false)
+        .add("distinct_types", LongType, nullable = false)
+        .add("avg_size", DoubleType).add("first_ingested", TimestampType)
+        .add("last_ingested", TimestampType),
+      Seq("record_count" -> Descending, "source_name" -> Ascending))(
+      perSource(_).map { case (s, types) =>
+        Row(s.key, s.n, types,
+          s.size_sum.map[Any](_.toDouble / s.size_n.toDouble).orNull,
+          s.min_t.orNull, s.max_t.orNull)
+      }),
+    "type_counts" -> counts("type", "data_type", "cnt"),
+    "popular_tags" -> counts("tag", "tag", "frequency", limit = 20),
+    "temporal_activity" -> new View(new StructType().add("day", TimestampType)
+        .add("cnt", LongType, nullable = false), Seq("day" -> Ascending))(
+      ofKind(_, "day").map(p => Row(
+        Option(p.key).map(k => DateTimeUtils.toJavaTimestamp(k.toLong)).orNull,
+        p.n))),
+    "license_distribution" -> counts("license", "license_info", "cnt"))
+
+  private def ofKind(parts: Seq[Part], kind: String): Seq[Part] =
+    parts.filter(_.kind == kind)
+
+  private def counts(kind: String, name: String, cnt: String,
+      limit: Int = Int.MaxValue): View =
+    new View(new StructType().add(name, StringType)
+        .add(cnt, LongType, nullable = false),
+      Seq(cnt -> Descending, name -> Ascending), limit)(
+      ofKind(_, kind).map(p => Row(p.key, p.n)))
+
+  /** Per source, its `source` row and the count of its `pair` rows with
+    * a non-null type: its distinct types.
+    */
+  private def perSource(parts: Seq[Part]): Seq[(Part, Long)] = {
+    val types = parts.filter(p => p.kind == "pair" && p.key != null)
+      .groupMapReduce(p => pairSource(p.key))(_ => 1L)(_ + _)
+    ofKind(parts, "source").map(s => s -> types.getOrElse(Option(s.key), 0L))
+  }
+
+  /** The source of a `pair` key: its hex prefix decoded; none for `-`. */
+  private def pairSource(key: String): Option[String] = {
+    val hex = key.substring(0, key.indexOf(' '))
+    Option.when(hex != "-")(new String(HexFormat.of.parseHex(hex), UTF_8))
+  }
+
+  /** `status` (ethical_crawler.py:1416–1529): per source, its record
+    * count, distinct types and last ingest time as `source_stats`
+    * derives them, with the verdict of its latest compliance check in
+    * `latest`, if any; most records first.
+    */
+  def status(latest: Map[String, Pipeline.Verdict]): View =
+    new View(new StructType().add("source_name", StringType)
+        .add("n_records", LongType, nullable = false)
+        .add("n_types", LongType, nullable = false)
+        .add("last_ingested", TimestampType)
+        .add("robots_txt_compliant", BooleanType)
+        .add("api_key_valid", BooleanType).add("last_check", TimestampType),
+      Seq("n_records" -> Descending, "source_name" -> Ascending))(
+      perSource(_).map { case (s, types) =>
+        val check = Option(s.key).flatMap(latest.get)
+        Row(s.key, s.n, types, s.max_t.orNull,
+          check.map[Any](_.robots_txt_compliant).orNull,
+          check.map[Any](_.api_key_valid).orNull,
+          check.map(_.last_check).orNull)
+      })
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.ingest.{Adapter, ComplianceCheck, DataRecord, Pipeline}
 import graft.operators.{ExportOps, FtsOps, ReferenceOps}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
@@ -40,6 +41,14 @@ import scala.concurrent.duration.Duration
   * and writing the 4 bucket files; [[indexFts]]' two jobs over the new
   * records files took ~0.27 s. A rewrite of the records table makes
   * the next [[indexFts]] a full build.
+  *
+  * `status` and [[analyticsMaterialized]] read state the session holds
+  * on the driver: the analytics state ([[Mv.State]]) and the latest
+  * compliance check per source ([[Pipeline.latestChecks]]), each kept
+  * by [[Lineage.maintain]]. The first call on a catalog builds or reads
+  * them (Spark jobs); a [[collect]] keeps both current as it writes, so
+  * after it both verbs project the held rows on the driver into a local
+  * relation and launch no job.
   */
 final class Graft(spark: SparkSession, tableDir: String) {
 
@@ -78,9 +87,12 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * [[indexFts]]; a catalog with no index pays one failed open of the
     * index's record. The analytics state is kept the same way
     * ([[Mv.State.cover]]): over a current state, the collect appends its
-    * new rows' state on the driver, so [[analyticsMaterialized]] then
-    * builds nothing. The two appends write different directories and
-    * run side by side; the collect returns when both are done.
+    * new rows' state on the driver, so [[analyticsMaterialized]] and
+    * [[status]] then build nothing; a held latest check per source takes
+    * the collect's checks as they are written
+    * ([[Pipeline.appendChecks]]). The two appends write different
+    * directories and run side by side; the collect returns when both
+    * are done.
     */
   def collect(adapters: Seq[Adapter]): Long =
     pipeline.collectAll(adapters, { a =>
@@ -278,7 +290,7 @@ final class Graft(spark: SparkSession, tableDir: String) {
     Versioned.restore(spark, versionedPath, version)
 
   /** The state of the last [[analytics]] call, cached. */
-  private var analyticsCached: Option[DataFrame] = None
+  private var analyticsCached: Option[RDD[AnalyticsState.Part]] = None
 
   /** `analytics` — per-source stats, type counts, and the three
     * reference-stubbed analytics (tags/temporal/license)
@@ -286,52 +298,51 @@ final class Graft(spark: SparkSession, tableDir: String) {
     * reference does, from one scan: one [[AnalyticsState]] over
     * `records` (each input partition merged per key in parallel, the
     * partial states merged in one partition), cached, of which each
-    * view is a local projection and sort. Building the frames launches
-    * no job; collecting all five runs the scan once, so six jobs in
-    * all. The previous call's state is unpersisted when the next call
-    * starts, so no call answers from an earlier one's.
+    * view is a projection in that partition's task
+    * ([[AnalyticsState.View]], the code [[analyticsMaterialized]] runs
+    * on the driver). Building the frames launches no job; collecting
+    * all five runs the scan once, so five jobs in all. The previous
+    * call's state is unpersisted when the next call starts, so no call
+    * answers from an earlier one's.
     */
   def analytics(): Map[String, DataFrame] = synchronized {
     analyticsCached.foreach(_.unpersist())
-    val state = AnalyticsState.of(records).cache()
+    val state = AnalyticsState.partsOf(records).cache()
     analyticsCached = Some(state)
-    AnalyticsState.Views.map { case (name, view) => name -> view(state) }
+    AnalyticsState.Views.map { case (name, view) => name -> view.over(spark, state) }
   }
 
   private val analyticsState =
     new Mv.State(spark, s"$tableDir/mv/_analytics", pipeline)
 
   /** One [[analytics]] view served from the analytics state persisted
-    * under `$tableDir/mv/_analytics` ([[Mv.State]]): its files merged
-    * per key, then projected. After a [[collect]] the state is already
-    * current, merged on the driver, and nothing is read or written;
-    * another writer's append costs a pass over the new files only, and
-    * a rewrite a pass over the table.
+    * under `$tableDir/mv/_analytics` ([[Mv.State]]): its merged rows,
+    * held on the driver, projected there into a local relation, so
+    * collecting the view launches no job. The first call on a catalog
+    * reads the state's files or builds the state; after a [[collect]]
+    * the state is already current and merged on the driver, and nothing
+    * is read or written; another writer's append costs a pass over the
+    * new files only, and a rewrite a pass over the table.
     */
-  def analyticsMaterialized(name: String): DataFrame = {
-    val view = AnalyticsState.Views.getOrElse(name,
+  def analyticsMaterialized(name: String): DataFrame =
+    AnalyticsState.Views.getOrElse(name,
       throw new IllegalArgumentException(s"unknown analytics view: $name"))
-    view(analyticsState.served())
-  }
+      .local(spark, analyticsState.served())
 
-  /** `status` — two-key stats rolled up per source joined with the
-    * latest compliance check (ethical_crawler.py:1416–1529).
+  /** `status` — per source, its record count, distinct types and last
+    * ingest, with its latest compliance check
+    * (ethical_crawler.py:1416–1529), as a local relation projected on
+    * the driver from two artifacts the session holds: the analytics
+    * state ([[analyticsMaterialized]]'s) and the latest check per source
+    * ([[Pipeline.latestChecks]]; of two checks at one instant the failed
+    * verdict is the latest). The first call on a catalog reads or
+    * builds both; after a [[collect]] both are current, and the call
+    * only lists the tables and the state's directory, with no Spark
+    * job.
     */
-  def status(): DataFrame = {
-    val stats = records
-      .groupBy(col("source_name"))
-      .agg(count(lit(1)).as("n_records"),
-        countDistinct(col("data_type")).as("n_types"),
-        max(col("ingested_at")).as("last_ingested"))
-    val latestCheck = ReferenceOps.latestPerKey(
-      pipeline.complianceChecks,
-      key = "source_name", orderCol = "last_check",
-      tiebreaker = "last_check")
-      .select(col("source_name"), col("robots_txt_compliant"),
-        col("api_key_valid"), col("last_check"))
-    stats.join(latestCheck, Seq("source_name"), "left")
-      .orderBy(col("n_records").desc, col("source_name").asc)
-  }
+  def status(): DataFrame =
+    AnalyticsState.status(pipeline.latestChecks())
+      .local(spark, analyticsState.served())
 
   /** `export` — predicate + format + path, returns the attribution
     * footer frame (ethical_crawler.py:1352–1413).

@@ -6,25 +6,26 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Materialized analytics over the records table: the reference
-  * recomputes its analytics on every CLI call
-  * (ethical_crawler.py:1274–1349); at 100 TB a standing dashboard query
-  * must not re-scan an unchanged corpus, nor the whole corpus after an
-  * append.
+  * recomputes its analytics and `status` on every CLI call
+  * (ethical_crawler.py:1274–1349, :1416–1529); at 100 TB a standing
+  * dashboard query must not re-scan an unchanged corpus, nor the whole
+  * corpus after an append.
   *
-  * Every `analytics` view is served from one [[AnalyticsState]] kept as
-  * parquet in one directory ([[State]]) by [[Lineage.maintain]] over
-  * the records files, its record naming them relative to the table: an
-  * append by another writer is aggregated alone and appended, a
-  * `collect` appends its new rows' state on the driver, and any other
-  * change rebuilds it in one pass. The state, merged per key, is also
-  * held on the driver for as long as the directory holds the files it
-  * merges (a `collect` merges its rows into both), so serving after a
-  * `collect` reads no state file; the state is small, one row per
-  * source, type, day, license, tag and (source, type) pair. Serving
-  * folds a state grown to many files into one. A
-  * transactional table format's snapshot ids subsume the record at
-  * scale; the contract (compare source version to built-from version)
-  * is the same.
+  * Every `analytics` view and `status`'s per-source counts are served
+  * from one [[AnalyticsState]] kept as parquet in one directory
+  * ([[State]]) by [[Lineage.maintain]] over the records files, its
+  * record naming them relative to the table: an append by another
+  * writer is aggregated alone and appended, a `collect` appends its new
+  * rows' state on the driver, and any other change rebuilds it in one
+  * pass. The state, merged per key, is also held on the driver for as
+  * long as the directory holds the files it merges (a `collect` merges
+  * its rows into both), so serving after a `collect` reads no state
+  * file and the views project it on the driver, with no Spark job; the
+  * state is small, one row per source, type, day, license, tag and
+  * (source, type) pair. Serving folds a state grown to many files into
+  * one. A transactional table format's snapshot ids subsume the record
+  * at scale; the contract (compare source version to built-from
+  * version) is the same.
   */
 object Mv {
 
@@ -60,9 +61,11 @@ object Mv {
       * from [[kept]] when the directory still holds its files (after a
       * `collect`, which keeps it), else from one read of the files. A
       * current state of more than [[FoldAt]] files (each `collect` adds
-      * one) is first folded into one file.
+      * one) is first folded into one file. The first call on a catalog
+      * reads or builds the state; after a `collect` a call only lists
+      * the two directories.
       */
-    def served(): DataFrame = synchronized {
+    def served(): Seq[AnalyticsState.Part] = synchronized {
       def write(records: DataFrame, mode: SaveMode): Unit =
         AnalyticsState.of(records).write.mode(mode).parquet(dir)
       val listed = Lineage.stamps(spark, pipeline.recordsPath)
@@ -89,7 +92,7 @@ object Mv {
         store.write(record.covered)
         kept = (folded.toSet, kept._2)
       }
-      spark.createDataset(kept._2)(AnalyticsState.PartEncoder).toDF()
+      kept._2
     }
 
     /** Keep a current state current across a `collect`'s write: the

@@ -2,8 +2,11 @@ package graft.ingest
 
 import graft.{Catalog, FixtureCache, Lineage}
 import graft.FixtureCache.FileStamp
+import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.{col, max, struct}
 import org.apache.spark.sql.types.StructType
 import scala.collection.Searching
 
@@ -59,10 +62,14 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
   /** The given `data_records` data files, as [[Lineage.stamps]] lists
     * them, read as the table.
     */
-  def recordsFiles(files: Seq[FileStamp]): DataFrame = {
-    val base = FixtureCache.qualified(spark, recordsPath)
-    spark.read.schema(Pipeline.RecordsSchema)
-      .option("basePath", recordsPath).parquet(files.map(base + _._1): _*)
+  def recordsFiles(files: Seq[FileStamp]): DataFrame =
+    read(recordsPath, Pipeline.RecordsSchema, files)
+
+  private def read(path: String, schema: StructType, files: Seq[FileStamp])
+      : DataFrame = {
+    val base = FixtureCache.qualified(spark, path)
+    spark.read.schema(schema).option("basePath", path)
+      .parquet(files.map(base + _._1): _*)
   }
 
   /** `compliance_checks` at its current version; empty before the
@@ -84,10 +91,70 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
   }
 
   /** K4 — append checks to the `compliance_checks` audit table; no
-    * checks, no write.
+    * checks, no write. When the session holds the table's latest checks
+    * current ([[latestChecks]]), the written checks join them
+    * ([[Lineage.cover]]); otherwise the append lists nothing more.
     */
   def appendChecks(checks: Seq[ComplianceCheck]): Unit =
-    Catalog.appendRows(spark, checks, Pipeline.ChecksEncoder, checksPath)
+    if (checks.nonEmpty) {
+      val held = heldChecks
+      held.synchronized {
+        val listed =
+          if (held.lineage.read().isEmpty) Nil else Lineage.stamps(spark, checksPath)
+        val written = Catalog.appendRows(spark, checks, Pipeline.ChecksEncoder,
+          checksPath)
+        Lineage.cover(listed, written, held.lineage)(
+          held.add(checks.map(c => c.source_name -> Pipeline.Verdict(
+            c.robots_txt_compliant, c.api_key_valid, c.last_check))))
+      }
+    }
+
+  private def heldChecks: Pipeline.LatestChecks =
+    Pipeline.latestChecks(spark, FixtureCache.qualified(spark, checksPath))(
+      new Pipeline.LatestChecks)
+
+  /** Per source, the verdict of its latest compliance check
+    * ([[Pipeline.Verdict]]), held for the session and checks table and
+    * brought up to the table's files by [[Lineage.maintain]]: the files
+    * it does not cover (another writer's checks) are read and merged
+    * in, and anything else re-reads the table. The first call in a
+    * session reads the table; after that, with only this session's
+    * [[appendChecks]] in between, a call only lists the table's files.
+    */
+  def latestChecks(): Map[String, Pipeline.Verdict] = {
+    val held = heldChecks
+    held.synchronized {
+      val listed = Lineage.stamps(spark, checksPath)
+      Lineage.maintain(listed, held.lineage,
+        Some(files => held.add(verdicts(read(checksPath, Pipeline.ChecksSchema,
+          files)))), () => {
+          held.bySource = Map.empty
+          if (listed.isEmpty) Set.empty
+          else {
+            val table = complianceChecks
+            held.add(verdicts(table))
+            Lineage.inputs(spark, checksPath, table)
+          }
+        })
+      held.bySource
+    }
+  }
+
+  /** Per source of `checks`, the verdict of its latest check, one row
+    * per source: the largest `(last_check, robots failed, API key
+    * failed)`, Spark's struct order being [[Pipeline.Verdict]]'s.
+    */
+  private def verdicts(checks: DataFrame): Seq[(String, Pipeline.Verdict)] =
+    checks.groupBy(col("source_name"))
+      .agg(max(struct(col("last_check"),
+        (!col("robots_txt_compliant")).as("robots_failed"),
+        (!col("api_key_valid")).as("api_key_failed"))).as("v"))
+      .select(col("source_name"), !col("v.robots_failed"),
+        !col("v.api_key_failed"), col("v.last_check"))
+      .as[(String, Boolean, Boolean, Timestamp)].collect().toSeq
+      .map { case (source, robots, apiKey, at) =>
+        source -> Pipeline.Verdict(robots, apiKey, at)
+      }
 
   /** Full collect: gate → persist checks (K4 append-only audit table)
     * → discover → dedup-append. Returns (new records, checks run).
@@ -185,6 +252,22 @@ final class Pipeline(spark: SparkSession, tableDir: String) {
 }
 
 object Pipeline {
+  /** A source's compliance verdict, as `status` shows it. */
+  final case class Verdict(robots_txt_compliant: Boolean,
+      api_key_valid: Boolean, last_check: Timestamp)
+
+  object Verdict {
+    /** Which of two checks of a source is its latest: the later one (a
+      * null time earliest, times compared in microseconds, as stored),
+      * and of two at the same instant the failed robots verdict, then
+      * the failed API key. A total order on what `status` shows, so the
+      * latest check does not depend on file or row order.
+      */
+    val Latest: Ordering[Verdict] = Ordering.by((v: Verdict) =>
+      (Option(v.last_check).map(DateTimeUtils.fromJavaTimestamp),
+        !v.robots_txt_compliant, !v.api_key_valid))
+  }
+
   /** One [[Pipeline.appendRecords]] write: the records table's files
     * listed before it, the files it committed and the rows in them.
     */
@@ -239,4 +322,26 @@ object Pipeline {
     * session: two [[Pipeline]]s over one directory share it.
     */
   private val keyIndexes = new FixtureCache[String, KeyIndex]
+
+  /** Per source, the verdict of its latest check in one checks table
+    * ([[Verdict.Latest]]), and the stamps of the files it covers as a
+    * [[Lineage]] held in memory. It starts with no record, so the first
+    * [[Pipeline.latestChecks]] reads the whole table, and until then an
+    * append does not list the table. Not thread-safe: callers lock it.
+    */
+  private final class LatestChecks {
+    val lineage = new Lineage.Held(None)
+    var bySource = Map.empty[String, Verdict]
+
+    def add(verdicts: Seq[(String, Verdict)]): Unit =
+      verdicts.foreach { case (source, v) =>
+        bySource = bySource.updatedWith(source)(o =>
+          Some(o.fold(v)(Verdict.Latest.max(_, v))))
+      }
+  }
+
+  /** Each checks table's latest checks (by qualified path), held for the
+    * session as [[keyIndexes]] are.
+    */
+  private val latestChecks = new FixtureCache[String, LatestChecks]
 }
